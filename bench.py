@@ -110,7 +110,22 @@ def _scaling_probe(spark, mult: int) -> float:
     return round(best, 3)
 
 
+def _scaling_probe_mult() -> int:
+    """``$SPARK_GRAFT_SCALING_PROBE`` as an int (0 = probe off); a
+    non-numeric value stops the bench before any query runs, with a
+    message naming the variable, instead of after the timed passes."""
+    raw = os.environ.get("SPARK_GRAFT_SCALING_PROBE", "0")
+    try:
+        return int(raw)
+    except ValueError:
+        raise SystemExit(
+            f"SPARK_GRAFT_SCALING_PROBE must be an integer row multiplier "
+            f"(0 or unset disables the probe), got {raw!r}"
+        ) from None
+
+
 def main() -> None:
+    probe_mult = _scaling_probe_mult()
     queries()  # populate REGISTRY
     heads = sorted(n for n, q in REGISTRY.items() if "headline" in q.tags)
 
@@ -168,7 +183,6 @@ def main() -> None:
 
     total = round(sum(times.values()), 3)
     sf = _sf_from_dir(SF_DIR)
-    probe_mult = int(os.environ.get("SPARK_GRAFT_SCALING_PROBE", "0"))
     probe_sec = (
         _scaling_probe(spark, probe_mult) if probe_mult > 0 else None
     )

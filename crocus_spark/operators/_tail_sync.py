@@ -28,7 +28,12 @@ the same wall (round-9 advice). ``run_tail_sync`` owns that policy:
 
 from __future__ import annotations
 
+import os
 import shutil
+
+from pyspark.sql import functions as F
+
+from crocus_spark.operators.cell_store import release
 
 
 def net_effects(batch_df, id_col: str, vec_col: str):
@@ -40,20 +45,14 @@ def net_effects(batch_df, id_col: str, vec_col: str):
     re-read the whole feed and re-run this aggregate: the bootstrap
     consumes it two-to-three times (model fit(s) + store build) and the
     upsert paths three-to-four (cell discovery, semi-join, merge write).
-    The checkpoint is batch-sized (per-key net effects), paid once.
-    Returns ``(ups, dels)``."""
-    from pyspark.sql import functions as F
-
-    last = (
+    The checkpoint is batch-sized (per-key net effects), paid once, and
+    the caller releases it (``cell_store.release``) when the batch is
+    applied."""
+    return (
         batch_df.groupBy(id_col)
         .agg(F.max_by(F.struct("_op", vec_col), "_version").alias("s"))
         .localCheckpoint(eager=True)
     )
-    ups = last.filter(F.col("s._op") == "insert").select(
-        F.col(id_col), F.col(f"s.{vec_col}").alias(vec_col)
-    )
-    dels = last.filter(F.col("s._op") != "insert").select(id_col)
-    return ups, dels
 
 
 _REWRITE_MARKERS = (
@@ -64,13 +63,40 @@ _REWRITE_MARKERS = (
 
 
 def run_tail_sync(
-    spark, table_root: str, index_path: str, apply_fn, on_rewrite: str = "fail"
+    spark,
+    table_root: str,
+    index_path: str,
+    bootstrap,
+    upsert,
+    on_rewrite: str,
+    marker: str,
+    id_col: str,
+    vec_col: str,
 ) -> None:
-    """Drain ``table_root``'s CDC tail through ``apply_fn`` (a
-    foreachBatch body) with the checkpoint at ``index_path + '_ckpt'``
-    (NOT inside the store — the bootstrap overwrite would destroy an
-    in-store checkpoint), applying the ``on_rewrite`` policy above."""
+    """Drain ``table_root``'s CDC tail into the store at ``index_path``
+    with the checkpoint at ``index_path + '_ckpt'`` (NOT inside the
+    store — the bootstrap overwrite would destroy an in-store
+    checkpoint), applying the ``on_rewrite`` policy above. Each
+    micro-batch reduces to per-key net effects; until the store's
+    ``marker`` file (the last file its build writes) exists the batch's
+    inserts go to ``bootstrap(ups)``, which fits the model and builds the
+    store, and afterwards to ``upsert(ups, dels)``. The batch's
+    checkpoint is released once it is applied, so a long-running sync
+    holds no per-batch blocks."""
     from crocus_spark.sources import register_snapshot_tail_source
+
+    def apply_fn(batch_df, _batch_id):
+        last = net_effects(batch_df, id_col, vec_col)
+        try:
+            ups = last.filter(F.col("s._op") == "insert").select(
+                F.col(id_col), F.col(f"s.{vec_col}").alias(vec_col)
+            )
+            if os.path.exists(os.path.join(index_path, marker)):
+                upsert(ups, last.filter(F.col("s._op") != "insert").select(id_col))
+            else:
+                bootstrap(ups)
+        finally:
+            release(last)
 
     if on_rewrite not in ("fail", "skip", "rebuild"):
         raise ValueError(
@@ -124,8 +150,6 @@ def run_tail_sync(
         # the store is gone), then tail changes from the next version —
         # the pinned batch read and the starting_version cut leave no
         # gap and no overlap.
-        from pyspark.sql import functions as F
-
         from crocus_spark.operators.maintenance import (
             list_snapshot_versions,
             read_snapshot,
@@ -134,10 +158,10 @@ def run_tail_sync(
         latest = list_snapshot_versions(table_root)[-1]
         shutil.rmtree(index_path, ignore_errors=True)
         shutil.rmtree(index_path + "_ckpt", ignore_errors=True)
-        bootstrap = (
+        snapshot = (
             read_snapshot(spark, table_root, latest)
             .withColumn("_op", F.lit("insert"))
             .withColumn("_version", F.lit(latest).cast("long"))
         )
-        apply_fn(bootstrap, -1)
+        apply_fn(snapshot, -1)
         drain(False, starting_version=latest + 1)

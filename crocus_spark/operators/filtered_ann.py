@@ -39,13 +39,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from crocus_spark.operators.similarity import (
-    _centroid_df,
-    _norm_vec,
-    assign_cells_projection,
-    cosine_batch,
-    dot_batch,
+    _cosine_ranked,
+    _ivf_build,
+    _probes,
     ivf_model_load,
-    ivf_model_save,
+    ivfpq_model_load,
+    ivfpq_topk_at_rest,
 )
 
 __all__ = [
@@ -77,6 +76,31 @@ def _pairs_df(spark, pairs) -> DataFrame:
         return spark.createDataFrame(pairs, "query_id long, cell int")
 
 
+def _probe_order(queries, model, id_col, vec_col) -> dict[int, list[int]]:
+    """query id → every model cell in that query's probe order (the
+    ``ivf_topk`` ranking and ties), collected once: probe-batch ×
+    n_cells ints — bounded."""
+    order: dict[int, list] = {}
+    ranked = _probes(queries, model, id_col, vec_col)
+    for r in ranked.select("query_id", "cell", "probe_rank").collect():
+        order.setdefault(r.query_id, []).append((r.probe_rank, r.cell))
+    return {q: [c for _rk, c in sorted(v)] for q, v in order.items()}
+
+
+def _union_or_empty(spark, parts, with_level: bool) -> DataFrame:
+    """Union of the per-round / per-depth results, or the empty result
+    frame when no query was served."""
+    if not parts:
+        schema = "query_id long, neighbor_id long, cos double, rank int"
+        if with_level:
+            schema += ", probe_level int"
+        return spark.createDataFrame([], schema)
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
 def ivf_filtered_build(
     corpus: DataFrame,
     path: str,
@@ -91,20 +115,7 @@ def ivf_filtered_build(
     parquet), never via a join back to the source table. The frozen
     model persists beside the store (``_model.json``), same as
     ``ivf_build_store``."""
-    cells, mat = model
-    indexed = assign_cells_projection(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            *[F.col(c) for c in attr_cols],
-            F.col(vec_col).alias("v"),
-        ),
-        cells,
-        mat,
-        normalize=True,
-    ).drop("v")
-    indexed.write.mode("overwrite").partitionBy("cell").parquet(path)
-    ivf_model_save(path, cells, mat)
+    _ivf_build(corpus, path, model, id_col, vec_col, attr_cols)
 
 
 def ivf_filtered_topk(
@@ -162,28 +173,12 @@ def ivf_filtered_topk(
     ``localCheckpoint``ed so the union never replays earlier scans.
     ``with_level=True`` appends the probe count each query was
     satisfied at — the monitor's widening diagnostic."""
-    cells, mat = model if model is not None else ivf_model_load(path)
-    n_cells = len(cells)
-    centroids = _centroid_df(spark, cells, mat)
-    q_df = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm_vec(F.col(vec_col)).alias("qn"),
+    model = model if model is not None else ivf_model_load(path)
+    n_cells = len(model[0])
+    order = _probe_order(queries, model, id_col, vec_col)
+    q_vecs = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
     )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("q_dot"), F.col("cell")
-    )
-    ranked = (
-        q_df.crossJoin(F.broadcast(centroids))
-        .withColumn("q_dot", dot_batch(F.col("qn"), F.col("centroid")))
-        .withColumn("probe_rank", F.row_number().over(w_probe))
-        .select("query_id", "cell", "probe_rank")
-    )
-    order: dict[int, list[int]] = {}
-    for r in ranked.collect():  # probe-batch × n_cells ints — bounded
-        order.setdefault(r.query_id, []).append((r.probe_rank, r.cell))
-    order = {q: [c for _rk, c in sorted(v)] for q, v in order.items()}
-    q_vecs = q_df.select("query_id", "q_vec")
 
     total_matches = None
     if min_match_fraction > 0:
@@ -192,9 +187,6 @@ def ivf_filtered_topk(
         )
     pending = set(order)
     level = max(1, nprobe)
-    out_schema = "query_id long, neighbor_id long, cos double, rank int" + (
-        ", probe_level int" if with_level else ""
-    )
     parts: list[DataFrame] = []
     while pending:
         lvl = min(level, n_cells)
@@ -207,19 +199,9 @@ def ivf_filtered_topk(
             .filter(F.expr(predicate))
         )
         plist = [int(q) for q in pending]
-        scored = (
-            back.join(F.broadcast(probes), "cell")
-            .join(
-                F.broadcast(q_vecs.filter(F.col("query_id").isin(plist))),
-                "query_id",
-            )
-            .withColumn(
-                "cos",
-                F.round(cosine_batch(F.col("q_vec"), F.col("c_vec")), 6),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cos").desc(), F.col("neighbor_id")
+        scored = back.join(F.broadcast(probes), "cell").join(
+            F.broadcast(q_vecs.filter(F.col("query_id").isin(plist))),
+            "query_id",
         )
         # the per-query CANDIDATE count (matches scored this round —
         # the widening-satisfaction input) rides on the same
@@ -228,7 +210,7 @@ def ivf_filtered_topk(
         # shape aggregated ``scored`` separately, re-running the scan
         # and the distance UDF a second time every widening round.
         topk = (
-            scored.withColumn("rank", F.row_number().over(w))
+            _cosine_ranked(scored)
             .withColumn(
                 "_n_cand", F.count(F.lit(1)).over(Window.partitionBy("query_id"))
             )
@@ -270,12 +252,7 @@ def ivf_filtered_topk(
             )
         pending -= sat
         level *= 2
-    if not parts:
-        return spark.createDataFrame([], out_schema)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _union_or_empty(spark, parts, with_level)
 
 
 def ivfpq_filtered_topk(
@@ -307,13 +284,8 @@ def ivfpq_filtered_topk(
     exact filtered brute force — the hash-green twin's shape."""
     import math
 
-    from crocus_spark.operators.similarity import (
-        ivfpq_model_load,
-        ivfpq_topk_at_rest,
-    )
-
-    (cells, mat), _cb = ivfpq_model_load(path)
-    n_cells = len(cells)
+    model, _cb = ivfpq_model_load(path)
+    n_cells = len(model[0])
     counts = {
         int(r["cell"]): r["n"]
         for r in spark.read.parquet(path)
@@ -327,24 +299,7 @@ def ivfpq_filtered_topk(
     if min_match_fraction > 0:
         need = max(need, math.ceil(min_match_fraction * total))
     need = min(need, total)  # can't require more matches than exist
-    centroids = _centroid_df(spark, cells, mat)
-    q_df = queries.select(
-        F.col(id_col).alias("query_id"),
-        _norm_vec(F.col(vec_col)).alias("qn"),
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("q_dot"), F.col("cell")
-    )
-    ranked = (
-        q_df.crossJoin(F.broadcast(centroids))
-        .withColumn("q_dot", dot_batch(F.col("qn"), F.col("centroid")))
-        .withColumn("probe_rank", F.row_number().over(w_probe))
-        .select("query_id", "cell", "probe_rank")
-    )
-    order: dict[int, list[int]] = {}
-    for r in ranked.collect():  # probe-batch × n_cells ints — bounded
-        order.setdefault(r.query_id, []).append((r.probe_rank, r.cell))
-    order = {q: [c for _rk, c in sorted(v)] for q, v in order.items()}
+    order = _probe_order(queries, model, id_col, vec_col)
 
     def depth_of(q):
         lvl = max(1, nprobe)
@@ -368,12 +323,4 @@ def ivfpq_filtered_topk(
         if with_level:
             res = res.withColumn("probe_level", F.lit(lvl))
         parts.append(res.localCheckpoint())
-    if not parts:
-        schema = "query_id long, neighbor_id long, cos double, rank int"
-        if with_level:
-            schema += ", probe_level int"
-        return spark.createDataFrame([], schema)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _union_or_empty(spark, parts, with_level)

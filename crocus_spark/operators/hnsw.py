@@ -34,8 +34,13 @@ from __future__ import annotations
 
 import heapq
 import math
+import os
 
 import numpy as np
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from crocus_spark.operators import cell_store
 
 __all__ = [
     "build_hnsw",
@@ -91,35 +96,11 @@ def build_hnsw(ids, matrix, M: int = 8, ef_construction: int = 64):
     def dist(a: int, b: int) -> float:
         return 1.0 - float(np.dot(matrix[a], matrix[b]))
 
-    def dist_to(vec, a: int) -> float:
-        return 1.0 - float(np.dot(matrix[a], vec))
-
     def search_layer(vec, entry_pts, ef: int, layer: int):
-        """Beam search at one layer: returns [(d, idx)] sorted by
-        (d, id) — the paper's SEARCH-LAYER with id tie-breaks."""
-        visited = set(entry_pts)
-        cand = [(dist_to(vec, e), ids[e], e) for e in entry_pts]
-        # keep the CLOSEST ef as the initial beam (max-heap on distance
-        # via negation, so the root is the worst retained)
-        best = [(-d, i, e) for d, i, e in sorted(cand)[:ef]]
-        heapq.heapify(cand)
-        heapq.heapify(best)
-        while cand:
-            d, _tid, c = heapq.heappop(cand)
-            worst = -best[0][0] if best else math.inf
-            if d > worst and len(best) >= ef:
-                break
-            for nb in layers[layer].get(c, ()):
-                if nb in visited:
-                    continue
-                visited.add(nb)
-                dn = dist_to(vec, nb)
-                if len(best) < ef or dn < -best[0][0]:
-                    heapq.heappush(cand, (dn, ids[nb], nb))
-                    heapq.heappush(best, (-dn, ids[nb], nb))
-                    if len(best) > ef:
-                        heapq.heappop(best)
-        return sorted((-d, i, e) for d, i, e in best)
+        return _search_layer(
+            layers, ids, lambda a: 1.0 - float(np.dot(matrix[a], vec)),
+            entry_pts, ef, layer,
+        )
 
     def prune(node: int, layer: int) -> None:
         nbrs = layers[layer][node]
@@ -156,52 +137,73 @@ def build_hnsw(ids, matrix, M: int = 8, ef_construction: int = 64):
     return {"ids": ids, "levels": levels, "entry": entry, "layers": layers}
 
 
+def _search_layer(layers, ids, dist_to, entry_pts, ef: int, layer: int,
+                  allowed=None, cap: int = 0):
+    """Beam search at one layer — the paper's SEARCH-LAYER with id
+    tie-breaks, shared by build, search and filtered search. Returns
+    [(d, id, idx)] sorted by (d, id). With an ``allowed`` mask the beam
+    still walks every node, but the returned set holds only allowed
+    nodes: the closest ``cap`` of those the beam admitted."""
+    visited = set(entry_pts)
+    cand = [(dist_to(e), ids[e], e) for e in entry_pts]
+    heapq.heapify(cand)
+    # max-heap on distance via negation, so the root is the worst
+    # retained; keep the CLOSEST ef as the initial beam
+    best = [(-d, i, e) for d, i, e in cand]
+    heapq.heapify(best)
+    while len(best) > ef:
+        heapq.heappop(best)
+    res = None
+    if allowed is not None:
+        res = [(-d, i, e) for d, i, e in cand if allowed[e]]
+        heapq.heapify(res)
+    while cand:
+        d, _tid, c = heapq.heappop(cand)
+        if best and d > -best[0][0] and len(best) >= ef:
+            break
+        for nb in layers[layer].get(c, ()):
+            if nb in visited:
+                continue
+            visited.add(nb)
+            dn = dist_to(nb)
+            if len(best) < ef or dn < -best[0][0]:
+                heapq.heappush(cand, (dn, ids[nb], nb))
+                heapq.heappush(best, (-dn, ids[nb], nb))
+                if len(best) > ef:
+                    heapq.heappop(best)
+                if res is not None and allowed[nb]:
+                    heapq.heappush(res, (-dn, ids[nb], nb))
+                    if len(res) > cap:
+                        heapq.heappop(res)
+    return sorted((-d, i, e) for d, i, e in (best if res is None else res))
+
+
+def _descend(graph, dist_to) -> list[int]:
+    """Greedy descent from the entry point through the upper layers;
+    returns the layer-0 entry points."""
+    layers = graph["layers"]
+    ep = [graph["entry"]]
+    for l in range(len([d for d in layers if d]) - 1, 0, -1):
+        if not layers[l]:
+            continue
+        ep = [_search_layer(layers, graph["ids"], dist_to, ep, 1, l)[0][2]]
+    return ep
+
+
 def search_hnsw(graph, matrix, query_vec, k: int, ef: int = 64):
     """Top-k (cosine) from one graph: greedy descent through the upper
     layers, beam of width max(ef, k) at layer 0. Returns
     [(cos, vec_id)] best-first, ids breaking ties."""
     ids = graph["ids"]
-    layers = graph["layers"]
-    entry = graph["entry"]
-    if entry < 0 or not ids:
+    if graph["entry"] < 0 or not ids:
         return []
 
     def dist_to(a: int) -> float:
         return 1.0 - float(np.dot(matrix[a], query_vec))
 
-    # reuse the build-time beam by rebinding the closure pieces
-    def search_layer(entry_pts, ef_, layer):
-        import heapq as hq
-
-        visited = set(entry_pts)
-        cand = [(dist_to(e), ids[e], e) for e in entry_pts]
-        hq.heapify(cand)
-        best = [(-d, i, e) for d, i, e in cand]
-        hq.heapify(best)
-        while len(best) > ef_:
-            hq.heappop(best)
-        while cand:
-            d, _tid, c = hq.heappop(cand)
-            if best and d > -best[0][0] and len(best) >= ef_:
-                break
-            for nb in layers[layer].get(c, ()):
-                if nb in visited:
-                    continue
-                visited.add(nb)
-                dn = dist_to(nb)
-                if len(best) < ef_ or dn < -best[0][0]:
-                    hq.heappush(cand, (dn, ids[nb], nb))
-                    hq.heappush(best, (-dn, ids[nb], nb))
-                    if len(best) > ef_:
-                        hq.heappop(best)
-        return sorted((-d, i, e) for d, i, e in best)
-
-    ep = [entry]
-    for l in range(len([d for d in graph["layers"] if d]) - 1, 0, -1):
-        if not graph["layers"][l]:
-            continue
-        ep = [search_layer(ep, 1, l)[0][2]]
-    found = search_layer(ep, max(ef, k), 0)
+    found = _search_layer(
+        graph["layers"], ids, dist_to, _descend(graph, dist_to), max(ef, k), 0
+    )
     return [(1.0 - d, ids[e]) for d, _i, e in found[:k]]
 
 
@@ -217,98 +219,86 @@ def search_hnsw_filtered(
     min(k, |matches|) results exactly (the cardinality fallback every
     production filtered-HNSW applies at high selectivity). Returns
     [(cos, vec_id)] best-first, ids breaking ties."""
-    import heapq as hq
-
     ids = graph["ids"]
-    layers = graph["layers"]
-    entry = graph["entry"]
     n_allowed = int(np.count_nonzero(allowed))
     want = min(k, n_allowed)
-    if want == 0 or entry < 0 or not ids:
+    if want == 0 or graph["entry"] < 0 or not ids:
         return []
 
     def dist_to(a: int) -> float:
         return 1.0 - float(np.dot(matrix[a], query_vec))
 
-    def layer0_filtered(entry_pts, ef_):
-        visited = set(entry_pts)
-        cand = [(dist_to(e), ids[e], e) for e in entry_pts]
-        hq.heapify(cand)
-        best = [(-d, i, e) for d, i, e in cand]
-        hq.heapify(best)
-        res = [
-            (-d, i, e) for d, i, e in cand if allowed[e]
-        ]
-        hq.heapify(res)
-        while cand:
-            d, _tid, c = hq.heappop(cand)
-            if best and d > -best[0][0] and len(best) >= ef_:
-                break
-            for nb in layers[0].get(c, ()):
-                if nb in visited:
-                    continue
-                visited.add(nb)
-                dn = dist_to(nb)
-                if len(best) < ef_ or dn < -best[0][0]:
-                    hq.heappush(cand, (dn, ids[nb], nb))
-                    hq.heappush(best, (-dn, ids[nb], nb))
-                    if len(best) > ef_:
-                        hq.heappop(best)
-                    if allowed[nb]:
-                        hq.heappush(res, (-dn, ids[nb], nb))
-                        if len(res) > max(ef_, k):
-                            hq.heappop(res)
-        return sorted((-d, i) for d, i, _e in res)
-
     # greedy descent exactly as the unfiltered search
-    def search_layer(entry_pts, ef_, layer):
-        visited = set(entry_pts)
-        cand = [(dist_to(e), ids[e], e) for e in entry_pts]
-        hq.heapify(cand)
-        best = [(-d, i, e) for d, i, e in cand]
-        hq.heapify(best)
-        while len(best) > ef_:
-            hq.heappop(best)
-        while cand:
-            d, _tid, c = hq.heappop(cand)
-            if best and d > -best[0][0] and len(best) >= ef_:
-                break
-            for nb in layers[layer].get(c, ()):
-                if nb in visited:
-                    continue
-                visited.add(nb)
-                dn = dist_to(nb)
-                if len(best) < ef_ or dn < -best[0][0]:
-                    hq.heappush(cand, (dn, ids[nb], nb))
-                    hq.heappush(best, (-dn, ids[nb], nb))
-                    if len(best) > ef_:
-                        hq.heappop(best)
-        return sorted((-d, i, e) for d, i, e in best)
-
-    ep = [entry]
-    for l in range(len([d for d in layers if d]) - 1, 0, -1):
-        if not layers[l]:
-            continue
-        ep = [search_layer(ep, 1, l)[0][2]]
+    ep = _descend(graph, dist_to)
     ef_cur = max(ef, k)
     n = len(ids)
     while True:
-        found = layer0_filtered(ep, ef_cur)
+        found = _search_layer(
+            graph["layers"], ids, dist_to, ep, ef_cur, 0, allowed,
+            max(ef_cur, k),
+        )
         if len(found) >= want or ef_cur >= n:
             break
         ef_cur = min(ef_cur * 2, n)
     if len(found) < want:
         # exhaustive over the allowed rows — exact fill guarantee
         idxs = np.nonzero(allowed)[0]
-        scored = sorted(
-            (1.0 - float(np.dot(matrix[i], query_vec)), ids[i])
-            for i in idxs
-        )
+        scored = sorted((dist_to(i), ids[i]) for i in idxs)
         return [(1.0 - d, i) for d, i in scored[:want]]
-    return [(1.0 - d, i) for d, i in found[:want]]
+    return [(1.0 - d, i) for d, i, _e in found[:want]]
 
 
 HNSW_SCHEMA = "query_id long, neighbor_id long, cos double"
+
+
+def _unit(mat):
+    """Row-normalize in place (zero rows stay zero) and return ``mat``."""
+    mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+    return mat
+
+
+def _probe_matrix(queries, id_col: str, vec_col: str):
+    """(ids, unit rows) of the bounded probe set, collected once so the
+    matrix rides in the shard tasks' closure."""
+    probes = queries.select(id_col, vec_col).collect()  # bounded probe set
+    q_ids = [int(r[0]) for r in probes]
+    return q_ids, _unit(np.asarray([list(r[1]) for r in probes], dtype=np.float64))
+
+
+def _search_shard(graph, mat, q_ids, q_mat, k: int, ef: int, allowed=None):
+    """One shard's local top-k for every probe, as a HNSW_SCHEMA frame;
+    with an ``allowed`` mask the filtered beam runs."""
+    import pandas as pd
+
+    rows = []
+    for qi, qv in zip(q_ids, q_mat):
+        if allowed is None:
+            found = search_hnsw(graph, mat, qv, k, ef=ef)
+        else:
+            found = search_hnsw_filtered(graph, mat, qv, k, allowed, ef=ef)
+        rows.extend((qi, nid, float(cos)) for cos, nid in found)
+    return pd.DataFrame(rows, columns=["query_id", "neighbor_id", "cos"])
+
+
+def _merge_topk(local, k: int):
+    """Global top-k: one window over the shard-local candidates."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cos"), F.col("neighbor_id")
+    )
+    return (
+        local.withColumn("cos", F.round("cos", 6))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
+
+
+def _shard_col(id_col: str, n_shards: int):
+    """shard = xxhash64(id) mod n_shards — JVM-side, deterministic."""
+    return (
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards))
+        .cast("int")
+        .alias("shard")
+    )
 
 
 def hnsw_topk(
@@ -329,19 +319,11 @@ def hnsw_topk(
     monolithic graph explores for those vectors, so sharding trades a
     little extra compute for build parallelism, never recall. Returns
     (query_id, neighbor_id, cos, rank)."""
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     spark = corpus.sparkSession
     if n_shards is None:
         n_shards = max(4, spark.sparkContext.defaultParallelism // 4)
 
-    probes = queries.select(id_col, vec_col).collect()  # bounded probe set
-    q_ids = [int(r[0]) for r in probes]
-    q_mat = np.asarray([list(r[1]) for r in probes], dtype=np.float64)
-    q_mat /= np.maximum(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12)
-
+    q_ids, q_mat = _probe_matrix(queries, id_col, vec_col)
     sharded = corpus.select(id_col, vec_col).repartition(n_shards, id_col)
 
     def per_shard(batches):
@@ -352,26 +334,11 @@ def hnsw_topk(
             vecs.extend(list(v) for v in b[vec_col])
         if not ids:
             return
-        mat = np.asarray(vecs, dtype=np.float64)
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+        mat = _unit(np.asarray(vecs, dtype=np.float64))
         graph = build_hnsw(ids, mat, M=M, ef_construction=max(ef, 2 * M))
-        rows = []
-        for qi, qv in zip(q_ids, q_mat):
-            for cos, nid in search_hnsw(graph, mat, qv, k, ef=ef):
-                rows.append((qi, nid, float(cos)))
-        yield pd.DataFrame(
-            rows, columns=["query_id", "neighbor_id", "cos"]
-        )
+        yield _search_shard(graph, mat, q_ids, q_mat, k, ef)
 
-    local = sharded.mapInPandas(per_shard, HNSW_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.col("neighbor_id")
-    )
-    return (
-        local.withColumn("cos", F.round("cos", 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _merge_topk(sharded.mapInPandas(per_shard, HNSW_SCHEMA), k)
 
 
 # ---------------------------------------------------------------------------
@@ -379,6 +346,8 @@ def hnsw_topk(
 # loaded (never rebuilt) at query time — the IVF at-rest discipline
 # (similarity.ivf_topk_at_rest) applied to HNSW. Build is the expensive
 # phase of any graph index; production serving amortizes it to zero.
+# The store is a cell store partitioned by ``shard`` (see
+# operators/cell_store.py); the graphs are its model files.
 # ---------------------------------------------------------------------------
 
 
@@ -423,23 +392,14 @@ def hnsw_build_store(
     alone) and written executor-side to a temp name then atomically
     renamed — the two-phase discipline every sink here uses. The
     returned action is a bounded n_shards-row collect of build stats."""
-    import json
-    import os
-    import uuid
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
     sharded = corpus.select(
         F.col(id_col),
         F.col(vec_col),
         *[F.col(c) for c in (attr_cols or [])],
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards))
-        .cast("int")
-        .alias("shard"),
+        _shard_col(id_col, n_shards),
     )
-    sharded.write.mode("overwrite").partitionBy("shard").parquet(path)
-    gdir = os.path.join(path, "_graphs")
+    cell_store.build(sharded, path, part="shard")
+    gdir = os.path.join(path, cell_store.GRAPHS)
     stats = _build_shard_graphs(
         sharded, gdir, id_col, vec_col, M, ef_construction
     )
@@ -458,10 +418,6 @@ def _build_shard_graphs(
     content. Shards absent from the input keep their existing files
     byte-for-byte (the property incremental maintenance relies on).
     Returns the bounded per-shard build stats."""
-    import json
-    import os
-    import uuid
-
     import pandas as pd
 
     os.makedirs(gdir, exist_ok=True)
@@ -469,14 +425,10 @@ def _build_shard_graphs(
     def build(pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf = pdf.sort_values(id_col)
         ids = [int(x) for x in pdf[id_col]]
-        mat = np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64)
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+        mat = _unit(np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64))
         graph = build_hnsw(ids, mat, M=M, ef_construction=ef_construction)
         shard = int(pdf["shard"].iloc[0])
-        tmp = os.path.join(gdir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(_graph_to_json(graph), f)
-        os.replace(tmp, os.path.join(gdir, f"shard-{shard:05d}.json"))
+        cell_store.save_json(gdir, f"shard-{shard:05d}.json", _graph_to_json(graph))
         return pd.DataFrame({"shard": [shard], "n": [len(ids)]})
 
     return (
@@ -484,6 +436,41 @@ def _build_shard_graphs(
         .applyInPandas(build, "shard int, n long")
         .collect()  # ≤ n_shards rows — bounded
     )
+
+
+def _serve_shards(spark, queries, path: str, k: int, ef: int,
+                  id_col: str, vec_col: str, predicate: str | None = None):
+    """The serve of ``hnsw_topk_at_rest`` (and, with ``predicate``, of
+    ``hnsw_filtered_topk_at_rest``) over the committed store at
+    ``path``: one grouped-map task per shard loads its graph, checks it
+    against the store rows and searches; one window merges."""
+    import pandas as pd
+
+    gdir = os.path.join(path, cell_store.GRAPHS)
+    q_ids, q_mat = _probe_matrix(queries, id_col, vec_col)
+    back = spark.read.parquet(path)
+    if predicate is not None:
+        back = back.withColumn("_match", F.expr(predicate))
+
+    def serve(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        pdf = pdf.sort_values(id_col)
+        shard = int(pdf["shard"].iloc[0])
+        graph = _graph_from_json(
+            cell_store.load_json(gdir, f"shard-{shard:05d}.json")
+        )
+        ids = [int(x) for x in pdf[id_col]]
+        if graph["ids"] != ids:
+            raise ValueError(
+                f"graph/store drift in shard {shard}: "
+                f"{len(graph['ids'])} graph ids vs {len(ids)} store rows"
+            )
+        mat = _unit(np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64))
+        allowed = None
+        if predicate is not None:
+            allowed = pdf["_match"].fillna(False).to_numpy(dtype=bool)
+        return _search_shard(graph, mat, q_ids, q_mat, k, ef, allowed)
+
+    return _merge_topk(back.groupBy("shard").applyInPandas(serve, HNSW_SCHEMA), k)
 
 
 def hnsw_topk_at_rest(
@@ -508,57 +495,16 @@ def hnsw_topk_at_rest(
     queries never pay the build, the production serving contract. The
     caller keys ``path`` on a corpus fingerprint to own invalidation,
     exactly as the IVF at-rest store does."""
-    import json
-    import os
-
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    gdir = os.path.join(path, "_graphs")
-    if not (reuse_store and os.path.exists(os.path.join(gdir, "_SUCCESS"))):
+    if not (
+        reuse_store
+        and os.path.exists(os.path.join(path, cell_store.GRAPHS, "_SUCCESS"))
+    ):
         hnsw_build_store(
             corpus, path, n_shards=n_shards, M=M,
             ef_construction=max(ef, 2 * M),
             id_col=id_col, vec_col=vec_col,
         )
-    probes = queries.select(id_col, vec_col).collect()  # bounded probe set
-    q_ids = [int(r[0]) for r in probes]
-    q_mat = np.asarray([list(r[1]) for r in probes], dtype=np.float64)
-    q_mat /= np.maximum(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12)
-
-    back = spark.read.parquet(path)
-
-    def serve(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(id_col)
-        shard = int(pdf["shard"].iloc[0])
-        with open(os.path.join(gdir, f"shard-{shard:05d}.json")) as f:
-            graph = _graph_from_json(json.load(f))
-        ids = [int(x) for x in pdf[id_col]]
-        if graph["ids"] != ids:
-            raise ValueError(
-                f"graph/store drift in shard {shard}: "
-                f"{len(graph['ids'])} graph ids vs {len(ids)} store rows"
-            )
-        mat = np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64)
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        rows = []
-        for qi, qv in zip(q_ids, q_mat):
-            for cos, nid in search_hnsw(graph, mat, qv, k, ef=ef):
-                rows.append((qi, nid, float(cos)))
-        return pd.DataFrame(
-            rows, columns=["query_id", "neighbor_id", "cos"]
-        )
-
-    local = back.groupBy("shard").applyInPandas(serve, HNSW_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.col("neighbor_id")
-    )
-    return (
-        local.withColumn("cos", F.round("cos", 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _serve_shards(spark, queries, path, k, ef, id_col, vec_col)
 
 
 def hnsw_upsert_store(
@@ -588,69 +534,35 @@ def hnsw_upsert_store(
     incrementally maintained store is BYTE-EQUAL to a rebuilt one —
     the exact-twin property the query asserts. Returns the rebuilt
     shard ids."""
-    import os
-    import shutil
+    gdir = os.path.join(path, cell_store.GRAPHS)
 
-    from pyspark.sql import functions as F
+    def rewritten(survivors, emptied):
+        # a shard deleted down to ZERO rows loses its graph with its
+        # partition; every other rewritten shard rebuilds its graph
+        for s in emptied:
+            g = os.path.join(gdir, f"shard-{s:05d}.json")
+            if os.path.exists(g):
+                os.unlink(g)
+        if survivors:
+            fresh = spark.read.parquet(path).filter(
+                F.col("shard").isin(survivors)
+            )
+            _build_shard_graphs(
+                fresh, gdir, id_col, vec_col, M, ef_construction
+            )
 
-    shard_expr = (
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards))
-        .cast("int")
-        .alias("shard")
+    return cell_store.upsert(
+        spark,
+        upserts.select(F.col(id_col), F.col(vec_col), _shard_col(id_col, n_shards)),
+        delete_ids,
+        path,
+        id_col,
+        key=id_col,
+        part="shard",
+        # the hash image of the touched ids — no store read
+        locate=lambda touched: touched.select(_shard_col(id_col, n_shards)),
+        rewritten=rewritten,
     )
-    changed = (
-        upserts.select(id_col)
-        .unionByName(delete_ids.select(id_col))
-        .select(shard_expr)
-        .distinct()
-        .collect()  # ≤ n_shards rows — bounded
-    )
-    shards = sorted(r["shard"] for r in changed)
-    if not shards:
-        return []
-    back = spark.read.parquet(path).filter(F.col("shard").isin(shards))
-    merged = (
-        back.join(upserts.select(id_col), id_col, "left_anti")
-        .join(delete_ids.select(id_col), id_col, "left_anti")
-        .select(id_col, vec_col, "shard")
-        .unionByName(
-            upserts.select(F.col(id_col), F.col(vec_col), shard_expr)
-        )
-    )
-    # A shard deleted down to ZERO rows needs explicit cleanup: dynamic
-    # overwrite only replaces partitions PRESENT in the output, so an
-    # empty shard's old partition (and graph) would silently survive.
-    # The per-shard survivor counts are a bounded <= n_shards collect.
-    counts = {
-        int(r["shard"]): r["n"]
-        for r in merged.groupBy("shard")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    emptied = [s for s in shards if counts.get(s, 0) == 0]
-    survivors = [s for s in shards if s not in emptied]
-    # rewrite ONLY the affected shard partitions (dynamic partition
-    # overwrite: partitions absent from the output are untouched)
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("shard")
-        .parquet(path)
-    )
-    gdir = os.path.join(path, "_graphs")
-    for s in emptied:
-        shutil.rmtree(os.path.join(path, f"shard={s}"), ignore_errors=True)
-        g = os.path.join(gdir, f"shard-{s:05d}.json")
-        if os.path.exists(g):
-            os.unlink(g)
-    if survivors:
-        fresh = spark.read.parquet(path).filter(
-            F.col("shard").isin(survivors)
-        )
-        _build_shard_graphs(
-            fresh, gdir, id_col, vec_col, M, ef_construction
-        )
-    return shards
 
 
 def hnsw_sync_from_tail(
@@ -683,34 +595,22 @@ def hnsw_sync_from_tail(
     skips restores too), ``'rebuild'`` wipes the store + checkpoint and
     re-bootstraps from the current snapshot (always correct, full-cost);
     see :mod:`crocus_spark.operators._tail_sync`."""
-    import os
+    from crocus_spark.operators._tail_sync import run_tail_sync
 
-    from pyspark.sql import functions as F
-
-    from crocus_spark.operators._tail_sync import (
-        net_effects,
-        run_tail_sync,
-    )
-
-    def apply(batch_df, _batch_id):
-        ups, dels = net_effects(batch_df, id_col, vec_col)
-        bootstrapped = os.path.exists(
-            os.path.join(index_path, "_graphs", "_SUCCESS")
+    def bootstrap(ups):
+        hnsw_build_store(
+            ups, index_path, n_shards=n_shards, M=M,
+            ef_construction=ef_construction, id_col=id_col, vec_col=vec_col,
         )
-        if not bootstrapped:
-            hnsw_build_store(
-                ups, index_path, n_shards=n_shards, M=M,
-                ef_construction=ef_construction,
-                id_col=id_col, vec_col=vec_col,
-            )
-        else:
-            hnsw_upsert_store(
-                spark, ups, dels, index_path, n_shards=n_shards, M=M,
-                ef_construction=ef_construction,
-                id_col=id_col, vec_col=vec_col,
-            )
 
-    run_tail_sync(spark, table_root, index_path, apply, on_rewrite)
+    run_tail_sync(
+        spark, table_root, index_path, bootstrap,
+        lambda ups, dels: hnsw_upsert_store(
+            spark, ups, dels, index_path, n_shards=n_shards, M=M,
+            ef_construction=ef_construction, id_col=id_col, vec_col=vec_col,
+        ),
+        on_rewrite, f"{cell_store.GRAPHS}/_SUCCESS", id_col, vec_col,
+    )
 
 
 def hnsw_filtered_topk_at_rest(
@@ -732,53 +632,6 @@ def hnsw_filtered_topk_at_rest(
     min(k, matches) guaranteed), and one window merges shard-local
     top-k — so globally every query returns min(k, |matches|) rows.
     Store must be built with ``hnsw_build_store(..., attr_cols=…)``."""
-    import json
-    import os
-
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    gdir = os.path.join(path, "_graphs")
-    probes = queries.select(id_col, vec_col).collect()  # bounded probe set
-    q_ids = [int(r[0]) for r in probes]
-    q_mat = np.asarray([list(r[1]) for r in probes], dtype=np.float64)
-    q_mat /= np.maximum(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12)
-
-    back = spark.read.parquet(path).withColumn(
-        "_match", F.expr(predicate)
-    )
-
-    def serve(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(id_col)
-        shard = int(pdf["shard"].iloc[0])
-        with open(os.path.join(gdir, f"shard-{shard:05d}.json")) as f:
-            graph = _graph_from_json(json.load(f))
-        ids = [int(x) for x in pdf[id_col]]
-        if graph["ids"] != ids:
-            raise ValueError(
-                f"graph/store drift in shard {shard}: "
-                f"{len(graph['ids'])} graph ids vs {len(ids)} store rows"
-            )
-        mat = np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64)
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        allowed = pdf["_match"].fillna(False).to_numpy(dtype=bool)
-        rows = []
-        for qi, qv in zip(q_ids, q_mat):
-            for cos, nid in search_hnsw_filtered(
-                graph, mat, qv, k, allowed, ef=ef
-            ):
-                rows.append((qi, nid, float(cos)))
-        return pd.DataFrame(
-            rows, columns=["query_id", "neighbor_id", "cos"]
-        )
-
-    local = back.groupBy("shard").applyInPandas(serve, HNSW_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.col("neighbor_id")
-    )
-    return (
-        local.withColumn("cos", F.round("cos", 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _serve_shards(
+        spark, queries, path, k, ef, id_col, vec_col, predicate=predicate
     )

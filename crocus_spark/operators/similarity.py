@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from crocus_spark.operators import cell_store
+
 
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity of two array<float/double> columns via
@@ -97,14 +99,27 @@ def brute_force_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
     )
-    scored = c.crossJoin(F.broadcast(q)).withColumn(
-        "cos", F.round(cosine_batch(F.col("q_vec"), F.col("c_vec")), 6)
-    )
+    return _exact_topk(c.crossJoin(F.broadcast(q)), k)
+
+
+def _cosine_ranked(pairs: DataFrame) -> DataFrame:
+    """``pairs`` (query_id, neighbor_id, q_vec, c_vec, …) plus the exact
+    ``cos`` (brute-force rounding contract) and its per-query ``rank``
+    (cos desc, ties to the lower neighbor id) — the one re-rank every
+    serve in this module ends with."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id")
     )
+    return pairs.withColumn(
+        "cos", F.round(cosine_batch(F.col("q_vec"), F.col("c_vec")), 6)
+    ).withColumn("rank", F.row_number().over(w))
+
+
+def _exact_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cos, rank) for the ``k`` best of
+    ``pairs`` per query (see ``_cosine_ranked``)."""
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        _cosine_ranked(pairs)
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cos", "rank")
     )
@@ -205,22 +220,14 @@ def lsh_bucketed_topk(
     candidates = (
         qb.join(cb, ["table", "bucket"])
         .dropDuplicates(["q_id", "c_id"])
-        .select("q_id", "q_vec", "c_id", "c_vec")
-    )
-    scored = candidates.withColumn(
-        "cos", F.round(cosine_batch(F.col("q_vec"), F.col("c_vec")), 6)
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
         .select(
             F.col("q_id").alias("query_id"),
+            "q_vec",
             F.col("c_id").alias("neighbor_id"),
-            "cos",
-            "rank",
+            "c_vec",
         )
     )
+    return _exact_topk(candidates, k)
 
 
 def _norm_vec(c: Column) -> Column:
@@ -264,27 +271,6 @@ def dot_batch(a, b):
     return pd.Series(dot)
 
 
-def _assign_cells(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Nearest-centroid cell per vector: broadcast the (cells-sized)
-    centroid relation, score every (vector, centroid) pair, keep the
-    max-dot cell with ties to the LOWEST cell id (deterministic).
-    max_by over struct(dot, -cell) does the argmax in one partial+final
-    aggregation — no window, no extra shuffle of the vector payload."""
-    scored = vectors.crossJoin(F.broadcast(centroids)).select(
-        "id",
-        "v",
-        F.struct(
-            dot_batch(F.col("v"), F.col("centroid")).alias("dot"),
-            (-F.col("cell")).alias("neg_cell"),
-        ).alias("sc"),
-    )
-    best = scored.groupBy("id").agg(
-        (-F.max("sc").getField("neg_cell")).cast("int").alias("cell"),
-        F.first("v").alias("v"),
-    )
-    return best
-
-
 def collect_centroid_model(centroids: DataFrame):
     """Collect the fitted (cell, centroid) relation into a dense cell
     list + k×dim float64 matrix. The collect is MODEL-sized (k·dim
@@ -326,6 +312,31 @@ def _centroid_df(spark, cells, mat) -> DataFrame:
         )
 
 
+def _unit_rows(V):
+    """L2-normalize the rows of a float64 batch replaying
+    ``_norm_vec``'s fold bit for bit: acc + x·x per dim in index
+    order, sqrt, per-component divide."""
+    import numpy as np
+
+    acc = np.zeros(V.shape[0])
+    for i in range(V.shape[1]):
+        x = V[:, i]
+        acc = acc + x * x
+    return V / np.sqrt(acc)[:, None]
+
+
+def _nearest_cells(V, cells, mat):
+    """Nearest-centroid cell per row of ``V``: each (row, centroid) dot
+    accumulates dim by dim in ``dot_batch``'s order, and ``np.argmax``'s
+    first-max rule over ascending cell ids is the lowest-cell tie rule."""
+    import numpy as np
+
+    D = np.zeros((V.shape[0], mat.shape[0]))
+    for i in range(V.shape[1]):
+        D = D + V[:, i : i + 1] * mat[None, :, i]
+    return cells[np.argmax(D, axis=1)]
+
+
 def assign_cells_projection(
     vectors: DataFrame, cells, mat, normalize: bool = False
 ) -> DataFrame:
@@ -343,10 +354,10 @@ def assign_cells_projection(
     interpreted higher-order ``_norm_vec`` lambda over the whole corpus
     (seconds per million rows; the r4-measured cold-probe wall).
 
-    Value parity with ``_assign_cells``: the dimension loop accumulates
-    each (vector, centroid) dot in the same left-to-right IEEE order as
-    ``dot_batch``, and ``np.argmax``'s first-max rule over ascending cell
-    ids reproduces the max-dot / lowest-cell tie rule."""
+    Tie rule: the dimension loop accumulates each (vector, centroid)
+    dot in the same left-to-right IEEE order as ``dot_batch``, and
+    ``np.argmax``'s first-max rule over ascending cell ids gives the
+    max-dot / lowest-cell tie rule."""
     import numpy as np
     import pandas as pd
 
@@ -356,15 +367,8 @@ def assign_cells_projection(
             return pd.Series([], dtype="int32")
         V = np.vstack(v.to_numpy()).astype(np.float64)
         if normalize:
-            acc = np.zeros(V.shape[0])
-            for i in range(V.shape[1]):  # _norm_vec's fold order
-                x = V[:, i]
-                acc = acc + x * x
-            V = V / np.sqrt(acc)[:, None]
-        D = np.zeros((V.shape[0], mat.shape[0]))
-        for i in range(V.shape[1]):
-            D = D + V[:, i : i + 1] * mat[None, :, i]
-        return pd.Series(cells[np.argmax(D, axis=1)], dtype="int32")
+            V = _unit_rows(V)
+        return pd.Series(_nearest_cells(V, cells, mat), dtype="int32")
 
     # asNondeterministic (guide §4.4 pattern): downstream equi-joins on
     # "cell" push an IsNotNull(cell) filter below the projection, and the
@@ -397,18 +401,10 @@ def assign_and_normalize(vectors: DataFrame, cells, mat) -> DataFrame:
         for b in batches:
             if len(b) == 0:
                 continue
-            V = np.vstack(b["v"].to_numpy()).astype(np.float64)
-            acc = np.zeros(V.shape[0])
-            for i in range(V.shape[1]):
-                x = V[:, i]
-                acc = acc + x * x
-            V = V / np.sqrt(acc)[:, None]
-            D = np.zeros((V.shape[0], mat.shape[0]))
-            for i in range(V.shape[1]):
-                D = D + V[:, i : i + 1] * mat[None, :, i]
+            V = _unit_rows(np.vstack(b["v"].to_numpy()).astype(np.float64))
             yield pd.DataFrame(
                 {
-                    "cell": cells[np.argmax(D, axis=1)].astype("int32"),
+                    "cell": _nearest_cells(V, cells, mat).astype("int32"),
                     "v": list(V),
                 }
             )
@@ -548,57 +544,70 @@ def ivf_topk(
     # the (cells-sized) centroid DataFrame the probe ranking needs is
     # rebuilt from the collected rows, so no downstream reference can
     # re-run the fit lineage and no checkpoint state lingers.
-    cells, mat = model if model is not None else collect_centroid_model(
+    model = model if model is not None else collect_centroid_model(
         ivf_fit_centroids(corpus, n_cells, id_col, vec_col, lloyd_iters, dim=dim)
     )
-    centroids = _centroid_df(corpus.sparkSession, cells, mat)
     # cell assignment as a projection ON the corpus scan itself — no
     # corpus self-join, no shuffle; the raw vector stays alongside for
     # exact re-scoring. Normalization happens inside the Arrow batch
     # (normalize=True): the corpus-wide interpreted _norm_vec lambda
     # was this probe path's single biggest cost, and its result was
     # immediately dropped.
-    c = assign_cells_projection(
+    c = _ivf_encoded(corpus, model, id_col, vec_col)
+    probes = _probes(queries, model, id_col, vec_col, nprobe).select(
+        "query_id", "q_vec", "cell"
+    )
+    # probes is (queries × nprobe) rows — tiny by the module's standing
+    # queries ≪ corpus contract. The explicit broadcast keeps the corpus
+    # from ever shuffling on cell for this join (and skips AQE's
+    # stage-materialization round-trip that reaches the same plan).
+    return _exact_topk(c.join(F.broadcast(probes), "cell"), k)
+
+
+def _ivf_encoded(corpus: DataFrame, model, id_col: str, vec_col: str,
+                 attr_cols=()) -> DataFrame:
+    """(neighbor_id, c_vec raw, [attrs...,] cell): the IVF store rows —
+    cell is the nearest frozen centroid of the normalized vector, one
+    map-side Arrow projection (``assign_cells_projection``)."""
+    cells, mat = model
+    return assign_cells_projection(
         corpus.select(
             F.col(id_col).alias("neighbor_id"),
             F.col(vec_col).alias("c_vec"),
+            *[F.col(c) for c in attr_cols],
             F.col(vec_col).alias("v"),
         ),
         cells,
         mat,
         normalize=True,
     ).drop("v")
-    # per-query probe list: top-nprobe centroid cells by dot product
-    q_normed = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm_vec(F.col(vec_col)).alias("qn"),
-    )
+
+
+def _probes(queries: DataFrame, model, id_col: str, vec_col: str,
+            nprobe: int | None = None) -> DataFrame:
+    """(query_id, q_vec, qn, cell, probe_rank, …): every cell of the
+    ``(cells, mat)`` model ranked per query by centroid dot, ties to
+    the lower cell — the one probe order of ``ivf_topk``, the at-rest
+    serves and the filtered serves — or, with ``nprobe``, each query's
+    top-``nprobe`` cells. The centroid relation is cells-sized and
+    broadcast."""
+    centroids = _centroid_df(queries.sparkSession, *model)
     w_probe = Window.partitionBy("query_id").orderBy(
         F.desc("q_dot"), F.col("cell")
     )
-    probes = (
-        q_normed.crossJoin(F.broadcast(centroids))
+    ranked = (
+        queries.select(
+            F.col(id_col).alias("query_id"),
+            F.col(vec_col).alias("q_vec"),
+            _norm_vec(F.col(vec_col)).alias("qn"),
+        )
+        .crossJoin(F.broadcast(centroids))
         .withColumn("q_dot", dot_batch(F.col("qn"), F.col("centroid")))
         .withColumn("probe_rank", F.row_number().over(w_probe))
-        .filter(F.col("probe_rank") <= nprobe)
-        .select("query_id", "q_vec", "cell")
     )
-    # probes is (queries × nprobe) rows — tiny by the module's standing
-    # queries ≪ corpus contract. The explicit broadcast keeps the corpus
-    # from ever shuffling on cell for this join (and skips AQE's
-    # stage-materialization round-trip that reaches the same plan).
-    scored = c.join(F.broadcast(probes), "cell").withColumn(
-        "cos", F.round(cosine_batch(F.col("q_vec"), F.col("c_vec")), 6)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    if nprobe is None:
+        return ranked
+    return ranked.filter(F.col("probe_rank") <= nprobe)
 
 
 def label_centroids(
@@ -849,15 +858,26 @@ def pq_topk(
     (queries ≪ corpus is this module's standing contract; the corpus
     itself never leaves the executors).
     """
-    import numpy as np
-    import pandas as pd
-
     codebook = pq_fit_codebook(
         corpus, m=m, ksub=ksub, id_col=id_col, vec_col=vec_col
     )
-    bc_cb = spark.sparkContext.broadcast(codebook)
-    d = codebook.shape[0] * codebook.shape[2]
-    ds = codebook.shape[2]
+    q_ids, Q = _normed_queries(queries, id_col, vec_col)
+    normed = corpus.select(
+        F.col(id_col).alias("neighbor_id"), _norm_vec(F.col(vec_col)).alias("v")
+    )
+    candidates = _adc_candidates(
+        spark, normed, q_ids, Q, codebook, refine, encode=True
+    )
+    c_vecs = corpus.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+    )
+    return _rerank(candidates, c_vecs, queries, k, id_col, vec_col)
+
+
+def _normed_queries(queries: DataFrame, id_col: str, vec_col: str):
+    """(query ids, unit-vector matrix) of the bounded query set, in id
+    order — collected for LUT construction (queries ≪ corpus)."""
+    import numpy as np
 
     q_rows = (
         queries.select(
@@ -866,40 +886,62 @@ def pq_topk(
         .orderBy("query_id")
         .collect()
     )
-    q_ids = [r.query_id for r in q_rows]
-    Q = np.array([r.qn for r in q_rows], dtype=np.float64)  # (q, d)
-    # (q, m, ksub) LUT: dot of each query subvector with each centroid
-    lut = np.einsum(
-        "qsd,skd->qsk", Q.reshape(len(q_ids), m, ds), codebook
+    return (
+        [r.query_id for r in q_rows],
+        np.array([r.qn for r in q_rows], dtype=np.float64),
     )
-    bc_lut = spark.sparkContext.broadcast((q_ids, lut))
 
-    normed = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _norm_vec(F.col(vec_col)).alias("v")
+
+def _adc_candidates(spark, scan: DataFrame, q_ids, Q, codebook, refine: int,
+                    encode: bool = False, cells_of_q=None) -> DataFrame:
+    """(query_id, neighbor_id) of the top ``refine`` ADC scores per
+    query — the scan ``pq_topk``, ``pq_topk_at_rest`` and
+    ``ivfpq_topk_at_rest`` share. A (q, m, ksub) lookup table of
+    subspace dots is built once from the unit query rows ``Q``; the
+    Arrow-batched scan then scores every row with m table lookups
+    instead of d multiplies. ``scan`` carries neighbor_id plus either
+    the stored ``code`` bytes or, with ``encode=True``, the normalized
+    vector ``v`` to encode on the fly; with ``cells_of_q`` (query id →
+    its probed cells) it also carries ``cell`` and each query scores
+    only its own probed cells (a vectorized ``np.isin`` mask)."""
+    import numpy as np
+    import pandas as pd
+
+    m, _ksub, ds = codebook.shape
+    lut = np.einsum("qsd,skd->qsk", Q.reshape(len(q_ids), m, ds), codebook)
+    bc = spark.sparkContext.broadcast(
+        (q_ids, lut, codebook if encode else None, cells_of_q)
     )
 
     def adc_scan(batches):
-        cb = bc_cb.value
-        ids, lut_v = bc_lut.value
-        nq = len(ids)
+        ids, lut_v, cb, cq = bc.value
+        rng = np.arange(m)
         for pdf in batches:
-            V = np.array(list(pdf["v"]), dtype=np.float64)  # (B, d)
-            B = V.shape[0]
+            B = len(pdf)
             if not B:
                 continue
-            sub = V.reshape(B, m, ds)
-            # encode: argmin L2 per subspace -> (B, m) codes
-            d2 = (
-                (sub[:, :, None, :] - cb[None, :, :, :]) ** 2
-            ).sum(-1)
-            codes = d2.argmin(-1)
+            if cb is not None:
+                V = np.array(list(pdf["v"]), dtype=np.float64)
+                codes = pq_encode_batch(V, cb)
+            else:
+                codes = np.frombuffer(
+                    b"".join(pdf["code"]), dtype=np.uint8
+                ).reshape(B, m)
+            nid = pdf["neighbor_id"].to_numpy()
             out_id, out_q, out_adc = [], [], []
-            rng = np.arange(m)
-            for qi in range(nq):
-                adc = lut_v[qi][rng, codes].sum(1)  # (B,)
-                out_id.append(pdf["neighbor_id"].to_numpy())
-                out_q.append(np.full(B, ids[qi], dtype=np.int64))
-                out_adc.append(adc)
+            for qi, qid in enumerate(ids):
+                if cq is None:
+                    sel = slice(None)
+                else:
+                    sel = np.isin(pdf["cell"].to_numpy(), cq.get(qid, []))
+                    if not sel.any():
+                        continue
+                sub = codes[sel]
+                out_id.append(nid[sel])
+                out_q.append(np.full(sub.shape[0], qid, dtype=np.int64))
+                out_adc.append(lut_v[qi][rng, sub].sum(1))
+            if not out_id:
+                continue
             yield pd.DataFrame(
                 {
                     "neighbor_id": np.concatenate(out_id),
@@ -908,38 +950,31 @@ def pq_topk(
                 }
             )
 
-    scanned = normed.mapInPandas(
+    scanned = scan.mapInPandas(
         adc_scan, schema="neighbor_id long, query_id long, adc double"
     )
     w_c = Window.partitionBy("query_id").orderBy(
         F.col("adc").desc(), F.col("neighbor_id")
     )
-    candidates = (
+    return (
         scanned.withColumn("crank", F.row_number().over(w_c))
         .filter(F.col("crank") <= refine)
         .select("query_id", "neighbor_id")
     )
-    # exact re-rank: only refine·|queries| rows reach this join
-    c_vecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    )
+
+
+def _rerank(candidates: DataFrame, c_vecs: DataFrame, queries: DataFrame,
+            k: int, id_col: str, vec_col: str) -> DataFrame:
+    """Exact re-rank of ADC candidates: only refine·|queries| rows join
+    back to the raw vectors ``c_vecs`` (neighbor_id, c_vec)."""
     q_vecs = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
     )
-    rescored = (
-        candidates.join(c_vecs, "neighbor_id")
-        .join(F.broadcast(q_vecs), "query_id")
-        .withColumn(
-            "cos", F.round(cosine_batch(F.col("q_vec"), F.col("c_vec")), 6)
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
+    return _exact_topk(
+        candidates.join(c_vecs, "neighbor_id").join(
+            F.broadcast(q_vecs), "query_id"
+        ),
+        k,
     )
 
 
@@ -979,53 +1014,20 @@ def ivf_topk_at_rest(
     """
     import os as _os
 
-    cells, mat = model if model is not None else collect_centroid_model(
+    model = model if model is not None else collect_centroid_model(
         ivf_fit_centroids(corpus, n_cells, id_col, vec_col, dim=dim)
     )
-    centroids = _centroid_df(spark, cells, mat)
     if not (reuse_store and _os.path.exists(_os.path.join(path, "_SUCCESS"))):
-        indexed = assign_cells_projection(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("c_vec"),
-                F.col(vec_col).alias("v"),
-            ),
-            cells,
-            mat,
-            normalize=True,
-        ).drop("v")
-        indexed.write.mode("overwrite").partitionBy("cell").parquet(path)
+        _ivf_build(corpus, path, model, id_col, vec_col)
 
-    q_normed = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm_vec(F.col(vec_col)).alias("qn"),
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("q_dot"), F.col("cell")
-    )
-    probes = (
-        q_normed.crossJoin(F.broadcast(centroids))
-        .withColumn("q_dot", dot_batch(F.col("qn"), F.col("centroid")))
-        .withColumn("probe_rank", F.row_number().over(w_probe))
-        .filter(F.col("probe_rank") <= nprobe)
-        .select("query_id", "q_vec", "cell")
+    probes = _probes(queries, model, id_col, vec_col, nprobe).select(
+        "query_id", "q_vec", "cell"
     )
     probe_cells = sorted(
         r.cell for r in probes.select("cell").distinct().collect()
     )  # ≤ n_cells ints — the partition-pruning literal
     back = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
-    scored = back.join(F.broadcast(probes), "cell").withColumn(
-        "cos", F.round(cosine_batch(F.col("q_vec"), F.col("c_vec")), 6)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    return _exact_topk(back.join(F.broadcast(probes), "cell"), k)
 
 
 # ---------------------------------------------------------------------------
@@ -1033,40 +1035,40 @@ def ivf_topk_at_rest(
 # table. The centroid MODEL is frozen between refits (the production
 # IVF pattern: continuous upsert, periodic refit); with a frozen model
 # cell assignment is deterministic, so an incrementally maintained
-# store equals a same-model rebuild exactly — the testable twin.
+# store equals a same-model rebuild exactly — the testable twin. The
+# store protocol itself (layout, model files, merge, emptied cells)
+# lives in operators/cell_store.py; the families below supply only
+# their fit, encode and model files.
 # ---------------------------------------------------------------------------
 
 
-def ivf_model_save(path: str, cells, mat) -> None:
-    """Persist the (cells, centroid-matrix) model beside the cell store
-    as ``_model.json`` (atomic tmp+rename) so every later sync/serve
-    uses the SAME frozen centroids."""
-    import json as _json
-    import os as _os
-    import uuid as _uuid
-
-    body = {
+def _ivf_model_file(cells, mat):
+    """``_model.json`` beside an IVF (or IVFPQ) store: the frozen
+    centroids every later sync/serve uses."""
+    return cell_store.MODEL, {
         "cells": [int(c) for c in cells],
         "mat": [[float(x) for x in row] for row in mat],
     }
-    _os.makedirs(path, exist_ok=True)
-    tmp = _os.path.join(path, f".tmp-{_uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        _json.dump(body, f)
-    _os.replace(tmp, _os.path.join(path, "_model.json"))
 
 
 def ivf_model_load(path: str):
-    import json as _json
-    import os as _os
-
     import numpy as np
 
-    with open(_os.path.join(path, "_model.json")) as f:
-        d = _json.load(f)
+    d = cell_store.load_json(path, cell_store.MODEL)
     return (
         np.array(d["cells"], dtype=np.int32),
         np.array(d["mat"], dtype=np.float64),
+    )
+
+
+def _ivf_build(corpus, path, model, id_col, vec_col, attr_cols=()) -> None:
+    """The IVF store build behind ``ivf_build_store``, the inline build
+    of ``ivf_topk_at_rest`` and ``ivf_filtered_build`` (which carries
+    ``attr_cols`` inline for filtered serving)."""
+    cell_store.build(
+        _ivf_encoded(corpus, model, id_col, vec_col, attr_cols),
+        path,
+        [_ivf_model_file(*model)],
     )
 
 
@@ -1081,19 +1083,7 @@ def ivf_build_store(
     FROZEN model and persist the model beside it — the build half
     ``ivf_topk_at_rest`` runs inline, split out so incremental sync can
     bootstrap once and upsert forever."""
-    cells, mat = model
-    indexed = assign_cells_projection(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            F.col(vec_col).alias("v"),
-        ),
-        cells,
-        mat,
-        normalize=True,
-    ).drop("v")
-    indexed.write.mode("overwrite").partitionBy("cell").parquet(path)
-    ivf_model_save(path, cells, mat)
+    _ivf_build(corpus, path, model, id_col, vec_col)
 
 
 def ivf_upsert_store(
@@ -1119,74 +1109,9 @@ def ivf_upsert_store(
     ≤ n_cells). With the same frozen model, the maintained store equals
     a from-scratch ``ivf_build_store`` of the final corpus — pinned by
     tests and the ``ann_ivf_incremental`` query."""
-    import os as _os
-    import shutil as _shutil
-
-    cells, mat = model if model is not None else ivf_model_load(path)
-    attrs = list(attr_cols or [])  # filtered stores carry these inline
-    up = assign_cells_projection(
-        upserts.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            *[F.col(c) for c in attrs],
-            F.col(vec_col).alias("v"),
-        ),
-        cells,
-        mat,
-        normalize=True,
-    ).drop("v")
-    # one eager materialization of the churn-sized encoded upserts: the
-    # relation feeds cell discovery, the merge anti-join probe and the
-    # union — without it the Arrow assign projection re-runs per action
-    up = up.localCheckpoint(eager=True)
-    dels = delete_ids.select(
-        F.col(id_col).alias("neighbor_id")
-    ).distinct()
-    back = spark.read.parquet(path)
-    # affected = NEW cells of upserts ∪ CURRENT cells of every touched
-    # id (deletes AND upserts): an UPDATE whose re-embedded vector
-    # lands in a different frozen-centroid cell must rewrite its OLD
-    # cell too, or the stale row survives there and the id serves from
-    # two cells (r10 ADVICE #2). Both cell sets ride ONE union-distinct
-    # job (bounded ≤ 2·n_cells rows) — they were two separate collects.
-    touched = dels.unionByName(up.select("neighbor_id")).distinct()
-    affected = sorted(
-        int(r["cell"])
-        for r in up.select("cell")
-        .unionByName(
-            back.join(touched, "neighbor_id", "left_semi").select("cell")
-        )
-        .distinct()
-        .collect()
-    )
-    if not affected:
-        return []
-    sub = back.filter(F.col("cell").isin(affected))
-    keep = ["neighbor_id", "c_vec", *attrs, "cell"]
-    merged = (
-        sub.join(up.select("neighbor_id"), "neighbor_id", "left_anti")
-        .join(dels, "neighbor_id", "left_anti")
-        .select(*keep)
-        .unionByName(up.select(*keep))
-    )
-    counts = {
-        int(r["cell"]): r["n"]
-        for r in merged.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()  # ≤ n_cells rows — bounded
-    }
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .parquet(path)
-    )
-    for c in affected:
-        if counts.get(c, 0) == 0:
-            _shutil.rmtree(
-                _os.path.join(path, f"cell={c}"), ignore_errors=True
-            )
-    return affected
+    model = model if model is not None else ivf_model_load(path)
+    encoded = _ivf_encoded(upserts, model, id_col, vec_col, attr_cols or ())
+    return cell_store.upsert(spark, encoded, delete_ids, path, id_col)
 
 
 def ivf_sync_from_tail(
@@ -1211,31 +1136,21 @@ def ivf_sync_from_tail(
     ``'skip'`` skips layout-only rewrites (and restores — compaction-
     only tables), ``'rebuild'`` wipes store+checkpoint and re-fits from
     the current snapshot; see :mod:`crocus_spark.operators._tail_sync`."""
-    import os as _os
+    from crocus_spark.operators._tail_sync import run_tail_sync
 
-    from crocus_spark.operators._tail_sync import (
-        net_effects,
-        run_tail_sync,
+    def bootstrap(ups):
+        model = collect_centroid_model(
+            ivf_fit_centroids(ups, n_cells, id_col, vec_col, seed_hash=seed_hash)
+        )
+        ivf_build_store(ups, index_path, model, id_col=id_col, vec_col=vec_col)
+
+    run_tail_sync(
+        spark, table_root, index_path, bootstrap,
+        lambda ups, dels: ivf_upsert_store(
+            spark, ups, dels, index_path, id_col=id_col, vec_col=vec_col
+        ),
+        on_rewrite, cell_store.MODEL, id_col, vec_col,
     )
-
-    def apply(batch_df, _batch_id):
-        ups, dels = net_effects(batch_df, id_col, vec_col)
-        if not _os.path.exists(_os.path.join(index_path, "_model.json")):
-            model = collect_centroid_model(
-                ivf_fit_centroids(
-                    ups, n_cells, id_col, vec_col, seed_hash=seed_hash
-                )
-            )
-            ivf_build_store(
-                ups, index_path, model, id_col=id_col, vec_col=vec_col
-            )
-        else:
-            ivf_upsert_store(
-                spark, ups, dels, index_path,
-                id_col=id_col, vec_col=vec_col,
-            )
-
-    run_tail_sync(spark, table_root, index_path, apply, on_rewrite)
 
 
 # ---------------------------------------------------------------------------
@@ -1243,42 +1158,28 @@ def ivf_sync_from_tail(
 # ---------------------------------------------------------------------------
 
 
-def pq_model_save(path: str, codebook) -> None:
-    """Persist the PQ codebook beside the store as ``_model.json``
-    (floats repr-round-trip exactly, same contract as ivf_model_save)."""
-    import json as _json
-    import os as _os
-
+def _pq_model_body(codebook) -> dict:
     m, ksub, ds = codebook.shape
-    tmp = _os.path.join(path, "_model.json.tmp.%d" % _os.getpid())
-    _os.makedirs(path, exist_ok=True)
-    with open(tmp, "w") as f:
-        _json.dump(
-            {
-                "m": int(m),
-                "ksub": int(ksub),
-                "ds": int(ds),
-                "codebook": [
-                    [[float(x) for x in c] for c in s] for s in codebook
-                ],
-            },
-            f,
-        )
-    _os.replace(tmp, _os.path.join(path, "_model.json"))
+    return {
+        "m": int(m),
+        "ksub": int(ksub),
+        "ds": int(ds),
+        "codebook": [[[float(x) for x in c] for c in s] for s in codebook],
+    }
 
 
-def pq_model_load(path: str):
-    """Load the frozen codebook written by :func:`pq_model_save`."""
-    import json as _json
-    import os as _os
-
+def _pq_codebook(d):
     import numpy as _np
 
-    with open(_os.path.join(path, "_model.json")) as f:
-        d = _json.load(f)
     cb = _np.array(d["codebook"], dtype=_np.float64)
     assert cb.shape == (d["m"], d["ksub"], d["ds"])
     return cb
+
+
+def pq_model_load(path: str):
+    """Load the frozen codebook ``pq_build_store`` writes beside the
+    store as ``_model.json``."""
+    return _pq_codebook(cell_store.load_json(path, cell_store.MODEL))
 
 
 def pq_encode_batch(V, codebook):
@@ -1294,46 +1195,68 @@ def pq_encode_batch(V, codebook):
     return d2.argmin(-1).astype(_np.uint8)
 
 
-def _pq_encoded(corpus: DataFrame, codebook, n_cells: int,
-                id_col: str, vec_col: str) -> DataFrame:
-    """(neighbor_id, c_vec raw, code binary, cell) — cell is the
-    deterministic hash shard (pmod(xxhash64(id), n_cells), the HNSW
-    shard rule): PQ has no centroid geometry to partition by, the cells
-    exist so UPKEEP rewrites only churn-affected directories."""
+def _pq_encoded(
+    corpus: DataFrame, codebook, id_col: str, vec_col: str,
+    n_cells: int = 0, model=None, attr_cols=(),
+) -> DataFrame:
+    """(neighbor_id, c_vec raw, code binary, [attrs...,] cell) in ONE
+    Arrow pass: normalize (the shared dim-ordered fold), PQ-encode the
+    normalized vector under the frozen codebook. With an IVF ``model``
+    (IVFPQ) the cell is the frozen coarse centroid (argmax dot,
+    first-max ties); without one (PQ) it is the deterministic hash
+    shard pmod(xxhash64(id), n_cells), the HNSW shard rule: PQ has no
+    centroid geometry to partition by, the cells exist so UPKEEP
+    rewrites only churn-affected directories. ``attr_cols`` ride
+    through untouched — the filtered-serve store shape."""
     import pandas as pd  # noqa: PLC0415
 
     spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast(codebook)
+    attrs = list(attr_cols)
+    attr_schema = ""
+    if attrs:
+        sub = corpus.select(*attrs).schema
+        attr_schema = "".join(
+            f", {f.name} {f.dataType.simpleString()}" for f in sub.fields
+        )
+    bc = spark.sparkContext.broadcast((model, codebook))
 
     def fn(batches):
         import numpy as np
 
-        cb = bc.value
+        model_, cb = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.array(list(pdf["_nv"]), dtype=np.float64)
-            codes = pq_encode_batch(V, cb)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf["neighbor_id"],
-                    "c_vec": pdf["c_vec"],
-                    "code": [c.tobytes() for c in codes],
-                    "cell": pdf["cell"],
-                }
-            )
+            V = _unit_rows(np.vstack(pdf["_v"].to_numpy()).astype(np.float64))
+            out = {
+                "neighbor_id": pdf["neighbor_id"],
+                "c_vec": pdf["c_vec"],
+                "code": [c.tobytes() for c in pq_encode_batch(V, cb)],
+            }
+            for a in attrs:
+                out[a] = pdf[a]
+            if model_ is None:
+                out["cell"] = pdf["cell"]
+            else:
+                out["cell"] = _nearest_cells(V, *model_).astype("int32")
+            yield pd.DataFrame(out)
 
-    prepared = corpus.select(
+    cols = [
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
-        _norm_vec(F.col(vec_col)).alias("_nv"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_cells))
-        .cast("int")
-        .alias("cell"),
-    )
-    return prepared.mapInPandas(
+        *[F.col(c) for c in attrs],
+        F.col(vec_col).alias("_v"),
+    ]
+    if model is None:
+        cols.append(
+            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_cells))
+            .cast("int")
+            .alias("cell")
+        )
+    return corpus.select(*cols).mapInPandas(
         fn,
-        "neighbor_id long, c_vec array<float>, code binary, cell int",
+        "neighbor_id long, c_vec array<float>, code binary"
+        + attr_schema + ", cell int",
     )
 
 
@@ -1348,10 +1271,11 @@ def pq_build_store(
     """Write the cell-partitioned PQ code store (codes + raw vectors for
     the exact re-rank) under a FROZEN codebook, model persisted beside
     it — the build half of the maintained index."""
-    _pq_encoded(corpus, codebook, n_cells, id_col, vec_col).write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(path)
-    pq_model_save(path, codebook)
+    cell_store.build(
+        _pq_encoded(corpus, codebook, id_col, vec_col, n_cells=n_cells),
+        path,
+        [(cell_store.MODEL, _pq_model_body(codebook))],
+    )
 
 
 def pq_upsert_store(
@@ -1373,57 +1297,9 @@ def pq_upsert_store(
     frozen codebook the maintained store EQUALS a from-scratch
     ``pq_build_store`` of the final corpus (same encode path ⇒ same
     codes), pinned by the ``ann_pq_incremental`` query."""
-    import os as _os
-    import shutil as _shutil
-
     cb = codebook if codebook is not None else pq_model_load(path)
-    # churn-sized; materialized once — feeds cell discovery, the merge
-    # probe and the union (the PQ encode would otherwise run per action)
-    up = _pq_encoded(upserts, cb, n_cells, id_col, vec_col).localCheckpoint(
-        eager=True
-    )
-    dels = delete_ids.select(
-        F.col(id_col).alias("neighbor_id")
-    ).distinct()
-    back = spark.read.parquet(path)
-    # hash cells never move on update, so affected = hash cells of
-    # upserts ∪ current cells of deleted ids — ONE union-distinct job
-    affected = sorted(
-        int(r["cell"])
-        for r in up.select("cell")
-        .unionByName(
-            back.join(dels, "neighbor_id", "left_semi").select("cell")
-        )
-        .distinct()
-        .collect()
-    )
-    if not affected:
-        return []
-    sub = back.filter(F.col("cell").isin(affected))
-    merged = (
-        sub.join(up.select("neighbor_id"), "neighbor_id", "left_anti")
-        .join(dels, "neighbor_id", "left_anti")
-        .select("neighbor_id", "c_vec", "code", "cell")
-        .unionByName(up.select("neighbor_id", "c_vec", "code", "cell"))
-    )
-    counts = {
-        int(r["cell"]): r["n"]
-        for r in merged.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()  # ≤ n_cells rows — bounded
-    }
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .parquet(path)
-    )
-    for c in affected:
-        if counts.get(c, 0) == 0:
-            _shutil.rmtree(
-                _os.path.join(path, f"cell={c}"), ignore_errors=True
-            )
-    return affected
+    encoded = _pq_encoded(upserts, cb, id_col, vec_col, n_cells=n_cells)
+    return cell_store.upsert(spark, encoded, delete_ids, path, id_col)
 
 
 def pq_topk_at_rest(
@@ -1440,79 +1316,15 @@ def pq_topk_at_rest(
     against the stored raw vectors under the brute-force cosine/rounding
     contract. Same LUT/score arithmetic as ``pq_topk``, so two stores
     with identical codes serve identical rows."""
-    import numpy as np
-    import pandas as pd  # noqa: PLC0415
-
     cb = codebook if codebook is not None else pq_model_load(path)
-    m, ksub, ds = cb.shape
-    q_rows = (
-        queries.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_vec"),
-            _norm_vec(F.col("embedding")).alias("qn"),
-        )
-        .orderBy("query_id")
-        .collect()
-    )
-    q_ids = [r.query_id for r in q_rows]
-    Q = np.array([r.qn for r in q_rows], dtype=np.float64)
-    lut = np.einsum("qsd,skd->qsk", Q.reshape(len(q_ids), m, ds), cb)
-    bc_lut = spark.sparkContext.broadcast((q_ids, lut))
-
-    def adc_scan(batches):
-        ids, lut_v = bc_lut.value
-        rng = np.arange(m)
-        for pdf in batches:
-            B = len(pdf)
-            if not B:
-                continue
-            codes = np.frombuffer(
-                b"".join(pdf["code"]), dtype=np.uint8
-            ).reshape(B, m)
-            out_id, out_q, out_adc = [], [], []
-            for qi in range(len(ids)):
-                out_id.append(pdf["neighbor_id"].to_numpy())
-                out_q.append(np.full(B, ids[qi], dtype=np.int64))
-                out_adc.append(lut_v[qi][rng, codes].sum(1))
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": np.concatenate(out_id),
-                    "query_id": np.concatenate(out_q),
-                    "adc": np.concatenate(out_adc),
-                }
-            )
-
+    q_ids, Q = _normed_queries(queries, "vec_id", "embedding")
     store = spark.read.parquet(path)
-    scanned = store.select("neighbor_id", "code").mapInPandas(
-        adc_scan, schema="neighbor_id long, query_id long, adc double"
+    candidates = _adc_candidates(
+        spark, store.select("neighbor_id", "code"), q_ids, Q, cb, refine
     )
-    w_c = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id")
-    )
-    candidates = (
-        scanned.withColumn("crank", F.row_number().over(w_c))
-        .filter(F.col("crank") <= refine)
-        .select("query_id", "neighbor_id")
-    )
-    c_vecs = store.select("neighbor_id", F.col("c_vec"))
-    q_vecs = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_vec"),
-    )
-    rescored = (
-        candidates.join(c_vecs, "neighbor_id")
-        .join(F.broadcast(q_vecs), "query_id")
-        .withColumn(
-            "cos", F.round(cosine_batch(F.col("q_vec"), F.col("c_vec")), 6)
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
+    return _rerank(
+        candidates, store.select("neighbor_id", "c_vec"), queries, k,
+        "vec_id", "embedding",
     )
 
 
@@ -1535,30 +1347,22 @@ def pq_sync_from_tail(
     effects and re-encodes/rewrites only churn-affected hash cells.
     Checkpoint at the sibling ``{index_path}_ckpt`` path; ``on_rewrite``
     as in :mod:`crocus_spark.operators._tail_sync`."""
-    import os as _os
+    from crocus_spark.operators._tail_sync import run_tail_sync
 
-    from crocus_spark.operators._tail_sync import (
-        net_effects,
-        run_tail_sync,
+    def bootstrap(ups):
+        cb = pq_fit_codebook(ups, m=m, ksub=ksub, id_col=id_col, vec_col=vec_col)
+        pq_build_store(
+            ups, index_path, cb, n_cells=n_cells, id_col=id_col, vec_col=vec_col
+        )
+
+    run_tail_sync(
+        spark, table_root, index_path, bootstrap,
+        lambda ups, dels: pq_upsert_store(
+            spark, ups, dels, index_path, n_cells=n_cells,
+            id_col=id_col, vec_col=vec_col,
+        ),
+        on_rewrite, cell_store.MODEL, id_col, vec_col,
     )
-
-    def apply(batch_df, _batch_id):
-        ups, dels = net_effects(batch_df, id_col, vec_col)
-        if not _os.path.exists(_os.path.join(index_path, "_model.json")):
-            cb = pq_fit_codebook(
-                ups, m=m, ksub=ksub, id_col=id_col, vec_col=vec_col
-            )
-            pq_build_store(
-                ups, index_path, cb, n_cells=n_cells,
-                id_col=id_col, vec_col=vec_col,
-            )
-        else:
-            pq_upsert_store(
-                spark, ups, dels, index_path, n_cells=n_cells,
-                id_col=id_col, vec_col=vec_col,
-            )
-
-    run_tail_sync(spark, table_root, index_path, apply, on_rewrite)
 
 
 # ---------------------------------------------------------------------------
@@ -1569,68 +1373,6 @@ def pq_sync_from_tail(
 # 256-byte vectors inside them (ADC), with the exact re-rank touching
 # only refine·|queries| raw vectors.
 # ---------------------------------------------------------------------------
-
-
-def _ivfpq_encoded(
-    corpus: DataFrame, cells, mat, codebook,
-    id_col: str, vec_col: str,
-    attr_cols: list[str] | None = None,
-) -> DataFrame:
-    """(neighbor_id, c_vec raw, code binary, [attrs...,] cell) in ONE
-    Arrow pass: normalize (the shared dim-ordered fold), coarse-assign
-    to the frozen IVF centroid (argmax dot, first-max ties), PQ-encode
-    the normalized vector under the frozen codebook. ``attr_cols`` ride
-    through untouched — the filtered-serve store shape."""
-    import pandas as pd  # noqa: PLC0415
-
-    spark = corpus.sparkSession
-    attrs = list(attr_cols or [])
-    attr_schema = ""
-    if attrs:
-        sub = corpus.select(*attrs).schema
-        attr_schema = "".join(
-            f", {f.name} {f.dataType.simpleString()}" for f in sub.fields
-        )
-    bc = spark.sparkContext.broadcast((cells, mat, codebook))
-
-    def fn(batches):
-        import numpy as np
-
-        cl, m_, cb = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
-            acc = np.zeros(V.shape[0])
-            for i in range(V.shape[1]):
-                x = V[:, i]
-                acc = acc + x * x
-            Vn = V / np.sqrt(acc)[:, None]
-            D = np.zeros((Vn.shape[0], m_.shape[0]))
-            for i in range(Vn.shape[1]):
-                D = D + Vn[:, i : i + 1] * m_[None, :, i]
-            codes = pq_encode_batch(Vn, cb)
-            out = {
-                "neighbor_id": pdf["neighbor_id"],
-                "c_vec": pdf["c_vec"],
-                "code": [c.tobytes() for c in codes],
-            }
-            for a in attrs:
-                out[a] = pdf[a]
-            out["cell"] = cl[np.argmax(D, axis=1)].astype("int32")
-            yield pd.DataFrame(out)
-
-    prepared = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        *[F.col(c) for c in attrs],
-        F.col(vec_col).alias("_v"),
-    )
-    return prepared.mapInPandas(
-        fn,
-        "neighbor_id long, c_vec array<float>, code binary"
-        + attr_schema + ", cell int",
-    )
 
 
 def ivfpq_build_store(
@@ -1645,40 +1387,21 @@ def ivfpq_build_store(
     """Write the IVFPQ store: PQ codes + raw vectors partitioned by the
     frozen coarse cell; both frozen models persisted beside it
     (``_model.json`` = IVF centroids, ``_pq_model.json`` = codebook)."""
-    import json as _json
-    import os as _os
-
-    cells, mat = model
-    _ivfpq_encoded(
-        corpus, cells, mat, codebook, id_col, vec_col, attr_cols
-    ).write.mode("overwrite").partitionBy("cell").parquet(path)
-    ivf_model_save(path, cells, mat)
-    m, ksub, ds = codebook.shape
-    tmp = _os.path.join(path, "_pq_model.json.tmp.%d" % _os.getpid())
-    with open(tmp, "w") as f:
-        _json.dump(
-            {
-                "m": int(m), "ksub": int(ksub), "ds": int(ds),
-                "codebook": [
-                    [[float(x) for x in c] for c in s] for s in codebook
-                ],
-            },
-            f,
-        )
-    _os.replace(tmp, _os.path.join(path, "_pq_model.json"))
+    cell_store.build(
+        _pq_encoded(
+            corpus, codebook, id_col, vec_col, model=model,
+            attr_cols=attr_cols or (),
+        ),
+        path,
+        [_ivf_model_file(*model), (cell_store.PQ_MODEL, _pq_model_body(codebook))],
+    )
 
 
 def ivfpq_model_load(path: str):
     """(ivf (cells, mat), pq codebook) frozen beside an IVFPQ store."""
-    import json as _json
-    import os as _os
-
-    import numpy as _np
-
-    with open(_os.path.join(path, "_pq_model.json")) as f:
-        d = _json.load(f)
-    cb = _np.array(d["codebook"], dtype=_np.float64)
-    return ivf_model_load(path), cb
+    return ivf_model_load(path), _pq_codebook(
+        cell_store.load_json(path, cell_store.PQ_MODEL)
+    )
 
 
 def ivfpq_topk_at_rest(
@@ -1699,79 +1422,23 @@ def ivfpq_topk_at_rest(
     code, not a float), exact cosine re-rank of the top ``refine``
     candidates against the stored raw vectors."""
     import numpy as np
-    import pandas as pd  # noqa: PLC0415
 
-    (cells, mat), cb = ivfpq_model_load(path)
-    m, ksub, ds = cb.shape
-    centroids = _centroid_df(spark, cells, mat)
-    q_normed = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm_vec(F.col(vec_col)).alias("qn"),
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("q_dot"), F.col("cell")
-    )
-    probes = (
-        q_normed.crossJoin(F.broadcast(centroids))
-        .withColumn("q_dot", dot_batch(F.col("qn"), F.col("centroid")))
-        .withColumn("probe_rank", F.row_number().over(w_probe))
-        .filter(F.col("probe_rank") <= nprobe)
+    model, cb = ivfpq_model_load(path)
+    plist = (
+        _probes(queries, model, id_col, vec_col, nprobe)
         .select("query_id", "qn", "cell")
+        .collect()
     )
-    plist = probes.select("query_id", "qn", "cell").collect()
     probe_cells = sorted({r.cell for r in plist})  # pruning literal
     q_rows = sorted({(r.query_id, tuple(r.qn)) for r in plist})
     q_ids = [q for q, _ in q_rows]
     Q = np.array([list(v) for _, v in q_rows], dtype=np.float64)
-    lut = np.einsum("qsd,skd->qsk", Q.reshape(len(q_ids), m, ds), cb)
-    cell_of = {}
-    for r in plist:
-        cell_of.setdefault(int(r.cell), set()).add(r.query_id)
-    bc = spark.sparkContext.broadcast((q_ids, lut, cell_of))
-
-    # invert cell→queries to query→cells once (bounded: ≤ nprobe ints
-    # per query), so the scan masks with a vectorized np.isin instead
-    # of a per-row Python membership test
+    # query → probed cells (bounded: ≤ nprobe ints per query), so the
+    # scan masks with a vectorized np.isin instead of a per-row Python
+    # membership test
     cells_of_q: dict = {}
-    for c, qs in cell_of.items():
-        for q in qs:
-            cells_of_q.setdefault(q, []).append(c)
-    bc_cells = spark.sparkContext.broadcast(cells_of_q)
-
-    def adc_scan(batches):
-        ids, lut_v, _cells_map = bc.value
-        pos = {q: i for i, q in enumerate(ids)}
-        rng = np.arange(m)
-        for pdf in batches:
-            B = len(pdf)
-            if not B:
-                continue
-            codes = np.frombuffer(
-                b"".join(pdf["code"]), dtype=np.uint8
-            ).reshape(B, m)
-            cellcol = pdf["cell"].to_numpy()
-            out_id, out_q, out_adc = [], [], []
-            # score each query only against ITS probed cells
-            for qid in ids:
-                mask = np.isin(
-                    cellcol, bc_cells.value.get(qid, [])
-                )
-                if not mask.any():
-                    continue
-                sub = codes[mask]
-                out_id.append(pdf["neighbor_id"].to_numpy()[mask])
-                out_q.append(np.full(sub.shape[0], qid, dtype=np.int64))
-                out_adc.append(lut_v[pos[qid]][rng, sub].sum(1))
-            if not out_id:
-                continue
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": np.concatenate(out_id),
-                    "query_id": np.concatenate(out_q),
-                    "adc": np.concatenate(out_adc),
-                }
-            )
+    for r in plist:
+        cells_of_q.setdefault(r.query_id, []).append(int(r.cell))
 
     store = spark.read.parquet(path).filter(
         F.col("cell").isin(probe_cells)
@@ -1781,35 +1448,13 @@ def ivfpq_topk_at_rest(
         # BEFORE any ADC work — pushed into the probed cells' parquet
         # scan, so non-matching codes are never read or scored
         store = store.filter(F.expr(predicate))
-    scanned = store.select("neighbor_id", "code", "cell").mapInPandas(
-        adc_scan, schema="neighbor_id long, query_id long, adc double"
+    candidates = _adc_candidates(
+        spark, store.select("neighbor_id", "code", "cell"), q_ids, Q, cb,
+        refine, cells_of_q=cells_of_q,
     )
-    w_c = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id")
-    )
-    candidates = (
-        scanned.withColumn("crank", F.row_number().over(w_c))
-        .filter(F.col("crank") <= refine)
-        .select("query_id", "neighbor_id")
-    )
-    c_vecs = store.select("neighbor_id", "c_vec")
-    q_vecs = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    rescored = (
-        candidates.join(c_vecs, "neighbor_id")
-        .join(F.broadcast(q_vecs), "query_id")
-        .withColumn(
-            "cos", F.round(cosine_batch(F.col("q_vec"), F.col("c_vec")), 6)
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
+    return _rerank(
+        candidates, store.select("neighbor_id", "c_vec"), queries, k,
+        id_col, vec_col,
     )
 
 
@@ -1826,60 +1471,9 @@ def ivfpq_upsert_store(
     churn-affected coarse cells — the same dynamic-partition-overwrite
     merge as ``pq_upsert_store`` with the cell coming from the frozen
     centroid assignment instead of the id hash."""
-    import os as _os
-    import shutil as _shutil
-
-    (cells, mat), cb = ivfpq_model_load(path)
-    # churn-sized; materialized once — the double-encode (coarse assign
-    # + PQ codes) would otherwise re-run for every downstream action
-    up = _ivfpq_encoded(
-        upserts, cells, mat, cb, id_col, vec_col
-    ).localCheckpoint(eager=True)
-    dels = delete_ids.select(
-        F.col(id_col).alias("neighbor_id")
-    ).distinct()
-    back = spark.read.parquet(path)
-    # affected must include the CURRENT cells of upserted ids too — an
-    # UPDATE that moves an id to a different frozen-centroid cell has
-    # to rewrite (and anti-join out of) its old cell (r10 ADVICE #2).
-    # Both cell sets ride ONE union-distinct job (bounded ≤ 2·n_cells).
-    touched = dels.unionByName(up.select("neighbor_id")).distinct()
-    affected = sorted(
-        int(r["cell"])
-        for r in up.select("cell")
-        .unionByName(
-            back.join(touched, "neighbor_id", "left_semi").select("cell")
-        )
-        .distinct()
-        .collect()
-    )
-    if not affected:
-        return []
-    sub = back.filter(F.col("cell").isin(affected))
-    merged = (
-        sub.join(up.select("neighbor_id"), "neighbor_id", "left_anti")
-        .join(dels, "neighbor_id", "left_anti")
-        .select("neighbor_id", "c_vec", "code", "cell")
-        .unionByName(up.select("neighbor_id", "c_vec", "code", "cell"))
-    )
-    counts = {
-        int(r["cell"]): r["n"]
-        for r in merged.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()  # ≤ n_cells rows — bounded
-    }
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .parquet(path)
-    )
-    for c in affected:
-        if counts.get(c, 0) == 0:
-            _shutil.rmtree(
-                _os.path.join(path, f"cell={c}"), ignore_errors=True
-            )
-    return affected
+    model, cb = ivfpq_model_load(path)
+    encoded = _pq_encoded(upserts, cb, id_col, vec_col, model=model)
+    return cell_store.upsert(spark, encoded, delete_ids, path, id_col)
 
 
 def ivfpq_sync_from_tail(
@@ -1900,31 +1494,21 @@ def ivfpq_sync_from_tail(
     persisted beside the store); later batches re-encode per-key net
     effects and rewrite only churn-affected coarse cells. Checkpoint at
     ``{index_path}_ckpt``; ``on_rewrite`` as in operators/_tail_sync."""
-    import os as _os
+    from crocus_spark.operators._tail_sync import run_tail_sync
 
-    from crocus_spark.operators._tail_sync import (
-        net_effects,
-        run_tail_sync,
+    def bootstrap(ups):
+        model = collect_centroid_model(
+            ivf_fit_centroids(ups, n_cells, id_col, vec_col, seed_hash=seed_hash)
+        )
+        cb = pq_fit_codebook(ups, m=m, ksub=ksub, id_col=id_col, vec_col=vec_col)
+        ivfpq_build_store(
+            ups, index_path, model, cb, id_col=id_col, vec_col=vec_col
+        )
+
+    run_tail_sync(
+        spark, table_root, index_path, bootstrap,
+        lambda ups, dels: ivfpq_upsert_store(
+            spark, ups, dels, index_path, id_col=id_col, vec_col=vec_col
+        ),
+        on_rewrite, cell_store.PQ_MODEL, id_col, vec_col,
     )
-
-    def apply(batch_df, _batch_id):
-        ups, dels = net_effects(batch_df, id_col, vec_col)
-        if not _os.path.exists(_os.path.join(index_path, "_pq_model.json")):
-            model = collect_centroid_model(
-                ivf_fit_centroids(
-                    ups, n_cells, id_col, vec_col, seed_hash=seed_hash
-                )
-            )
-            cb = pq_fit_codebook(
-                ups, m=m, ksub=ksub, id_col=id_col, vec_col=vec_col
-            )
-            ivfpq_build_store(
-                ups, index_path, model, cb, id_col=id_col, vec_col=vec_col
-            )
-        else:
-            ivfpq_upsert_store(
-                spark, ups, dels, index_path,
-                id_col=id_col, vec_col=vec_col,
-            )
-
-    run_tail_sync(spark, table_root, index_path, apply, on_rewrite)

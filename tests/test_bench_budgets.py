@@ -39,6 +39,29 @@ def test_budgets_only_apply_at_calibrated_sf():
     assert bench.check_budgets({name: budget * 5}, 0.01) == []
 
 
+def test_non_numeric_scaling_probe_fails_before_any_query(monkeypatch):
+    """A non-numeric ``$SPARK_GRAFT_SCALING_PROBE`` stops bench.main
+    with a message naming the variable BEFORE the registry loads or a
+    session starts — not after the five-pass suite, with no JSON line
+    printed."""
+    import pytest
+
+    bench = _load()
+
+    def too_late(*_a, **_k):
+        raise AssertionError("bench ran past the probe check")
+
+    monkeypatch.setattr(bench, "queries", too_late)
+    monkeypatch.setattr(bench, "get_spark", too_late)
+    monkeypatch.setenv("SPARK_GRAFT_SCALING_PROBE", "lots")
+    with pytest.raises(SystemExit, match="SPARK_GRAFT_SCALING_PROBE.*'lots'"):
+        bench.main()
+    monkeypatch.setenv("SPARK_GRAFT_SCALING_PROBE", "4")
+    assert bench._scaling_probe_mult() == 4
+    monkeypatch.delenv("SPARK_GRAFT_SCALING_PROBE")
+    assert bench._scaling_probe_mult() == 0
+
+
 def test_budget_file_covers_every_headline_query():
     spec = json.loads((REPO / "bench_budgets.json").read_text())
     from crocus_spark.queries import REGISTRY, queries

@@ -721,6 +721,93 @@ def test_tail_sync_on_rewrite_policies(emb, tmp_path):
         hnsw_sync_from_tail(spark, table, idx2, n_shards=4, on_rewrite="nope")
 
 
+def _ivf_store_rows(spark, path):
+    return sorted(
+        (int(r.neighbor_id), int(r.cell))
+        for r in spark.read.parquet(path).select("neighbor_id", "cell").collect()
+    )
+
+
+def test_ivf_tail_sync_rebuilds_across_compaction(emb, tmp_path):
+    """Fast-lane case of the on_rewrite policy the shared drain owns
+    (the full three-policy matrix is the slow
+    test_tail_sync_on_rewrite_policies): a compaction under a live IVF
+    sync makes on_rewrite='rebuild' re-bootstrap from the current
+    snapshot, the checkpoint it leaves picks up the next delta, and the
+    maintained store equals a same-model rebuild of the final table."""
+    from crocus_spark.operators.maintenance import (
+        commit_append,
+        commit_snapshot,
+        compact_snapshot,
+        read_snapshot,
+    )
+    from crocus_spark.operators.similarity import (
+        ivf_build_store,
+        ivf_model_load,
+        ivf_sync_from_tail,
+    )
+
+    spark = emb.sparkSession
+    vecs = emb.select("vec_id", "embedding")
+    table, idx = str(tmp_path / "table"), str(tmp_path / "idx")
+    commit_snapshot(vecs.filter(F.col("vec_id") < 60).coalesce(4), table)
+    ivf_sync_from_tail(spark, table, idx, n_cells=4)  # bootstrap at v0
+    compact_snapshot(spark, table, target_file_bytes=1 << 20)  # v1 rewrite
+    ivf_sync_from_tail(spark, table, idx, n_cells=4, on_rewrite="rebuild")
+    assert {n for n, _c in _ivf_store_rows(spark, idx)} == set(range(60))
+    more = vecs.filter((F.col("vec_id") >= 60) & (F.col("vec_id") < 70))
+    commit_append(more.coalesce(1), table)  # v2
+    ivf_sync_from_tail(spark, table, idx, n_cells=4, on_rewrite="rebuild")
+    got = _ivf_store_rows(spark, idx)
+    assert {n for n, _c in got} == set(range(70))
+    ref = str(tmp_path / "ref")
+    ivf_build_store(read_snapshot(spark, table), ref, ivf_model_load(idx))
+    assert got == _ivf_store_rows(spark, ref)
+
+
+def test_ivf_tail_sync_releases_batch_checkpoints(emb, tmp_path):
+    """Each micro-batch's checkpoints (its net effects and the encoded
+    upserts) are released once the batch is applied: across a bootstrap
+    and three delta batches — appends, a delete and an in-place update —
+    the session's persisted-RDD count returns to its pre-sync value
+    after every sync, so a long-running tail holds no per-batch
+    blocks."""
+    from crocus_spark.operators.maintenance import (
+        commit_append,
+        commit_equality_deletes,
+        commit_snapshot,
+    )
+    from crocus_spark.operators.similarity import ivf_sync_from_tail
+
+    spark = emb.sparkSession
+    jsc = spark.sparkContext._jsc
+    vecs = emb.select("vec_id", "embedding")
+    vecs.count()  # the cached fixture's own blocks exist before the count
+    table, idx = str(tmp_path / "table"), str(tmp_path / "idx")
+    commit_snapshot(vecs.filter(F.col("vec_id") < 40).coalesce(2), table)
+    before = jsc.getPersistentRDDs().size()
+    ivf_sync_from_tail(spark, table, idx, n_cells=4)
+    assert jsc.getPersistentRDDs().size() == before
+    deltas = [
+        lambda: commit_append(
+            vecs.filter(F.col("vec_id").between(40, 49)).coalesce(1), table
+        ),
+        lambda: commit_equality_deletes(
+            spark.createDataFrame([(3,), (41,)], "vec_id long"), table, ["vec_id"]
+        ),
+        lambda: commit_append(spark.createDataFrame(
+            [(5, vecs.filter(F.col("vec_id") == 7).first()["embedding"])],
+            "vec_id long, embedding array<float>",
+        ), table),
+    ]
+    for commit in deltas:
+        commit()
+        ivf_sync_from_tail(spark, table, idx, n_cells=4)
+        assert jsc.getPersistentRDDs().size() == before
+    ids = [n for n, _c in _ivf_store_rows(spark, idx)]
+    assert sorted(ids) == sorted(set(range(50)) - {3, 41})
+
+
 def test_pq_upsert_edge_cases(emb, tmp_path):
     """PQ store upkeep edges: deleting EVERY member of a cell drops its
     directory (dynamic overwrite alone would leave it), an in-place

@@ -332,6 +332,12 @@ def test_search_pushes_term_filter_into_postings(spark, registry):
         "query no longer reads the checkpointed postings — re-pin the "
         "term-filter assertion on the full query plan"
     )
+    # ...and the checkpointed helper output is the ONLY postings source:
+    # a Generate (the token explode) anywhere in the query plan means a
+    # corpus-wide tokenize runs beside the RDD scan, bypassing the
+    # helper's term filter
+    tokenizes = [l.strip()[:120] for l in qplan.splitlines() if "Generate" in l]
+    assert not tokenizes, tokenizes
 
 
 def test_null_safe_join_is_hash_join(spark, registry):
@@ -968,6 +974,30 @@ DOUBLED_UDF_ALLOWLIST: dict[str, str] = {
 }
 
 
+def _udf_list(node: str) -> list[str] | None:
+    """The UDF calls of an eval node's FIRST bracket group, split on
+    TOP-LEVEL commas only. Depth-aware over ``()`` and ``[]``: argument
+    lists nest arbitrarily (``encode(doc_id, (doc_id % 40))``) and may
+    hold their own brackets (``f(v#1[0], x#2)``), so neither a comma
+    nor a ``]`` inside a call ends it. None when the group never
+    closes."""
+    start = node.find("[")
+    if start < 0:
+        return None
+    parts, depth, cur = [], 0, []
+    for ch in node[start + 1:]:
+        if depth == 0 and ch in ",]":
+            parts.append("".join(cur))
+            if ch == "]":
+                return parts
+            cur = []
+            continue
+        depth += ch in "(["
+        depth -= ch in ")]"
+        cur.append(ch)
+    return None
+
+
 def _doubled_python_udfs(plan: str) -> dict[str, int]:
     """Python UDF calls evaluated by MORE than one eval node in one
     physical plan. The optimizer's filter pushdown can duplicate a UDF
@@ -986,21 +1016,9 @@ def _doubled_python_udfs(plan: str) -> dict[str, int]:
         ):
             continue
         # node text: ArrowEvalPython [f(col#1)#2, g(col#3)#4], [...], 200
-        m = _re.search(r"\[(.*?)\](?=,)", stripped)
-        if not m:
+        parts = _udf_list(stripped)
+        if parts is None:
             continue
-        # split the UDF list on TOP-LEVEL commas only (argument lists
-        # nest arbitrarily: encode(doc_id, (doc_id % 40)))
-        parts, depth, cur = [], 0, []
-        for ch in m.group(1):
-            if ch == "," and depth == 0:
-                parts.append("".join(cur))
-                cur = []
-                continue
-            depth += ch == "("
-            depth -= ch == ")"
-            cur.append(ch)
-        parts.append("".join(cur))
         for call in parts:
             sig = _re.sub(r"#\d+", "", call).strip()
             if sig:
@@ -1061,6 +1079,29 @@ def test_doubled_udf_detector_catches_pushed_filter_duplication(spark):
     assert not _doubled_python_udfs(plan), (
         "detector flagged the single-evaluation (fixed) shape"
     )
+
+
+def test_doubled_udf_detector_reads_brackets_inside_udf_arguments():
+    """A ``]`` inside a UDF argument (array indexing, an array literal)
+    must not end the UDF list: a doubled call that follows it in the
+    node is still counted, and calls that differ only after it are
+    still told apart. A first-``],`` regex truncates both lines below
+    to ``score(v[0``: it misses the doubled call in the first plan and
+    invents one in the second."""
+    doubled = (
+        "ArrowEvalPython [score(v#1[0], v#1)#5], [pythonUDF0#9], 200\n"
+        "+- ArrowEvalPython [rank(v#1[1], v#1)#6, score(v#1[0], v#1)#7],"
+        " [pythonUDF1#10, pythonUDF2#11], 200\n"
+    )
+    assert _doubled_python_udfs(doubled) == {"score(v[0], v)": 2}
+    distinct = (
+        "ArrowEvalPython [score(v#1[0], a#2)#5], [pythonUDF0#9], 200\n"
+        "+- ArrowEvalPython [score(v#1[0], b#3)#6], [pythonUDF1#10], 200\n"
+    )
+    assert _doubled_python_udfs(distinct) == {}
+    assert _udf_list("ArrowEvalPython [f(g(x#1, [1, 2]))#3], [p#4], 2") == [
+        "f(g(x#1, [1, 2]))#3"
+    ]
 
 
 def test_basket_fanout_exchanges_survive_aqe(spark, registry):
