@@ -28,7 +28,7 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 from crocus_spark.queries import REGISTRY, queries  # noqa: E402
-from crocus_spark.session import get_spark  # noqa: E402
+from crocus_spark.session import get_spark, warm_python_workers  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -132,18 +132,13 @@ def main() -> None:
     spark = get_spark(app_name="crocus-bench")
     # warm-up: JVM, codegen, parquet footers — untimed
     _execute(REGISTRY["q1_pricing_summary"].fn(spark, SF_DIR))
-    # ... and the Python worker daemon, SYNCHRONOUSLY: the session's
-    # background prewarm races the first timed query, and when the
-    # daemon's one-time import chain lands inside the IVF refit window
-    # it inflates that number by 1-2 s run-to-run (r6→r7 A/B: refit
-    # measured 8.4 s once in r6, 6.5-7.3 s in four r7 re-runs; cold
-    # serve 1.83 vs 1.36-1.49). A long-lived cluster never pays this
-    # per-query; one untimed cores-wide no-op pass pins it here too.
-
-    def _noop_batches(batches):
-        yield from batches
-
-    spark.range(0, 32, 1, 32).mapInPandas(_noop_batches, "id long").count()
+    # ... and the Python worker daemon: Spark starts it on the first
+    # Python stage, and when its one-time import chain lands inside the
+    # IVF refit window it inflates that number by 1-2 s run-to-run (r6→r7
+    # A/B: refit measured 8.4 s once in r6, 6.5-7.3 s in four r7
+    # re-runs; cold serve 1.83 vs 1.36-1.49). A long-lived cluster never
+    # pays this per-query; one untimed warm-up pins it here too.
+    warm_python_workers(spark)
 
     # IVF costs measured SEPARATELY (r3 ADVICE, r4 task #6):
     # ann_ivf_topk memoizes the centroid model in-process AND persists

@@ -140,108 +140,18 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _prewarm_python_datasource(spark)
     return spark
 
 
-_PREWARMED = False
+def warm_python_workers(spark) -> None:
+    """Start the Python worker daemon now, synchronously: one cores-wide
+    no-op mapInPandas. Spark starts the daemon on the first Python stage
+    anyway; timing harnesses call this in their untimed warm-up so the
+    daemon's one-time import chain (~3.5 s) stays out of the first timed
+    query, the way a long-lived cluster never pays it per query."""
 
+    def _noop_batches(batches):
+        yield from batches
 
-def _prewarm_python_datasource(spark) -> None:
-    """Fork the Python Data Source plan/write workers in the BACKGROUND
-    at session build. The first python-datasource query in a process
-    pays a one-time ~5-7 s worker spin-up (measured: io_python_datasink
-    8.8 s first call, 1.1 s after) that a long-lived cluster amortizes
-    invisibly; warming it concurrently with the session's first real
-    work removes it from whichever query happens to run first. Daemon
-    thread, one attempt per process, failures swallowed — warming is an
-    optimization, never a correctness dependency."""
-    global _PREWARMED
-    if _PREWARMED or os.environ.get("SPARK_GRAFT_NO_PREWARM") == "1":
-        return
-    _PREWARMED = True
-
-    def warm() -> None:
-        try:
-            import shutil
-            import tempfile
-
-            from crocus_spark.sources import (
-                register_catalog_sink,
-                register_catalog_source,
-            )
-
-            # py4j thread pinning gives this thread its own JVM thread
-            # with NO active session; the write-path source lookup
-            # consults it, so pin ours or the sink format resolves as
-            # not-found (observed: reader fine, writer
-            # DATA_SOURCE_NOT_FOUND).
-            spark._jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession(
-                spark._jsparkSession
-            )
-            # Arrow pool first (pandas-UDF stages are the common case):
-            # launching any Python stage starts the worker daemon, whose
-            # one-time ~3.5 s import chain (worker_daemon.py pre-imports
-            # pandas/pyarrow/serializers once; forks are then O(ms))
-            # this hides off the first real query's wall clock. One
-            # task is enough — post-daemon forks measured 32 tasks in
-            # 0.5 s.
-            def _noop(batches):
-                yield from batches
-
-            spark.range(0, 1, 1, 1).mapInPandas(_noop, "id long").count()
-            register_catalog_source(spark)
-            register_catalog_sink(spark)
-            tiny = (
-                spark.read.format("crocus_catalog")
-                .option("n_products", 1)
-                .load()
-            )
-            out = tempfile.mkdtemp(prefix="crocus_spark_warm_")
-            try:
-                (
-                    tiny.write.format("crocus_catalog_sink")
-                    .option("path", out)
-                    .mode("append")
-                    .save()
-                )
-            finally:
-                shutil.rmtree(out, ignore_errors=True)
-            # The avro source/sink pair has its own first-use cost the
-            # catalog warm does not cover (~1.5 s measured: OCF codec
-            # import + plan-time header read machinery) and it was the
-            # most expensive untouched io query two sweeps running —
-            # round-trip one row through it here so the first real avro
-            # query starts warm.
-            from crocus_spark.sources import (
-                register_avro_sink,
-                register_avro_source,
-            )
-
-            register_avro_sink(spark)
-            register_avro_source(spark)
-            out = tempfile.mkdtemp(prefix="crocus_spark_warm_avro_")
-            try:
-                (
-                    spark.range(0, 1, 1, 1)
-                    .write.format("crocus_avro_sink")
-                    .option("path", out)
-                    .mode("append")
-                    .save()
-                )
-                (
-                    spark.read.format("crocus_avro")
-                    .option("path", out)
-                    .load()
-                    .count()
-                )
-            finally:
-                shutil.rmtree(out, ignore_errors=True)
-        except Exception:
-            pass  # pre-warm is best-effort by design
-
-    from pyspark import InheritableThread
-
-    InheritableThread(
-        target=warm, name="crocus-spark-prewarm", daemon=True
-    ).start()
+    n = spark.sparkContext.defaultParallelism
+    spark.range(0, n, 1, n).mapInPandas(_noop_batches, "id long").count()

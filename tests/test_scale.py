@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from crocus_spark.io import load
 from crocus_spark.operators import skew as K
-from tests.conftest import SF_SMOKE
+from tests.conftest import REPO, SF_SMOKE
 
 
 def _rowset(df):
@@ -523,6 +523,60 @@ def test_worker_daemon_preimports_reach_workers(spark):
         spark.range(0, 4, 1, 4).mapInPandas(probe, "hit int").collect()
     )
     assert rows and all(r["hit"] == 1 for r in rows)
+
+
+_LAZY_WORKERS_SCRIPT = r"""
+import json, os, sys, threading, time
+sys.path.insert(0, sys.argv[1])
+from pyspark import SparkContext
+from crocus_spark.session import get_spark, warm_python_workers
+
+
+def python_children(ppid):
+    found = []
+    for p in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{p}/stat") as f:
+                parent = int(f.read().rsplit(")", 1)[1].split()[1])
+            with open(f"/proc/{p}/cmdline", "rb") as f:
+                argv0 = f.read().split(b"\0")[0]
+        except OSError:
+            continue
+        if parent == ppid and os.path.basename(argv0).startswith(b"python"):
+            found.append(int(p))
+    return found
+
+
+spark = get_spark(app_name="lazy-workers")
+jvm = SparkContext._gateway.proc.pid
+time.sleep(3)
+idle = {"threads": [t.name for t in threading.enumerate()],
+        "python": python_children(jvm)}
+warm_python_workers(spark)
+print(json.dumps({"idle": idle, "used": python_children(jvm)}))
+spark.stop()
+"""
+
+
+def test_session_starts_python_workers_on_demand():
+    """A fresh session starts no background thread and the JVM starts
+    no Python process (a JVM-only workload must not carry idle
+    workers); the first Python stage then starts the worker daemon
+    synchronously."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", _LAZY_WORKERS_SCRIPT, str(REPO)],
+        capture_output=True, text=True, check=True, timeout=300, env=env,
+    )
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert "crocus-spark-prewarm" not in got["idle"]["threads"], got
+    assert got["idle"]["python"] == [], got
+    assert got["used"], got
 
 
 def test_spread_rows_floor_is_data_sized(spark):

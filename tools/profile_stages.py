@@ -19,7 +19,7 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 from crocus_spark.queries import REGISTRY, queries  # noqa: E402
-from crocus_spark.session import get_spark  # noqa: E402
+from crocus_spark.session import get_spark, warm_python_workers  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -36,11 +36,7 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
 
     _execute(REGISTRY["q1_pricing_summary"].fn(spark, SF_DIR))
-
-    def _noop_batches(batches):
-        yield from batches
-
-    spark.range(0, 32, 1, 32).mapInPandas(_noop_batches, "id long").count()
+    warm_python_workers(spark)
 
     # warm pass (codegen), then measured pass
     for _ in range(passes - 1):
