@@ -84,6 +84,7 @@ def run_tail_sync(
     checkpoint is released once it is applied, so a long-running sync
     holds no per-batch blocks."""
     from crocus_spark.sources import register_snapshot_tail_source
+    from crocus_spark.streaming.ops import drain
 
     def apply_fn(batch_df, _batch_id):
         last = net_effects(batch_df, id_col, vec_col)
@@ -104,38 +105,21 @@ def run_tail_sync(
         )
     register_snapshot_tail_source(spark)
 
-    def drain(skip: bool, starting_version: int | None = None) -> None:
-        from crocus_spark.streaming.ops import retry_transient_stream
-
-        def attempt() -> None:
-            reader = spark.readStream.format("crocus_snapshot_tail").option(
-                "path", table_root
-            )
-            if skip:
-                reader = reader.option("skip_rewrites", "true")
-            if starting_version is not None:
-                reader = reader.option(
-                    "starting_version", str(starting_version)
-                )
-            q = (
-                reader.load()
-                .writeStream.foreachBatch(apply_fn)
-                .option("checkpointLocation", index_path + "_ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        # retries ONLY the Python-worker spawn-timeout class (the tail
-        # source spawns a non-daemon runner at query init; under heavy
-        # host oversubscription the fixed 10 s connect-back window can
-        # lapse before batch 0) — the rewrite/restore markers the except
-        # below dispatches on propagate unchanged on first throw, and the
-        # checkpointed availableNow resume makes a retry exactly-once.
-        retry_transient_stream(attempt)
+    def tail(skip: bool, starting_version: int | None = None) -> None:
+        # the rewrite/restore markers dispatched on below are no worker-
+        # spawn failure, so drain's retry lets them through on first
+        # throw; a retried spawn failure resumes from the checkpoint
+        reader = spark.readStream.format("crocus_snapshot_tail").option(
+            "path", table_root
+        )
+        if skip:
+            reader = reader.option("skip_rewrites", "true")
+        if starting_version is not None:
+            reader = reader.option("starting_version", str(starting_version))
+        drain(reader.load(), apply_fn, checkpoint=index_path + "_ckpt")
 
     try:
-        drain(on_rewrite == "skip")
+        tail(on_rewrite == "skip")
     except Exception as e:
         msg = str(e)
         if on_rewrite != "rebuild" or not any(
@@ -164,4 +148,4 @@ def run_tail_sync(
             .withColumn("_version", F.lit(latest).cast("long"))
         )
         apply_fn(snapshot, -1)
-        drain(False, starting_version=latest + 1)
+        tail(False, starting_version=latest + 1)

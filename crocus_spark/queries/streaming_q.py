@@ -3,8 +3,8 @@ fixture, oracle-checked against batch SQL where the semantics are
 SQL-expressible (SURVEY §5.2.4).
 
 Every query here drives a REAL Structured Streaming query (micro-batched
-file source → stateful operators → memory sink) and returns the sink as a
-batch DataFrame for the driver's comparison.
+source → stateful operators → sink) through ``streaming.ops.drain`` and
+returns the result as a batch DataFrame to compare with the oracle.
 """
 
 from __future__ import annotations
@@ -14,9 +14,8 @@ from pyspark.sql import functions as F
 from crocus_spark.io import load, local_df
 from crocus_spark.queries import register
 from crocus_spark.streaming.ops import (
+    drain,
     read_events_stream,
-    retry_transient_stream,
-    run_available_now,
     session_window_agg,
     sliding_window_agg,
     stateful_user_totals,
@@ -24,6 +23,18 @@ from crocus_spark.streaming.ops import (
     streaming_dedup,
     tumbling_window_agg,
 )
+
+# Final per-user running totals, in integer cents: the batch oracle of
+# every stateful-totals query (both state APIs, both state stores, and the
+# streaming snapshot sink).
+_USER_TOTALS_ORACLE = """
+    SELECT user_id,
+           COUNT(*) AS n_events,
+           CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents
+    FROM events
+    GROUP BY user_id
+    ORDER BY user_id
+    """
 
 
 @register(
@@ -46,7 +57,7 @@ def stream_tumbling_window(spark, sf_dir):
     agg as batch SQL with time_bucket — tumbling windows are epoch-aligned
     in both engines."""
     ev = read_events_stream(spark, sf_dir)
-    out = run_available_now(tumbling_window_agg(ev, "6 hours"), "complete")
+    out = drain(tumbling_window_agg(ev, "6 hours"), output_mode="complete")
     return out.select(
         F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
             "window_start"
@@ -81,7 +92,7 @@ def stream_sliding_window(spark, sf_dir):
     windows. Oracle expands the window assignment explicitly (bucket minus
     0/1 slide offsets) — the same expansion Spark's Expand operator does."""
     ev = read_events_stream(spark, sf_dir)
-    out = run_available_now(sliding_window_agg(ev, "12 hours", "6 hours"), "complete")
+    out = drain(sliding_window_agg(ev, "12 hours", "6 hours"), output_mode="complete")
     return out.select(
         F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
             "window_start"
@@ -128,7 +139,7 @@ def stream_session_window(spark, sf_dir):
     the append-mode emission rule. Late-data drop is what the WHERE clause
     encodes: sessions still open at end-of-stream are withheld."""
     ev = read_events_stream(spark, sf_dir)
-    out = run_available_now(session_window_agg(ev, "30 minutes", "10 minutes"), "append")
+    out = drain(session_window_agg(ev, "30 minutes", "10 minutes"), output_mode="append")
     return out.select(
         "user_id",
         F.date_format(F.col("session_window.start"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
@@ -166,8 +177,8 @@ def stream_stream_join(spark, sf_dir):
     on two unbounded streams. availableNow replay of the complete fixture
     makes the result equal the batch self-join the oracle runs."""
     ev = read_events_stream(spark, sf_dir)
-    out = run_available_now(
-        stream_stream_attribution(ev, "30 minutes", "1 hour"), "append"
+    out = drain(
+        stream_stream_attribution(ev, "30 minutes", "1 hour"), output_mode="append"
     )
     return out.select(
         "user_id",
@@ -196,20 +207,13 @@ def stream_dedup_watermark(spark, sf_dir):
     anything on an already-unique stream. (Duplicate-collapse behavior is
     covered by the property test in tests/test_streaming.py.)"""
     ev = read_events_stream(spark, sf_dir)
-    out = run_available_now(streaming_dedup(ev, "1 hour"), "append")
+    out = drain(streaming_dedup(ev, "1 hour"), output_mode="append")
     return out.select("event_id", "user_id", "event_type").orderBy("event_id")
 
 
 @register(
     "stream_stateful_totals",
-    oracle="""
-    SELECT user_id,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents
-    FROM events
-    GROUP BY user_id
-    ORDER BY user_id
-    """,
+    oracle=_USER_TOTALS_ORACLE,
     tags=("streaming", "stateful"),
 )
 def stream_stateful_totals(spark, sf_dir):
@@ -222,7 +226,7 @@ def stream_stateful_totals(spark, sf_dir):
     from pyspark.sql.window import Window
 
     ev = read_events_stream(spark, sf_dir)
-    out = run_available_now(stateful_user_totals(ev), "update")
+    out = drain(stateful_user_totals(ev), output_mode="update")
     w = Window.partitionBy("user_id").orderBy(
         F.col("n_events").desc(), F.col("total_cents").desc()
     )
@@ -262,7 +266,7 @@ def stream_static_join(spark, sf_dir):
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(25,6)")).cast("double").alias("total_value"),
     )
-    return run_available_now(agg, "complete").orderBy("segment")
+    return drain(agg, output_mode="complete").orderBy("segment")
 
 
 @register(
@@ -279,17 +283,14 @@ def stream_corpus_curation(spark, sf_dir):
     replay makes the result batch-comparable."""
     from crocus_spark.operators import corpus as C
     from crocus_spark.operators import text as X
-    from crocus_spark.streaming.ops import (
-        read_documents_stream,
-        run_available_now,
-    )
+    from crocus_spark.streaming.ops import read_documents_stream
 
     docs = read_documents_stream(spark, sf_dir)
     scored = C.dup_gram_cols(X.quality_score(docs, "text"), "text")
     kept = scored.filter(
         (F.col("quality") >= 0.45) & (F.col("dup_ratio") <= 0.5)
     ).select("doc_id", "lang", "source", "quality", "dup_ratio")
-    return run_available_now(kept, "append").orderBy("doc_id")
+    return drain(kept, output_mode="append").orderBy("doc_id")
 
 
 # The oracle is the shared batch scored-CTE (corpus_q._SCORED_SQL) — the
@@ -379,49 +380,16 @@ def stream_python_datasource(spark, sf_dir):
     n_days; the query drains it to a memory sink and aggregates per
     day. Arithmetic identical to the batch source, so a custom
     streaming source is oracle-checked end-to-end."""
-    import tempfile
-    import time
-    import uuid
-
     from crocus_spark.sources import register_catalog_stream_source
 
     register_catalog_stream_source(spark)
-
-    def attempt() -> str:
-        # name AND checkpoint unique per attempt/invocation: memory-sink
-        # tables outlive their query in the session (a reused name would
-        # double-ingest on a second call), and a fresh checkpoint makes
-        # every worker-spawn retry a complete from-scratch replay of the
-        # deterministic source into its fresh sink table
-        ckpt = tempfile.mkdtemp(prefix="crocus_catstream_ckpt")
-        name = f"catalog_stream_sink_{uuid.uuid4().hex[:8]}"
-        q = (
-            spark.readStream.format("crocus_catalog_stream")
-            .option("n_days", 3)
-            .load()
-            .writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="250 milliseconds")
-            .start()
-        )
-        try:
-            expected = 3 * 40
-            deadline = time.time() + 120
-            while time.time() < deadline:
-                if spark.table(name).count() >= expected:
-                    break
-                exc = q.exception()
-                if exc is not None:  # fail fast instead of burning the
-                    raise exc  # deadline polling a dead query
-                time.sleep(0.25)
-        finally:
-            q.stop()
-        return name
-
-    name = retry_transient_stream(attempt)
+    feed = (
+        spark.readStream.format("crocus_catalog_stream")
+        .option("n_days", 3)
+        .load()
+    )
     return (
-        spark.table(name)
+        drain(feed, until_rows=3 * 40)
         .groupBy("day")
         .agg(
             F.count(F.lit(1)).alias("n_products"),
@@ -435,14 +403,7 @@ def stream_python_datasource(spark, sf_dir):
 
 @register(
     "stream_stateful_rocksdb",
-    oracle="""
-    SELECT user_id,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents
-    FROM events
-    GROUP BY user_id
-    ORDER BY user_id
-    """,
+    oracle=_USER_TOTALS_ORACLE,
     tags=("streaming", "stateful", "rocksdb"),
 )
 def stream_stateful_rocksdb(spark, sf_dir):
@@ -456,9 +417,9 @@ def stream_stateful_rocksdb(spark, sf_dir):
     from pyspark.sql.window import Window
 
     ev = read_events_stream(spark, sf_dir)
-    out = run_available_now(
+    out = drain(
         stateful_user_totals(ev),
-        "update",
+        output_mode="update",
         state_provider=(
             "org.apache.spark.sql.execution.streaming."
             "state.RocksDBStateStoreProvider"
@@ -513,9 +474,9 @@ def stream_stream_left_outer(spark, sf_dir):
     stage = stage_stream_with_flush_sentinel(spark, sf_dir, "events")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     ev = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(stage)
-    out = run_available_now(
+    out = drain(
         stream_stream_attribution(ev, "30 minutes", "1 hour", "left_outer"),
-        "append",
+        output_mode="append",
     )
     return (
         out.filter(F.col("user_id") >= 0)  # drop the sentinel's own row
@@ -573,9 +534,9 @@ def stream_stream_full_outer(spark, sf_dir):
     stage = stage_stream_with_flush_sentinel(spark, sf_dir, "events")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     ev = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(stage)
-    out = run_available_now(
+    out = drain(
         stream_stream_attribution(ev, "30 minutes", "1 hour", "full_outer"),
-        "append",
+        output_mode="append",
     )
     return (
         out.filter(F.col("user_id") >= 0)  # drop the sentinel's own row
@@ -616,15 +577,14 @@ def stream_avro_landing(spark, sf_dir):
     sink's monotonic part-NNNNN names, so a crashed run resumes at the
     file it died on and readBetweenOffsets replays committed batches
     byte-deterministically. The query drains to a memory sink
-    (files_per_batch=1 → ≥4 micro-batches, asserted from the stream's
-    own progress log) and reduces to per-lang counts plus an
+    (files_per_batch=1 → ≥4 micro-batches, asserted from the rows'
+    batch timestamps) and reduces to per-lang counts plus an
     order-insensitive corpus digest — a hash match proves the streamed
     rows are EXACTLY the landed table, no file skipped, duplicated, or
     torn across batch boundaries."""
-    import tempfile
-    import time
-    import uuid
+    import shutil
 
+    from crocus_spark.queries.sources_q import _scratch
     from crocus_spark.sources import (
         register_avro_sink,
         register_avro_stream_source,
@@ -632,7 +592,8 @@ def stream_avro_landing(spark, sf_dir):
 
     register_avro_sink(spark)
     register_avro_stream_source(spark)
-    land = tempfile.mkdtemp(prefix="crocus_avro_landing_")
+    land = _scratch("avro_landing")
+    shutil.rmtree(land, ignore_errors=True)
     docs = load(spark, sf_dir, "documents")
     n_expected = docs.count()
     (
@@ -642,47 +603,20 @@ def stream_avro_landing(spark, sf_dir):
         .mode("append")
         .save()
     )
-    def attempt() -> str:
-        # fresh checkpoint + sink name per attempt: a worker-spawn retry
-        # replays the landing dir from scratch into a fresh memory table
-        ckpt = tempfile.mkdtemp(prefix="crocus_avro_landing_ckpt")
-        name = f"avro_landing_sink_{uuid.uuid4().hex[:8]}"
-        q = (
-            spark.readStream.format("crocus_avro_stream")
-            .option("path", land)
-            .option("files_per_batch", 1)
-            .load()
-            .writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="200 milliseconds")
-            .start()
-        )
-        try:
-            deadline = time.time() + 120
-            while time.time() < deadline:
-                if spark.table(name).count() >= n_expected:
-                    break
-                exc = q.exception()
-                if exc is not None:  # fail fast: don't poll a dead query
-                    raise exc  # for the rest of the deadline
-                time.sleep(0.25)
-            batches = {
-                p["batchId"]
-                for p in (q.recentProgress or [])
-                if p.get("numInputRows", 0) > 0
-            }
-            assert (
-                len(batches) >= 2
-            ), f"expected incremental batches, saw {batches}"
-        finally:
-            q.stop()
-        return name
-
-    name = retry_transient_stream(attempt)
+    # current_timestamp() is the micro-batch's timestamp in a stream, so
+    # its distinct values count the batches that carried rows
+    feed = (
+        spark.readStream.format("crocus_avro_stream")
+        .option("path", land)
+        .option("files_per_batch", 1)
+        .load()
+        .withColumn("_batch_ts", F.current_timestamp())
+    )
+    rows = drain(feed, until_rows=n_expected)
+    batches = rows.select("_batch_ts").distinct().count()
+    assert batches >= 2, f"expected incremental batches, saw {batches}"
     return (
-        spark.table(name)
-        .groupBy("lang")
+        rows.groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_chars").alias("total_chars"),
@@ -746,8 +680,6 @@ def stream_snapshot_cdc(spark, sf_dir):
     planning stays O(manifests + delete sets) and row data only ever
     moves for the files a commit actually touched."""
     import shutil
-    import tempfile
-    import uuid
 
     from crocus_spark.operators.maintenance import (
         commit_append,
@@ -776,26 +708,11 @@ def stream_snapshot_cdc(spark, sf_dir):
         "_file", "_pos"
     )
     commit_positional_deletes(doomed, root)                        # v3
-    def attempt() -> str:
-        # fresh checkpoint + sink per attempt: each worker-spawn retry is
-        # a complete availableNow replay of the (static) snapshot log
-        name = f"snapshot_cdc_{uuid.uuid4().hex[:8]}"
-        q = (
-            spark.readStream.format("crocus_snapshot_tail")
-            .option("path", root)
-            .load()
-            .writeStream.format("memory")
-            .queryName(name)
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="cdc_ckpt_")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return name
-
-    feed = spark.table(retry_transient_stream(attempt))
+    feed = drain(
+        spark.readStream.format("crocus_snapshot_tail")
+        .option("path", root)
+        .load()
+    )
     return (
         feed.groupBy(
             F.col("_op").alias("op"),
@@ -939,8 +856,6 @@ def stream_cdc_eq_preimages(spark, sf_dir):
     join is exact. Planning stays O(manifests + delete delta); the
     pre-image reads are file-parallel over the stats-selected files."""
     import shutil
-    import tempfile
-    import uuid
 
     from crocus_spark.operators.maintenance import (
         commit_equality_deletes,
@@ -974,26 +889,12 @@ def stream_cdc_eq_preimages(spark, sf_dir):
         .distinct()
     )
     commit_equality_deletes(cohort, root, ["user_id"])           # v2
-    def attempt() -> str:
-        # fresh checkpoint + sink per attempt (see stream_snapshot_cdc)
-        name = f"cdc_preimg_{uuid.uuid4().hex[:8]}"
-        q = (
-            spark.readStream.format("crocus_snapshot_tail")
-            .option("path", root)
-            .option("eq_pre_images", "true")
-            .load()
-            .writeStream.format("memory")
-            .queryName(name)
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="cdc_ckpt_")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return name
-
-    feed = spark.table(retry_transient_stream(attempt))
+    feed = drain(
+        spark.readStream.format("crocus_snapshot_tail")
+        .option("path", root)
+        .option("eq_pre_images", "true")
+        .load()
+    )
     return (
         feed.groupBy(
             F.col("_op").alias("op"),
@@ -1039,8 +940,6 @@ def stream_cdc_starting_timestamp(spark, sf_dir):
     the fixture — a hash match proves the cut is boundary-exact: v0/v1
     history is never re-read, nothing after the instant is missed."""
     import shutil
-    import tempfile
-    import uuid
 
     from crocus_spark.operators.maintenance import (
         commit_append,
@@ -1071,26 +970,12 @@ def stream_cdc_starting_timestamp(spark, sf_dir):
         events.filter(F.pmod("event_id", F.lit(3)) == 2).coalesce(1), root
     )                                                            # v3
     t2 = read_manifest(root, 2)["committed_at_ms"]
-    def attempt() -> str:
-        # fresh checkpoint + sink per attempt (see stream_snapshot_cdc)
-        name = f"cdc_start_{uuid.uuid4().hex[:8]}"
-        q = (
-            spark.readStream.format("crocus_snapshot_tail")
-            .option("path", root)
-            .option("starting_timestamp", str(t2))
-            .load()
-            .writeStream.format("memory")
-            .queryName(name)
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="cdc_ckpt_")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return name
-
-    feed = spark.table(retry_transient_stream(attempt))
+    feed = drain(
+        spark.readStream.format("crocus_snapshot_tail")
+        .option("path", root)
+        .option("starting_timestamp", str(t2))
+        .load()
+    )
     return (
         feed.groupBy(
             F.col("_op").alias("op"),
@@ -1215,8 +1100,6 @@ def stream_cdc_windowed_totals(spark, sf_dir):
     streaming rollup maintained directly off the table's change feed,
     state bounded by open windows."""
     import shutil
-    import tempfile
-    import uuid
 
     from crocus_spark.operators.maintenance import (
         commit_append,
@@ -1235,48 +1118,21 @@ def stream_cdc_windowed_totals(spark, sf_dir):
     commit_append(
         events.filter(F.pmod("event_id", F.lit(3)) == 1).coalesce(1), root
     )
-    # scope state-store width for the query's lifetime (the stateful
-    # operator pins its store count to this conf at first start; the
-    # session's batch-tuned 32 would cost 32 stores of per-batch commit
-    # fsyncs for a fixture-sized stream — same rationale as
-    # streaming.ops.run_available_now)
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-
-    def attempt() -> str:
-        # fresh checkpoint + sink per attempt (see stream_snapshot_cdc)
-        name = f"cdc_win_{uuid.uuid4().hex[:8]}"
-        q = (
-            spark.readStream.format("crocus_snapshot_tail")
-            .option("path", root)
-            .load()
-            .filter(F.col("_op") == "insert")
-            .groupBy(F.window("ts", "6 hours"))
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("value").cast("decimal(25,6)"))
-                .cast("double")
-                .alias("value_sum"),
-            )
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="cdc_ckpt_")
-            )
-            .trigger(availableNow=True)
-            .start()
+    totals = (
+        spark.readStream.format("crocus_snapshot_tail")
+        .option("path", root)
+        .load()
+        .filter(F.col("_op") == "insert")
+        .groupBy(F.window("ts", "6 hours"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("value").cast("decimal(25,6)"))
+            .cast("double")
+            .alias("value_sum"),
         )
-        q.awaitTermination(300)
-        return name
-
-    try:
-        spark.conf.set(key, "8")
-        name = retry_transient_stream(attempt)
-    finally:
-        spark.conf.set(key, prev)
+    )
     return (
-        spark.table(name)
+        drain(totals, output_mode="complete")
         .select(
             F.col("window.start").alias("win_start"),
             "n",
@@ -1294,14 +1150,7 @@ _ROCKSDB = (
 
 @register(
     "stream_stateful_tws",
-    oracle="""
-    SELECT user_id,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents
-    FROM events
-    GROUP BY user_id
-    ORDER BY user_id
-    """,
+    oracle=_USER_TOTALS_ORACLE,
     tags=("streaming", "stateful", "tws"),
 )
 def stream_stateful_tws(spark, sf_dir):
@@ -1322,8 +1171,8 @@ def stream_stateful_tws(spark, sf_dir):
     from crocus_spark.streaming.ops import stateful_user_totals_tws
 
     ev = read_events_stream(spark, sf_dir)
-    out = run_available_now(
-        stateful_user_totals_tws(ev), "update", state_provider=_ROCKSDB
+    out = drain(
+        stateful_user_totals_tws(ev), output_mode="update", state_provider=_ROCKSDB
     )
     w = Window.partitionBy("user_id").orderBy(
         F.col("n_events").desc(), F.col("total_cents").desc()
@@ -1383,8 +1232,8 @@ def stream_session_expiry_tws(spark, sf_dir):
     from crocus_spark.streaming.ops import session_expiry_tws
 
     ev = read_events_stream(spark, sf_dir)
-    out = run_available_now(
-        session_expiry_tws(ev), "append", state_provider=_ROCKSDB
+    out = drain(
+        session_expiry_tws(ev), output_mode="append", state_provider=_ROCKSDB
     )
     return out.select(
         "user_id",
@@ -1397,14 +1246,7 @@ def stream_session_expiry_tws(spark, sf_dir):
 
 @register(
     "stream_snapshot_sink",
-    oracle="""
-    SELECT user_id,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents
-    FROM events
-    GROUP BY user_id
-    ORDER BY user_id
-    """,
+    oracle=_USER_TOTALS_ORACLE,
     tags=("streaming", "sink", "snapshot", "lakehouse"),
 )
 def stream_snapshot_sink(spark, sf_dir):
@@ -1438,30 +1280,21 @@ def stream_snapshot_sink(spark, sf_dir):
         shutil.rmtree(p, ignore_errors=True)
     ev = read_events_stream(spark, sf_dir)
 
-    def drain():
-        def attempt() -> None:
-            q = (
-                ev.writeStream.format("crocus_snapshot")
-                .option("path", root)
-                .option("txn_app", "stream_snapshot_sink_q")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination(300)
-            finally:
-                q.stop()
+    def sink_events() -> None:
+        # the same checkpoint on every run ON PURPOSE: the snapshot
+        # sink's txn ledger makes a resumed drain exactly-once (that is
+        # what this query asserts), so a worker-spawn retry is a restart
+        drain(
+            ev,
+            "crocus_snapshot",
+            checkpoint=ckpt,
+            options={"path": root, "txn_app": "stream_snapshot_sink_q"},
+        )
 
-        # same checkpoint across attempts ON PURPOSE: the snapshot sink's
-        # txn ledger makes a resumed drain exactly-once (that is what this
-        # query asserts), so a worker-spawn retry is just a restart
-        retry_transient_stream(attempt)
-
-    drain()
+    sink_events()
     versions = list_snapshot_versions(root)
     assert versions, "sink committed nothing"
-    drain()  # restart with the same checkpoint: must be a no-op
+    sink_events()  # restart with the same checkpoint: must be a no-op
     assert list_snapshot_versions(root) == versions, "re-drain re-committed"
     store = (
         spark.read.format("crocus_snapshot").option("path", root).load()
@@ -1506,9 +1339,9 @@ def stream_tws_mapstate(spark, sf_dir):
     from crocus_spark.streaming.ops import stateful_type_counts_tws
 
     ev = read_events_stream(spark, sf_dir)
-    out = run_available_now(
+    out = drain(
         stateful_type_counts_tws(ev),
-        "update",
+        output_mode="update",
         state_provider=_ROCKSDB,
     )
     w = Window.partitionBy("user_id", "event_type").orderBy(

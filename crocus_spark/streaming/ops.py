@@ -7,16 +7,24 @@ Streaming over the events fixture: event-time windows, watermarked late-data
 handling, sessionization, streaming dedup, stateful per-key processing, and
 stream-static enrichment joins.
 
-Tests/queries replay the fixture with ``trigger(availableNow=True)`` so the
-stream runs to completion deterministically and results are comparable to
-batch SQL (SURVEY §5.2.4). The same pipelines attach unchanged to a live
-file/Kafka source at scale.
+Every bounded stream in the package — the registry's streaming queries,
+the foreachBatch maintainers below and the ANN indexes' CDC sync — runs
+through one :func:`drain`. It starts the query into a memory,
+``foreachBatch`` or format sink, waits for it (availableNow to
+completion, or a polled row target for ``SimpleDataSourceStreamReader``
+sources), retries only the worker-spawn failure class, stops the query
+and raises on a failure or a missed deadline, and releases what it
+created: a memory sink's temp view and, unless the caller keeps its own
+checkpoint for a restart, the checkpoint. availableNow replays make a
+stream's result comparable to batch SQL (SURVEY §5.2.4); the same
+pipelines attach unchanged to a live file/Kafka source at scale.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -93,26 +101,6 @@ def retry_transient_stream(attempt, attempts: int = 3):
                 raise
 
 
-def _drain_foreach_batch(feed: DataFrame, apply_fn, ckpt: str) -> None:
-    """Checkpointed availableNow ``foreachBatch`` drain with the
-    transient worker-spawn retry above (the feeds here are Python stream
-    sources — exactly the exposed spawn path). Safe because every
-    in-repo ``apply_fn`` commits with ``replace=True`` keyed on
-    batch_id, i.e. is idempotent per batch, so a checkpoint resume
-    replays without double-applying."""
-
-    def attempt() -> None:
-        q = (
-            feed.writeStream.foreachBatch(apply_fn)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    retry_transient_stream(attempt)
-
-
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming source over the events parquet (file-source micro-batches —
     the engine's stand-in for the reference's daily snapshot arrivals).
@@ -139,60 +127,105 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_available_now(
-    stream_df: DataFrame,
-    output_mode: str,
-    state_partitions: int = 8,
+# A drain that has not finished by then is stopped and fails: this bounds
+# a hung or starved query, it is no performance budget (the slowest
+# streaming query at sf0.1, stream_session_expiry_tws, takes ~50 s on a
+# 4-core host).
+_DEADLINE_S = 600.0
+
+
+def drain(
+    df: DataFrame,
+    sink="memory",
+    output_mode: str = "append",
+    checkpoint: str | None = None,
     state_provider: str | None = None,
-) -> DataFrame:
-    """Drive a streaming DataFrame to completion with availableNow into a
-    memory sink; return the sink contents as a batch DataFrame.
+    until_rows: int | None = None,
+    options: dict | None = None,
+) -> DataFrame | None:
+    """Run the bounded stream ``df`` to its end and release what the run
+    created. Every bounded stream in the package goes through here.
 
-    availableNow processes exactly the data present at start then stops —
-    the deterministic-replay trigger (vs processingTime's wall-clock
-    batching). Memory sink is test-scale only; production sinks are
-    partitioned parquet/Kafka via the same writeStream.
+    ``sink`` is ``"memory"``, a ``foreachBatch`` function or a format
+    name (written with ``options``). A memory drain returns the sink
+    contents as a batch DataFrame; the sink's temp view is dropped
+    before it returns (the frame holds the sink itself, so it still
+    collects), and with no ``checkpoint`` Spark's temporary checkpoint
+    is used, which the stop deletes. Drains whose restart must resume
+    (foreachBatch state roots, index checkpoints, the snapshot sink's
+    ledger) pass their own ``checkpoint``; it is kept.
 
-    ``state_partitions`` scopes spark.sql.shuffle.partitions for the
-    query's lifetime (saved and restored in finally — never leaked into
-    the session): stateful operators pin their state-store count to this
-    conf at FIRST start and cannot use AQE, so the session's batch-tuned
-    32 means 32 state stores × per-batch commit fsyncs for a fixture-sized
-    stream (measured 2-3× the whole query's wall time). At production
-    scale a real deployment sizes this to the cluster before the query
-    first starts — same mechanism, bigger number.
+    Waiting: availableNow to completion, or — with ``until_rows`` — a
+    processingTime query polled until the memory sink holds that many
+    rows. The poll is for ``SimpleDataSourceStreamReader`` sources,
+    which under availableNow stop after ONE ``read()`` step. A failed
+    query, or one still short of its end after ``_DEADLINE_S``, is
+    stopped and raises; no partial sink is ever returned.
 
-    ``state_provider`` optionally scopes
-    spark.sql.streaming.stateStore.providerClass the same way (e.g. the
-    RocksDB provider — the production backend whose state spills to local
-    disk instead of living JVM-heap-resident like the default HDFS-backed
-    store)."""
-    spark = stream_df.sparkSession
+    Memory drains run with ``spark.sql.shuffle.partitions`` at 8 and
+    the optional ``state_provider`` as the state store, both restored
+    afterwards: stateful operators pin their state-store count to that
+    conf at first start and cannot use AQE, so the session's
+    batch-tuned 32 means 32 stores × per-batch commit fsyncs for a
+    fixture-sized stream (measured 2-3× the query's wall). foreachBatch
+    and format drains keep the session's conf: their per-batch
+    functions run batch plans under it.
+
+    Each start goes through :func:`retry_transient_stream`: a memory
+    drain retries into a fresh sink, a checkpointed one resumes (which
+    replays no batch twice: every in-repo ``foreachBatch`` function
+    commits with ``replace=True`` keyed on batch_id, and the snapshot
+    sink's txn ledger skips a committed batch)."""
+    spark = df.sparkSession
+    memory = sink == "memory"
+
+    def attempt():
+        name = f"drain_{uuid.uuid4().hex[:12]}"
+        w = df.writeStream.outputMode(output_mode).queryName(name)
+        if callable(sink):
+            w = w.foreachBatch(sink)
+        else:
+            w = w.format(sink).options(**(options or {}))
+        if checkpoint is not None:
+            w = w.option("checkpointLocation", checkpoint)
+        if until_rows is None:
+            w = w.trigger(availableNow=True)
+        else:
+            w = w.trigger(processingTime="250 milliseconds")
+        q = w.start()
+        try:
+            if until_rows is None:
+                done = q.awaitTermination(_DEADLINE_S)
+            else:
+                deadline = time.monotonic() + _DEADLINE_S
+                done = False
+                while not done and time.monotonic() < deadline:
+                    time.sleep(0.25)
+                    exc = q.exception()
+                    if exc is not None:
+                        raise exc
+                    done = spark.table(name).count() >= until_rows
+            if not done:
+                raise TimeoutError(
+                    f"stream drain {name} did not finish in {_DEADLINE_S:g} s"
+                )
+            return spark.table(name) if memory else None
+        finally:
+            q.stop()
+            if memory:
+                spark.catalog.dropTempView(name)
+
+    if not memory:
+        return retry_transient_stream(attempt)
     key = "spark.sql.shuffle.partitions"
     pkey = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(key)
     prev_provider = spark.conf.get(pkey, None)
-
-    def attempt() -> str:
-        # fresh sink table per attempt: an availableNow drain into a new
-        # memory table is a deterministic from-scratch replay, so a retry
-        # after a worker-spawn failure cannot double-count
-        name = f"stream_out_{uuid.uuid4().hex[:12]}"
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return name
-
     try:
-        spark.conf.set(key, str(state_partitions))
+        spark.conf.set(key, "8")
         if state_provider:
             spark.conf.set(pkey, state_provider)
-        name = retry_transient_stream(attempt)
+        return retry_transient_stream(attempt)
     finally:
         spark.conf.set(key, prev)
         if state_provider:
@@ -200,7 +233,6 @@ def run_available_now(
                 spark.conf.unset(pkey)
             else:
                 spark.conf.set(pkey, prev_provider)
-    return spark.table(name)
 
 
 def tumbling_window_agg(events: DataFrame, window: str = "6 hours") -> DataFrame:
@@ -434,9 +466,7 @@ def foreach_batch_apply_cdc(
             merged, derived_root, version=batch_id, replace=True
         )
 
-    _drain_foreach_batch(
-        feed, apply_batch, os.path.join(derived_root, "_checkpoint")
-    )
+    drain(feed, apply_batch, checkpoint=os.path.join(derived_root, "_checkpoint"))
     return read_snapshot(spark, derived_root)
 
 
@@ -490,9 +520,7 @@ def foreach_batch_merge_totals(
             merged, state_root, version=batch_id, replace=True
         )
 
-    _drain_foreach_batch(
-        events, merge_batch, os.path.join(state_root, "_checkpoint")
-    )
+    drain(events, merge_batch, checkpoint=os.path.join(state_root, "_checkpoint"))
     return read_snapshot(spark, state_root)
 
 
@@ -873,14 +901,5 @@ def foreach_batch_apply_cdc_groups(
             fresh, derived_root, version=batch_id, replace=True
         )
 
-    q = (
-        feed.writeStream.foreachBatch(apply_batch)
-        .option(
-            "checkpointLocation",
-            os.path.join(derived_root, "_checkpoint"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(feed, apply_batch, checkpoint=os.path.join(derived_root, "_checkpoint"))
     return read_snapshot(spark, derived_root)

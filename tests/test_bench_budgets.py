@@ -282,11 +282,11 @@ def test_invalid_cpu_interval_neither_passes_nor_violates(tmp_path):
 
 
 def test_tree_cpu_ignores_session_siblings_when_not_leader():
-    """r7 ADVICE: the sid union must apply ONLY when the measuring
-    process is its own session leader. From an interactive shell the
-    login session contains unrelated jobs; their CPU must not land in
-    per-query deltas. A same-session NON-descendant burner (double-fork
-    orphan) burns ~0.8 cpu-s; a non-leader's delta must not see it."""
+    """r7 ADVICE: from an interactive shell the login session contains
+    unrelated jobs; their CPU must not land in per-query deltas. A
+    same-session NON-descendant burner (a double-fork orphan of a
+    process that is no subreaper) burns ~0.8 cpu-s; the delta must not
+    see it."""
     import subprocess
     import sys as _sys
 
@@ -317,36 +317,41 @@ print(tree_cpu_seconds() - before)
     assert delta < 0.4, delta
 
 
-def test_tree_cpu_counts_reparented_workers_when_leader():
-    """The flip side (the r7 reparenting fix must survive the r7-ADVICE
-    scoping): once the sweep owns its session (_own_session), a
-    reparented same-session worker's CPU IS counted."""
+def test_tree_cpu_counts_orphaned_workers_as_subreaper():
+    """A Python worker that outlives its daemon is reparented. Once the
+    sweep is a child subreaper (_become_subreaper) the orphan comes to
+    the sweep: its CPU counts while it lives (ppid tree) and after it
+    exits (reaped by _reap_orphans into the sweep's cutime). Reparented
+    to init, the exited orphan's CPU left every counted process."""
     import subprocess
     import sys as _sys
 
     script = r"""
 import os, sys, time
 sys.path.insert(0, "/root/repo")
-from tools.sweep import _own_session, tree_cpu_seconds
-_own_session()
-assert os.getsid(0) == os.getpid(), "setsid failed"
+from tools.sweep import _become_subreaper, _reap_orphans, tree_cpu_seconds
+_become_subreaper()
 pid = os.fork()
 if pid == 0:
     if os.fork() == 0:
         e = time.process_time() + 0.8
         while time.process_time() < e:
             pass
-        time.sleep(5)  # stay alive until sampled
+        time.sleep(1.0)
         os._exit(0)
     os._exit(0)
 os.waitpid(pid, 0)
 before = tree_cpu_seconds()
-time.sleep(1.2)
-print(tree_cpu_seconds() - before)
+time.sleep(1.2)  # the orphan burns its 0.8 cpu-s, then sleeps
+live = tree_cpu_seconds() - before
+time.sleep(1.5)  # the orphan has exited
+_reap_orphans()
+print(live, tree_cpu_seconds() - before)
 """
     out = subprocess.run(
         [_sys.executable, "-c", script],
         capture_output=True, text=True, check=True, timeout=60,
     )
-    delta = float(out.stdout.strip().splitlines()[-1])
-    assert delta > 0.5, delta
+    live, done = map(float, out.stdout.strip().splitlines()[-1].split())
+    assert live > 0.5, live
+    assert done > 0.5, done

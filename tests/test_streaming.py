@@ -287,10 +287,7 @@ def test_tws_session_expiry_withholds_open_tail(spark, tmp_path):
     emits; its second session is the stream tail and must NOT emit."""
     import datetime
 
-    from crocus_spark.streaming.ops import (
-        run_available_now,
-        session_expiry_tws,
-    )
+    from crocus_spark.streaming.ops import drain, session_expiry_tws
 
     t0 = datetime.datetime(2024, 3, 1, 12, 0, 0)
 
@@ -313,8 +310,8 @@ def test_tws_session_expiry_withholds_open_tail(spark, tmp_path):
             spark.read.parquet(src).schema
         ).parquet(src)
     )
-    out = run_available_now(
-        session_expiry_tws(stream), "append",
+    out = drain(
+        session_expiry_tws(stream), output_mode="append",
         state_provider=(
             "org.apache.spark.sql.execution.streaming."
             "state.RocksDBStateStoreProvider"

@@ -91,11 +91,13 @@ def tree_cpu_seconds() -> float:
     -346 cpu-s for one query the first time a pool teardown landed
     mid-interval (r7), silently under-counting everything after it. No
     double count: cutime covers only reaped children, which by
-    definition are absent from the live sum. Linux-only by design: the
-    sweep gate runs on the Linux harness."""
+    definition are absent from the live sum. A worker whose daemon died
+    first is in the tree only because the sweep is a child subreaper
+    (see _become_subreaper). Linux-only by design: the sweep gate runs
+    on the Linux harness."""
     clk = os.sysconf("SC_CLK_TCK")
     me = os.getpid()
-    info: dict[int, tuple[int, int, int]] = {}
+    info: dict[int, tuple[int, int]] = {}
     for pid in os.listdir("/proc"):
         if not pid.isdigit():
             continue
@@ -108,17 +110,11 @@ def tree_cpu_seconds() -> float:
         rest = st[st.rfind(b")") + 2 :].split()
         info[int(pid)] = (
             int(rest[1]),                      # ppid
-            int(rest[3]),                      # session id
             int(rest[11]) + int(rest[12])      # utime+stime (self)
             + int(rest[13]) + int(rest[14]),   # cutime+cstime (reaped kids)
         )
-    # membership = ppid tree ∪ same-session: a Spark python worker whose
-    # DAEMON dies first reparents to init while still alive — it leaves
-    # any ppid tree but keeps the session id, so the sid set keeps its
-    # CPU counted (the r7 follow-up to the reaped-children fix: pool
-    # crashes mid-sweep still measured -184 cpu-s via reparenting).
     children: dict[int, list[int]] = {}
-    for pid, (ppid, _sid, _cpu) in info.items():
+    for pid, (ppid, _cpu) in info.items():
         children.setdefault(ppid, []).append(pid)
     members: set[int] = set()
     stack = [me]
@@ -128,17 +124,42 @@ def tree_cpu_seconds() -> float:
             continue
         members.add(p)
         stack.extend(children.get(p, []))
-    # sid union ONLY when this process is its own session leader (the
-    # sweep re-execs itself under setsid in main()): from an
-    # interactive shell the login session contains the shell and every
-    # unrelated concurrent job, whose CPU would land in per-query
-    # deltas and trip budget gates on foreign work (r7 ADVICE).
-    my_sid = info[me][1] if me in info else -1
-    if my_sid == me:
-        for pid, (_ppid, sid, _cpu) in info.items():
-            if sid == my_sid:
-                members.add(pid)
-    return sum(info[p][2] for p in members) / clk
+    return sum(info[p][1] for p in members) / clk
+
+
+def _become_subreaper() -> None:
+    """Make this process the child subreaper of its descendants. A Spark
+    Python worker outlives its daemon when the JVM stops a daemon (the
+    daemon SIGHUPs its process group and exits): the worker is then
+    reparented, by default to init, which reaps it when it exits and
+    takes its CPU out of every counted cutime — one cause of the "pool
+    churn" drop that made an interval's CPU negative. As a subreaper
+    the sweep inherits such orphans instead: live, they stay in the
+    ppid tree; exited, _reap_orphans moves their CPU into this
+    process's cutime."""
+    import ctypes
+
+    pr_set_child_subreaper = 36  # <linux/prctl.h>
+    libc = ctypes.CDLL(None, use_errno=True)
+    libc.prctl.argtypes = [ctypes.c_int] + [ctypes.c_ulong] * 4
+    libc.prctl.restype = ctypes.c_int
+    if libc.prctl(pr_set_child_subreaper, 1, 0, 0, 0) != 0:
+        err = ctypes.get_errno()
+        raise OSError(err, f"prctl(PR_SET_CHILD_SUBREAPER): {os.strerror(err)}")
+
+
+def _reap_orphans() -> None:
+    """Wait for every exited child, so the CPU of orphans inherited as
+    subreaper lands in this process's cutime before a reading. The
+    sweep's only own child, the JVM, exits after the last reading."""
+    while True:
+        try:
+            pid, _status = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return
+        if pid == 0:
+            return
+
 
 TABLES = (
     "region nation customer supplier part orders lineitem "
@@ -146,23 +167,8 @@ TABLES = (
 ).split()
 
 
-def _own_session() -> None:
-    """Make the sweep its own session leader so tree_cpu_seconds' sid
-    union captures reparented Spark workers WITHOUT unrelated login-
-    session siblings. fork + setsid in the child (a process-group
-    leader cannot setsid itself); the parent just waits and forwards
-    the exit code. Fork happens before any Spark/JVM state exists."""
-    if os.getsid(0) == os.getpid():
-        return
-    pid = os.fork()
-    if pid:
-        _wpid, status = os.waitpid(pid, 0)
-        sys.exit(os.waitstatus_to_exitcode(status))
-    os.setsid()
-
-
 def main() -> int:
-    _own_session()
+    _become_subreaper()
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_path = sys.argv[2] if len(sys.argv) > 2 else "/tmp/sweep_sf001.json"
 
@@ -199,6 +205,7 @@ def main() -> int:
     t_all = time.monotonic()
     for name in sorted(qs):
         t0 = time.monotonic()
+        _reap_orphans()
         c0 = tree_cpu_seconds()
         try:
             if name in osql:
@@ -210,16 +217,18 @@ def main() -> int:
         except Exception as ex:  # noqa: BLE001 — record and keep sweeping
             ok, err = False, f"{type(ex).__name__}: {ex}"[:500]
         secs = round(time.monotonic() - t0, 3)
+        _reap_orphans()
         cpu_s = round(tree_cpu_seconds() - c0, 3)
         if cpu_s < 0:
-            # a python worker pool (its daemon runs in its OWN session,
-            # workers reparent to init when it dies) was torn down
-            # inside this window: accumulated CPU left the visible set
-            # faster than this query added any, so the interval
-            # measurement is INVALID — record that honestly instead of
-            # a bogus negative. Seen only on degraded hosts where
-            # stretched walls cross worker idle timeouts; wall time and
-            # correctness are unaffected.
+            # a python worker exited inside this window and its CPU
+            # reached no counted cutime: pyspark's daemon ignores
+            # SIGCHLD, so the kernel reaps a worker that exits while its
+            # daemon lives without charging it to anyone (orphans of a
+            # dead daemon are caught by the subreaper). Accumulated CPU
+            # left the visible set faster than this query added any, so
+            # the interval measurement is INVALID — record that honestly
+            # instead of a bogus negative; wall time and correctness are
+            # unaffected.
             results[name] = {
                 "ok": ok, "secs": secs, "cpu_s": None,
                 "cpu_invalid": True, "err": err,
