@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
 
+from crocus_spark.session import conf_overrides
+
 
 def connected_components(
     edges: DataFrame,
@@ -114,19 +116,18 @@ def connected_components(
         # a few thousand rows, and ~4 jobs/round at the session's full
         # width is task-launch-bound (measured 4.6 s → 2.6 s at
         # sf0.01). A billion-edge contracted graph keeps the session
-        # width; the finally below restores it.
+        # width; the conf scope below restores it.
         sess = edges.sparkSession
         base_width = sess.conf.get("spark.sql.shuffle.partitions")
         loop_width = max(
             8, min(int(base_width), contracted.count() // 50000 + 1)
         )
-        # the narrowed width is scoped by the try below, which starts
-        # IMMEDIATELY after the set: the init jobs (clabels, selfed,
-        # prev_sum) run inside it, so a failure or interrupt in any loop
-        # job restores base_width instead of leaking the narrow setting
-        # session-wide (the session is shared by every later query)
-        sess.conf.set("spark.sql.shuffle.partitions", str(loop_width))
-        try:
+        # the init jobs (clabels, selfed, prev_sum) run inside the scope
+        # too, so a failure or interrupt in any loop job restores
+        # base_width instead of leaking the narrow setting session-wide
+        with conf_overrides(
+            sess, {"spark.sql.shuffle.partitions": str(loop_width)}
+        ):
             clabels = (
                 contracted.groupBy(F.col("u").alias("node"))
                 .agg(F.least(F.first("u"), F.min("v")).alias("comp"))
@@ -210,8 +211,6 @@ def connected_components(
             raise RuntimeError(
                 f"connected_components did not converge in {max_iter} iterations"
             )
-        finally:
-            sess.conf.set("spark.sql.shuffle.partitions", base_width)
     # Generic path (orderable but non-summable ids, e.g. strings): carry
     # the pre-round label as `old` through the round so convergence is a
     # changed-rows check on the checkpointed output.

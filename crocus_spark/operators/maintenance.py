@@ -8,14 +8,21 @@ filesystem for history (a fresh file per scrape date,
 layout healthy" and "read the table as of an earlier commit" — become
 table-maintenance operators in their own right. Delta/Iceberg ship them
 as OPTIMIZE and ``VERSION AS OF``; here they are built from plain
-parquet + a versioned directory scheme so the engine has no library
-dependency, while keeping the same commit discipline (never mutate a
-file a reader might hold open; every commit is a NEW directory).
+parquet + a manifest log so the engine has no library dependency,
+while keeping the same commit discipline (never mutate a file a reader
+might hold open; every commit is a NEW directory).
+
+This module is the ONE owner of the snapshot store's format: the
+``_manifests/`` log (``m{v:08d}.json`` manifests and ``c{v:08d}.json``
+checkpoints), every manifest field, version listing, pin and
+timestamp resolution, the file walk, stats pruning and the delete-set
+readers. The ``crocus_snapshot`` batch source and the
+``crocus_snapshot_tail`` CDC source (``crocus_spark/sources/``) read
+the store only through the accessors here.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import math
 import os
@@ -33,7 +40,6 @@ __all__ = [
     "compact_snapshot",
     "read_manifest",
     "snapshot_data_path",
-    "snapshot_version_path",
     "snapshot_schema",
     "SchemaCompatibilityError",
     "list_snapshot_versions",
@@ -161,44 +167,18 @@ def _manifest_file(state_root: str, version: int) -> str:
     return os.path.join(state_root, MANIFEST_DIR, f"m{version:08d}.json")
 
 
-def snapshot_version_path(state_root: str, version: int) -> str:
-    """LEGACY layout path (pre-manifest ``v{n}`` directories) — kept for
-    reading old stores; new commits go through :func:`commit_manifest`."""
-    return os.path.join(state_root, f"v{version}")
-
-
-def _legacy_versions(state_root: str) -> set[int]:
-    return {
-        int(os.path.basename(p)[1:])
-        for p in glob.glob(os.path.join(state_root, "v*"))
-        if os.path.basename(p)[1:].isdigit()
-    }
-
-
-def _manifest_versions(state_root: str) -> set[int]:
-    mdir = os.path.join(state_root, MANIFEST_DIR)
-    if not os.path.isdir(mdir):
-        return set()
-    return {
-        int(m.group(1))
-        for f in os.listdir(mdir)
-        if (m := _MANIFEST_RE.match(f))
-    }
-
-
 def list_snapshot_versions(state_root: str) -> list[int]:
     """Committed versions under ``state_root``, ascending. A version
     EXISTS iff its manifest file does — the atomic commit point; data
-    directories never define versions — with legacy ``v{n}`` directory
-    versions (stores written before the manifest log existed) MERGED in
-    rather than shadowed: in a mixed store (the moment any
-    commit_manifest runs against an old store) the pre-manifest history
-    must stay listable/expirable, and the first manifest commit must
-    seed from max(legacy)+1 instead of restarting at 0 and colliding
-    with legacy v0 (r6 ADVICE). Per-version, a manifest wins over a
-    same-numbered legacy dir (snapshot_data_path resolves manifests
-    first)."""
-    return sorted(_manifest_versions(state_root) | _legacy_versions(state_root))
+    directories never define versions."""
+    mdir = os.path.join(state_root, MANIFEST_DIR)
+    if not os.path.isdir(mdir):
+        return []
+    return sorted(
+        int(m.group(1))
+        for f in os.listdir(mdir)
+        if (m := _MANIFEST_RE.match(f))
+    )
 
 
 def read_manifest(state_root: str, version: int) -> dict:
@@ -209,13 +189,32 @@ def read_manifest(state_root: str, version: int) -> dict:
         return json.load(f)
 
 
+def _pin_version(
+    state_root: str, version: int | None = None, timestamp=None
+) -> int:
+    """The ONE committed version a read serves: an explicit ``version``
+    (it must be committed), else ``timestamp`` resolved through
+    :func:`resolve_version_as_of`, else the latest committed version."""
+    versions = list_snapshot_versions(state_root)
+    if not versions:
+        raise FileNotFoundError(f"no snapshot versions under {state_root}")
+    if version is not None:
+        if version not in versions:
+            raise FileNotFoundError(
+                f"version {version} not committed under {state_root} "
+                f"(have {versions[0]}..{versions[-1]})"
+            )
+        return version
+    if timestamp is not None:
+        return resolve_version_as_of(state_root, timestamp)
+    return versions[-1]
+
+
 def snapshot_data_path(state_root: str, version: int) -> str:
-    """Absolute data directory for ``version`` — manifest-resolved, with
-    the legacy ``v{n}`` fallback for pre-manifest stores."""
-    mf = _manifest_file(state_root, version)
-    if os.path.exists(mf):
-        return os.path.join(state_root, read_manifest(state_root, version)["data_dir"])
-    return snapshot_version_path(state_root, version)
+    """Absolute primary data directory of ``version``'s manifest."""
+    return os.path.join(
+        state_root, read_manifest(state_root, version)["data_dir"]
+    )
 
 
 def manifest_data_files(
@@ -226,7 +225,8 @@ def manifest_data_files(
     ``append_dirs`` in commit order. This is the ONE accessor readers
     use to enumerate data, so a manifest that references several
     immutable directories (append commits) is invisible to them: the
-    logical table is simply the concatenation."""
+    logical table is simply the concatenation. ``file_stats`` is
+    aligned with exactly this order."""
     out = [
         (os.path.join(state_root, m["data_dir"]), rel, sz)
         for rel, sz in m["files"]
@@ -235,6 +235,99 @@ def manifest_data_files(
         d = os.path.join(state_root, a["data_dir"])
         out.extend((d, rel, sz) for rel, sz in a["files"])
     return out
+
+
+def _scan_dirs(state_root: str, m: dict) -> list[str]:
+    """Absolute data directories a manifest's scan reads: the primary
+    dir (even when it holds no file) and every appended dir."""
+    return [os.path.join(state_root, m["data_dir"])] + [
+        os.path.join(state_root, a["data_dir"])
+        for a in m.get("append_dirs", [])
+    ]
+
+
+def _manifest_dirs(m: dict) -> set[str]:
+    """Every store-relative directory a manifest references — data,
+    appends, and each delete set's cumulative and delta dirs: what a
+    checkpoint folds and what expiry and vacuum reference-count."""
+    dirs = {m["data_dir"]}
+    dirs.update(a["data_dir"] for a in m.get("append_dirs", []))
+    for k in ("deletes", "pos_deletes"):
+        if m.get(k) is not None:
+            dirs.add(m[k]["data_dir"])
+            if m[k].get("delta_dir"):
+                dirs.add(m[k]["delta_dir"])
+    return dirs
+
+
+def _pos_deletes_by_file(
+    state_root: str, m: dict, which: str = "data_dir"
+) -> dict[str, list[int]]:
+    """A manifest's positional deletes as data-file name → sorted row
+    positions: the cumulative set (``which="data_dir"``) or the commit's
+    own delta (``"delta_dir"``). Read driver-side — delete sets are
+    churn-sized by the store's contract."""
+    import pyarrow.parquet as pq
+
+    pd_ = m.get("pos_deletes")
+    if pd_ is None:
+        return {}
+    tbl = pq.read_table(
+        os.path.join(state_root, pd_[which]),
+        columns=["file_name", "row_index"],
+    )
+    by_file: dict[str, set[int]] = {}
+    for fname, pos in zip(
+        tbl["file_name"].to_pylist(), tbl["row_index"].to_pylist()
+    ):
+        by_file.setdefault(fname, set()).add(int(pos))
+    return {f: sorted(ps) for f, ps in by_file.items()}
+
+
+def _prune_files(
+    state_root: str, m: dict, bounds: dict
+) -> tuple[list[tuple[str, str, int]], list[tuple[str, str, int]]]:
+    """Manifest-stats file selection: ``(all, kept)`` entries of
+    :func:`manifest_data_files`. ``bounds`` maps column → (lo, hi); a
+    ``None`` side is unbounded. A file is dropped only when some bound
+    column's recorded [min, max] lies wholly outside its range; files
+    or columns without usable stats are conservatively kept, so pruning
+    never changes results. Bounds go through the same normalization the
+    commit applied to the recorded stats (dates → ISO, bytes → UTF-8),
+    so a ``datetime.date`` compares chronologically with the stored
+    string. Every bound column must be in the manifest's
+    ``stats_columns`` (fail-loud otherwise)."""
+    entries = manifest_data_files(state_root, m)
+    stats = m.get("file_stats")
+    cols = m.get("stats_columns", [])
+    missing = [c for c in bounds if stats is None or c not in cols]
+    if missing:
+        raise ValueError(
+            f"manifest v{m.get('version')} records no stats for {missing}; "
+            f"commit with stats_columns to enable pruning (has: {cols})"
+        )
+    norm = {
+        c: (_stats_jsonable(lo), _stats_jsonable(hi))
+        for c, (lo, hi) in bounds.items()
+    }
+
+    def outside(fstats: dict | None) -> bool:
+        for c, (lo, hi) in norm.items():
+            mm = (fstats or {}).get(c)
+            if mm is not None and (
+                (hi is not None and mm[0] > hi)
+                or (lo is not None and mm[1] < lo)
+            ):
+                return True
+        return False
+
+    stats = stats or []
+    keep = [
+        e
+        for i, e in enumerate(entries)
+        if i >= len(stats) or not outside(stats[i])
+    ]
+    return entries, keep
 
 
 # -- manifest-log checkpoints -------------------------------------------
@@ -296,7 +389,7 @@ def write_log_checkpoint(state_root: str, keep: int = 2) -> int | None:
     last-writer-wins is safe. Checkpoints beyond the newest ``keep``
     are pruned. Returns the folded top version (None on an empty log).
     """
-    committed = sorted(_manifest_versions(state_root))
+    committed = list_snapshot_versions(state_root)
     if not committed:
         return None
     live = set(committed)
@@ -316,17 +409,9 @@ def write_log_checkpoint(state_root: str, keep: int = 2) -> int | None:
         if v <= start_above:
             continue
         m = read_manifest(state_root, v)
-        dirs = {m["data_dir"]}
-        for k in ("deletes", "pos_deletes"):
-            if m.get(k) is not None:
-                dirs.add(m[k]["data_dir"])
-                if m[k].get("delta_dir"):
-                    dirs.add(m[k]["delta_dir"])
-        for a in m.get("append_dirs", []):
-            dirs.add(a["data_dir"])
         entries[str(v)] = {
             "committed_at_ms": m.get("committed_at_ms"),
-            "dirs": sorted(dirs),
+            "dirs": sorted(_manifest_dirs(m)),
             "has_schema": m.get("schema") is not None,
         }
         if m.get("schema") is not None:
@@ -352,6 +437,23 @@ def write_log_checkpoint(state_root: str, keep: int = 2) -> int | None:
         except FileNotFoundError:
             pass
     return top
+
+
+def _version_dirs(state_root: str, versions) -> dict[int, set[str]]:
+    """The directories each of ``versions`` references: folded
+    checkpoint entries answer at or below the fold line without a
+    manifest read, only the suffix manifests are opened."""
+    ckpt = latest_log_checkpoint(state_root)
+    folded = ckpt["entries"] if ckpt is not None else {}
+    fold_top = ckpt["checkpoint_version"] if ckpt is not None else -1
+    out = {}
+    for v in versions:
+        e = folded.get(str(v)) if v <= fold_top else None
+        if e is not None and "dirs" in e:
+            out[v] = set(e["dirs"])
+        else:
+            out[v] = _manifest_dirs(read_manifest(state_root, v))
+    return out
 
 
 def _maybe_checkpoint(state_root: str, version: int) -> None:
@@ -381,7 +483,7 @@ def _log_times(state_root: str) -> list[tuple[int, int | None]]:
     ascending — folded entries answer for versions at or below the
     newest checkpoint (intersected with the live manifest set), only
     the suffix manifests above it are opened."""
-    committed = sorted(_manifest_versions(state_root))
+    committed = list_snapshot_versions(state_root)
     ckpt = latest_log_checkpoint(state_root)
     folded: dict[int, object] = {}
     top = -1
@@ -467,8 +569,8 @@ def _check_schema_compat(prev: dict, new: dict) -> None:
 
 
 def _latest_committed_schema(state_root: str, below: int) -> dict | None:
-    """The newest committed schema at a version < ``below`` (manifest
-    versions only — legacy ``v{n}`` dirs never recorded one). Walks
+    """The newest committed schema at a version < ``below`` (manifests
+    committed without one are skipped). Walks
     newest-first opening suffix manifests only until the fold line: for
     folded versions the checkpoint says WHETHER a schema exists without
     a file read, and carries the checkpoint-newest schema whole — the
@@ -479,7 +581,7 @@ def _latest_committed_schema(state_root: str, below: int) -> dict | None:
     cvs = _checkpoint_versions(state_root)
     top = cvs[-1] if cvs else -1
     ckpt: dict | None = None
-    for v in sorted(_manifest_versions(state_root), reverse=True):
+    for v in reversed(list_snapshot_versions(state_root)):
         if v >= below:
             continue
         e = None
@@ -510,7 +612,7 @@ def _latest_committed_at(state_root: str, below: int) -> int | None:
     cvs = _checkpoint_versions(state_root)
     top = cvs[-1] if cvs else -1
     entries: dict | None = None
-    for v in sorted(_manifest_versions(state_root), reverse=True):
+    for v in reversed(list_snapshot_versions(state_root)):
         if v >= below:
             continue
         e = None
@@ -560,9 +662,8 @@ def resolve_version_as_of(state_root: str, ts) -> int:
     (epoch ms, datetime, date, or ISO string) — the Delta/Iceberg
     timestamp-travel rule. Commit timestamps are strictly monotone by
     construction (commit clamps past the predecessor), so the answer is
-    unique and stable. Versions with no recorded timestamp (legacy
-    ``v{n}`` dirs, pre-field manifests) cannot be located in time and
-    are skipped; asking for an instant before the first timestamped
+    unique and stable. Versions with no recorded timestamp (pre-field
+    manifests) cannot be located in time and are skipped; asking for an instant before the first timestamped
     commit raises — silently returning something older would time-travel
     to an unlocatable state. Reads the folded checkpoint + the suffix
     manifests above it (O(suffix)), never one JSON per version."""
@@ -574,8 +675,8 @@ def resolve_version_as_of(state_root: str, ts) -> int:
     if best is None:
         raise FileNotFoundError(
             f"no version committed at or before {ts!r} under {state_root} "
-            "(legacy versions without committed_at_ms are not resolvable "
-            "by timestamp)"
+            "(versions without committed_at_ms are not resolvable by "
+            "timestamp)"
         )
     return best
 
@@ -596,15 +697,24 @@ def snapshot_schema(state_root: str, version: int):
     knows that version's schema without opening a single parquet footer
     (the r6 gap: data dirs + file lists were committed atomically but a
     reader of v3 still had to infer v3's schema from data files).
-    Returns None for manifests committed before schemas were recorded
-    and for legacy ``v{n}`` versions."""
+    Returns None for manifests committed without a schema."""
+    return _struct(read_manifest(state_root, version).get("schema"))
+
+
+def _struct(schema_json: dict | None):
     from pyspark.sql import types as T
 
-    mf = _manifest_file(state_root, version)
-    if not os.path.exists(mf):
-        return None
-    s = read_manifest(state_root, version).get("schema")
-    return None if s is None else T.StructType.fromJson(s)
+    return None if schema_json is None else T.StructType.fromJson(schema_json)
+
+
+def _pinned_reader(spark: SparkSession, m: dict):
+    """``spark.read`` carrying the manifest's committed writer schema
+    when it recorded one: the pinned manifest is then self-describing
+    (no footer reads to learn the version's shape, and a version written
+    before a column existed reads with ITS schema, not the current
+    one)."""
+    schema = _struct(m.get("schema"))
+    return spark.read if schema is None else spark.read.schema(schema)
 
 
 def _stats_jsonable(v):
@@ -819,39 +929,20 @@ def read_snapshot(
     mid-query cannot change or tear the result. O(selected version):
     history depth never enters the scan, because each commit wrote full
     state, not a delta."""
-    versions = list_snapshot_versions(state_root)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions under {state_root}")
-    if version is None:
-        version = versions[-1]
-    if version not in versions:
-        raise FileNotFoundError(
-            f"version {version} not in {versions} under {state_root}"
-        )
-    # Read with the COMMITTED writer schema when the manifest recorded
-    # one: the pinned manifest is then fully self-describing (no footer
-    # reads to learn the version's shape, and a version written before a
-    # column existed reads with ITS schema, not the current one).
-    schema = snapshot_schema(state_root, version)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    mf = _manifest_file(state_root, version)
-    if not os.path.exists(mf):  # legacy v{n} store: one private dir
-        return reader.parquet(snapshot_data_path(state_root, version))
-    m = read_manifest(state_root, version)
-    dirs = [os.path.join(state_root, m["data_dir"])] + [
-        os.path.join(state_root, a["data_dir"])
-        for a in m.get("append_dirs", [])
-    ]
-    df = reader.parquet(*dirs)
+    m = read_manifest(state_root, _pin_version(state_root, version))
+    df = _pinned_reader(spark, m).parquet(*_scan_dirs(state_root, m))
     # positional deletes FIRST: they tag rows with _metadata, which is
     # only resolvable on the raw file scan, not after a join
     df = _apply_pos_deletes(spark, state_root, m, df)
-    df = _apply_deletes(spark, state_root, m, df)
-    return df
+    return _apply_deletes(spark, state_root, m, df)
 
 
 def _apply_pos_deletes(
-    spark: SparkSession, state_root: str, manifest: dict, df: DataFrame
+    spark: SparkSession,
+    state_root: str,
+    manifest: dict,
+    df: DataFrame,
+    address: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Apply a manifest's committed POSITIONAL-delete set: tag each
     scanned row with its physical address (``_metadata.file_name``,
@@ -861,24 +952,27 @@ def _apply_pos_deletes(
     broadcasts the anti-join; unlike equality deletes it can erase ONE
     copy of a row that has exact duplicates, because the address is
     unique even when every data column collides. ``df`` must be the raw
-    multi-dir file scan (``_metadata`` resolves only there)."""
+    multi-dir file scan (``_metadata`` resolves only there). With
+    ``address=(file_col, pos_col)`` every live row keeps its address
+    under those names."""
     pd_ = manifest.get("pos_deletes")
-    if pd_ is None:
+    if pd_ is None and address is None:
         return df
+    fcol, pcol = address or ("__cs_file", "__cs_pos")
     tagged = df.select(
         "*",
-        F.col("_metadata.file_name").alias("__cs_file"),
-        F.col("_metadata.row_index").alias("__cs_pos"),
+        F.col("_metadata.file_name").alias(fcol),
+        F.col("_metadata.row_index").alias(pcol),
     )
-    keys = spark.read.parquet(
-        os.path.join(state_root, pd_["data_dir"])
-    ).select(
-        F.col("file_name").alias("__cs_file"),
-        F.col("row_index").alias("__cs_pos"),
-    )
-    return tagged.join(keys, ["__cs_file", "__cs_pos"], "left_anti").drop(
-        "__cs_file", "__cs_pos"
-    )
+    if pd_ is not None:
+        keys = spark.read.parquet(
+            os.path.join(state_root, pd_["data_dir"])
+        ).select(
+            F.col("file_name").alias(fcol),
+            F.col("row_index").alias(pcol),
+        )
+        tagged = tagged.join(keys, [fcol, pcol], "left_anti")
+    return tagged if address else tagged.drop(fcol, pcol)
 
 
 def read_snapshot_with_positions(
@@ -892,42 +986,11 @@ def read_snapshot_with_positions(
     files, so they stay valid across append and delete commits (old
     files never move) and retire at compaction, where the rewrite folds
     them into a fresh physical layout."""
-    versions = list_snapshot_versions(state_root)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions under {state_root}")
-    if version is None:
-        version = versions[-1]
-    if version not in versions:
-        raise FileNotFoundError(
-            f"version {version} not in {versions} under {state_root}"
-        )
-    mf = _manifest_file(state_root, version)
-    if not os.path.exists(mf):
-        raise ValueError(
-            "positional addressing needs a manifest-committed version "
-            f"(v{version} is a legacy store)"
-        )
-    m = read_manifest(state_root, version)
-    schema = snapshot_schema(state_root, version)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    dirs = [os.path.join(state_root, m["data_dir"])] + [
-        os.path.join(state_root, a["data_dir"])
-        for a in m.get("append_dirs", [])
-    ]
-    tagged = reader.parquet(*dirs).select(
-        "*",
-        F.col("_metadata.file_name").alias("_file"),
-        F.col("_metadata.row_index").alias("_pos"),
+    m = read_manifest(state_root, _pin_version(state_root, version))
+    scan = _pinned_reader(spark, m).parquet(*_scan_dirs(state_root, m))
+    tagged = _apply_pos_deletes(
+        spark, state_root, m, scan, address=("_file", "_pos")
     )
-    pd_ = m.get("pos_deletes")
-    if pd_ is not None:
-        keys = spark.read.parquet(
-            os.path.join(state_root, pd_["data_dir"])
-        ).select(
-            F.col("file_name").alias("_file"),
-            F.col("row_index").alias("_pos"),
-        )
-        tagged = tagged.join(keys, ["_file", "_pos"], "left_anti")
     return _apply_deletes(spark, state_root, m, tagged)
 
 
@@ -1320,50 +1383,18 @@ def read_snapshot_pruned_where(
     sort only prunes on its own axis. Files lacking usable stats for
     any bound column are conservatively kept (pruning must never change
     results); every bound column must be in the manifest's
-    ``stats_columns`` (fail-loud otherwise)."""
-    versions = list_snapshot_versions(state_root)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions under {state_root}")
-    if version is None:
-        version = versions[-1]
-    m = read_manifest(state_root, version)
-    data_root = os.path.join(state_root, m["data_dir"])
-    # (dir, rel, size) across the primary dir AND append dirs — the
-    # manifest's file_stats list is aligned with exactly this order
-    # (appends extend it with their files' footer stats at commit)
-    entries = manifest_data_files(state_root, m)
-    stats = m.get("file_stats")
-    cols = m.get("stats_columns", [])
-    missing = [c for c in bounds if stats is None or c not in cols]
-    if missing:
-        raise ValueError(
-            f"manifest v{version} records no stats for {missing}; "
-            f"commit with stats_columns to enable pruning (has: {cols})"
-        )
-    # normalize the caller's bounds through the SAME conversion the
-    # commit applied to the stored stats (dates/datetimes → ISO,
-    # bytes → UTF-8): a datetime.date lo against a string min/max is
-    # then a well-defined chronological comparison, not a TypeError
-    norm = {
-        c: (_stats_jsonable(lo), _stats_jsonable(hi))
-        for c, (lo, hi) in bounds.items()
-    }
-    keep = []
-    for (d, rel, _sz), fstats in zip(entries, stats):
-        ok = True
-        for c, (lo, hi) in norm.items():
-            mm = (fstats or {}).get(c)
-            if mm is not None and (mm[1] < lo or mm[0] > hi):
-                ok = False
-                break
-        if ok:
-            keep.append(os.path.join(d, rel))
-    schema = snapshot_schema(state_root, version)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    info = {"files_total": len(entries), "files_selected": len(keep)}
-    if not keep:  # empty frame with the committed schema
-        return reader.parquet(data_root).limit(0), info
-    pruned = _apply_pos_deletes(spark, state_root, m, reader.parquet(*keep))
+    ``stats_columns`` (fail-loud otherwise). A ``None`` bound side is
+    unbounded."""
+    m = read_manifest(state_root, _pin_version(state_root, version))
+    entries, kept = _prune_files(state_root, m, bounds)
+    reader = _pinned_reader(spark, m)
+    info = {"files_total": len(entries), "files_selected": len(kept)}
+    if not kept:  # empty frame with the committed schema
+        return reader.parquet(*_scan_dirs(state_root, m)).limit(0), info
+    pruned = _apply_pos_deletes(
+        spark, state_root, m,
+        reader.parquet(*[os.path.join(d, rel) for d, rel, _sz in kept]),
+    )
     return _apply_deletes(spark, state_root, m, pruned), info
 
 
@@ -1393,20 +1424,9 @@ def compact_snapshot(
     fold at the next rewrite."""
     compact_head = version is None
     while True:
-        versions = list_snapshot_versions(state_root)
-        if not versions:
-            raise FileNotFoundError(
-                f"no snapshot versions under {state_root}"
-            )
-        log_top = versions[-1]
-        latest = log_top if compact_head else version
-        if latest not in versions:
-            raise FileNotFoundError(
-                f"version {latest} not in {versions} under {state_root}"
-            )
-        mf = _manifest_file(state_root, latest)
-        m = read_manifest(state_root, latest) if os.path.exists(mf) else {}
-        src = snapshot_data_path(state_root, latest)
+        log_top = _pin_version(state_root)
+        latest = log_top if compact_head else _pin_version(state_root, version)
+        m = read_manifest(state_root, latest)
         out_dir = f"d-{uuid.uuid4().hex[:12]}"
         folds = (
             m.get("deletes") is not None
@@ -1448,7 +1468,7 @@ def compact_snapshot(
         else:
             _df, stats = compact_small_files(
                 spark,
-                src,
+                os.path.join(state_root, m["data_dir"]),
                 os.path.join(state_root, out_dir),
                 target_file_bytes,
                 sort_col=sort_col,
@@ -1525,18 +1545,7 @@ def restore_snapshot(state_root: str, version: int) -> int:
     CAS-pinned to log-top+1 with metadata-only retries: the restored
     content is pinned to ``version`` by request, so a concurrent
     commit losing to it is the caller's stated intent."""
-    versions = list_snapshot_versions(state_root)
-    if version not in versions:
-        raise FileNotFoundError(
-            f"version {version} not in {versions} under {state_root}"
-        )
-    mf = _manifest_file(state_root, version)
-    if not os.path.exists(mf):
-        raise ValueError(
-            f"v{version} is a legacy directory version; restore needs a "
-            "manifest-committed source"
-        )
-    src = read_manifest(state_root, version)
+    src = read_manifest(state_root, _pin_version(state_root, version))
     body_extra = {"restored_from": version}
     for k in ("deletes", "pos_deletes", "append_dirs",
               "stats_columns", "file_stats", "txns"):
@@ -1647,10 +1656,10 @@ def expire_snapshots(
     expiry to versions whose MANIFEST-RECORDED ``committed_at_ms`` is
     strictly before the cutoff — retention keyed off the commit
     protocol's own clock, not filesystem mtimes (which a restore/copy
-    perturbs silently). A version with no recorded timestamp (legacy
-    ``v{n}`` dirs, pre-field manifests) can never prove it is old
-    enough, so under ``older_than`` it is conservatively KEPT — the
-    same fail-safe direction as Delta's retention check.
+    perturbs silently). A version with no recorded timestamp (pre-field
+    manifests) can never prove it is old enough, so under
+    ``older_than`` it is conservatively KEPT — the same fail-safe
+    direction as Delta's retention check.
 
     Manifests drop first (the version disappears atomically), then data
     directories that no SURVIVING manifest references are removed —
@@ -1658,7 +1667,7 @@ def expire_snapshots(
     dirs and compaction makes old dirs unreferenced. Never expire a
     version a running reader could hold: callers gate this on
     reader-lease age in a real deployment, exactly as Delta VACUUM's
-    retention check does. Legacy ``v{n}`` stores expire by directory.
+    retention check does.
     """
     import shutil
 
@@ -1668,55 +1677,20 @@ def expire_snapshots(
         cutoff = _as_of_ms(older_than)
         # folded checkpoint + suffix, not one JSON per candidate version
         times = dict(_log_times(state_root))
-
-        def _old_enough(v: int) -> bool:
-            if v not in times:
-                return False  # legacy dir: no commit time, keep
-            ts = times[v]
-            return ts is not None and ts < cutoff
-
-        drop = [v for v in drop if _old_enough(v)]
+        drop = [
+            v for v in drop
+            if times.get(v) is not None and times[v] < cutoff
+        ]
     # a version any branch ref points at is NEVER expired — a ref is a
     # running reader that hasn't started yet (Iceberg's retention rule)
     pinned = set(list_branches(state_root).values())
     drop = [v for v in drop if v not in pinned]
     keep = [v for v in versions if v not in drop]
-    manifested = _manifest_versions(state_root)
-    # Mixed stores expire per-version by layout (r6 ADVICE): manifest
-    # versions drop manifest-first with data-dir refcounting; legacy
-    # ``v{n}`` versions (one private dir each, never shared) drop by
-    # directory.
-    ckpt = latest_log_checkpoint(state_root)
-    _folded_entries = ckpt["entries"] if ckpt is not None else {}
-    _fold_top = ckpt["checkpoint_version"] if ckpt is not None else -1
-
-    def _dirs(v: int) -> set[str]:
-        # folded dirs answer below the fold line without a manifest read
-        e = _folded_entries.get(str(v)) if v <= _fold_top else None
-        if e is not None and "dirs" in e:
-            return set(e["dirs"])
-        m = read_manifest(state_root, v)
-        dirs = {m["data_dir"]}
-        for k in ("deletes", "pos_deletes"):
-            if m.get(k) is not None:
-                dirs.add(m[k]["data_dir"])
-                if m[k].get("delta_dir"):
-                    dirs.add(m[k]["delta_dir"])
-        for a in m.get("append_dirs", []):
-            dirs.add(a["data_dir"])
-        return dirs
-
-    referenced = {
-        d for v in keep if v in manifested for d in _dirs(v)
-    }
-    dropped_dirs = {
-        d for v in drop if v in manifested for d in _dirs(v)
-    }
+    dirs = _version_dirs(state_root, versions)
+    referenced = {d for v in keep for d in dirs[v]}
+    dropped_dirs = {d for v in drop for d in dirs[v]}
     for v in drop:
-        if v in manifested:
-            os.unlink(_manifest_file(state_root, v))
-        else:
-            shutil.rmtree(snapshot_version_path(state_root, v))
+        os.unlink(_manifest_file(state_root, v))
     for d in sorted(dropped_dirs - referenced):
         shutil.rmtree(os.path.join(state_root, d), ignore_errors=True)
     return drop
@@ -1745,26 +1719,11 @@ def vacuum_orphans(state_root: str, grace_seconds: float = 86400.0):
     import time
 
     now = time.time()
-    ckpt = latest_log_checkpoint(state_root)
-    folded = ckpt["entries"] if ckpt is not None else {}
-    fold_top = ckpt["checkpoint_version"] if ckpt is not None else -1
-    referenced: set[str] = set()
-    for v in _manifest_versions(state_root):
-        # manifests are immutable, so folded dir lists are exact —
-        # reference collection reads checkpoint + suffix, not every JSON
-        e = folded.get(str(v)) if v <= fold_top else None
-        if e is not None and "dirs" in e:
-            referenced.update(e["dirs"])
-            continue
-        m = read_manifest(state_root, v)
-        referenced.add(m["data_dir"])
-        for k in ("deletes", "pos_deletes"):
-            if m.get(k) is not None:
-                referenced.add(m[k]["data_dir"])
-                if m[k].get("delta_dir"):
-                    referenced.add(m[k]["delta_dir"])
-        for a in m.get("append_dirs", []):
-            referenced.add(a["data_dir"])
+    # manifests are immutable, so folded dir lists are exact — reference
+    # collection reads checkpoint + suffix, not every JSON
+    referenced = set().union(
+        *_version_dirs(state_root, list_snapshot_versions(state_root)).values()
+    )
     removed: list[str] = []
     for entry in sorted(os.listdir(state_root)):
         if not entry.startswith(_DATA_DIR_PREFIXES):

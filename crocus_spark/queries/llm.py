@@ -296,14 +296,16 @@ def neardup_embedding_cosine(spark, sf_dir):
     )
 
 
-@register(
-    "ann_bruteforce_topk",
-    oracle="""
+def _cosine_top5_oracle(corpus: str) -> str:
+    """DuckDB oracle of the exact cosine top-5 (ties by neighbor_id) of
+    the ten query vectors ``vec_id < 10`` against a corpus. ``corpus``
+    is the CTE text, as indented in the oracle, that defines
+    ``c(neighbor_id, cv)`` and whatever CTEs it needs, each ending in a
+    comma and a newline."""
+    return f"""
     WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
                WHERE vec_id < 10),
-    c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings
-          WHERE vec_id >= 10),
-    scored AS (
+{corpus}    scored AS (
       SELECT query_id, neighbor_id,
              round(list_cosine_similarity(qv::DOUBLE[], cv::DOUBLE[]), 6) AS cos
       FROM q CROSS JOIN c
@@ -315,7 +317,23 @@ def neardup_embedding_cosine(spark, sf_dir):
     SELECT query_id, neighbor_id, cos, rank
     FROM ranked WHERE rank <= 5
     ORDER BY query_id, rank
-    """,
+    """
+
+
+# the whole corpus, and the corpus under the filtered family's predicate
+_CORPUS_ALL = """\
+    c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings
+          WHERE vec_id >= 10),
+"""
+_CORPUS_LABEL3 = """\
+    c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings
+          WHERE vec_id >= 10 AND label = 3),
+"""
+
+
+@register(
+    "ann_bruteforce_topk",
+    oracle=_cosine_top5_oracle(_CORPUS_ALL),
     tags=("llm", "similarity", "headline"),
 )
 def ann_bruteforce_topk(spark, sf_dir):
@@ -554,24 +572,7 @@ def ann_ivf_topk(spark, sf_dir):
 
 @register(
     "ann_ivf_fullprobe_topk",
-    oracle="""
-    WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-               WHERE vec_id < 10),
-    c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings
-          WHERE vec_id >= 10),
-    scored AS (
-      SELECT query_id, neighbor_id,
-             round(list_cosine_similarity(qv::DOUBLE[], cv::DOUBLE[]), 6) AS cos
-      FROM q CROSS JOIN c
-    ), ranked AS (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, neighbor_id, cos, rank
-    FROM ranked WHERE rank <= 5
-    ORDER BY query_id, rank
-    """,
+    oracle=_cosine_top5_oracle(_CORPUS_ALL),
     tags=("llm", "similarity"),
 )
 def ann_ivf_fullprobe_topk(spark, sf_dir):
@@ -6383,24 +6384,7 @@ def _filtered_store(spark, sf_dir, corpus):
 
 @register(
     "ann_filtered_fullprobe",
-    oracle="""
-    WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-               WHERE vec_id < 10),
-    c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings
-          WHERE vec_id >= 10 AND label = 3),
-    scored AS (
-      SELECT query_id, neighbor_id,
-             round(list_cosine_similarity(qv::DOUBLE[], cv::DOUBLE[]), 6) AS cos
-      FROM q CROSS JOIN c
-    ), ranked AS (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, neighbor_id, cos, rank
-    FROM ranked WHERE rank <= 5
-    ORDER BY query_id, rank
-    """,
+    oracle=_cosine_top5_oracle(_CORPUS_LABEL3),
     tags=("llm", "similarity", "filtered"),
 )
 def ann_filtered_fullprobe(spark, sf_dir):
@@ -6522,9 +6506,7 @@ def ann_filtered_topk(spark, sf_dir):
 
 @register(
     "dq_ann_filtered_recall_probe",
-    oracle="""
-    WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-               WHERE vec_id < 10),
+    oracle=_cosine_top5_oracle("""\
     base AS (SELECT vec_id, embedding, label FROM embeddings
              WHERE vec_id >= 10),
     kept AS (
@@ -6540,19 +6522,7 @@ def ann_filtered_topk(spark, sf_dir):
     ),
     c AS (SELECT vec_id AS neighbor_id, embedding AS cv
           FROM final WHERE label = 3),
-    scored AS (
-      SELECT query_id, neighbor_id,
-             round(list_cosine_similarity(qv::DOUBLE[], cv::DOUBLE[]), 6) AS cos
-      FROM q CROSS JOIN c
-    ), ranked AS (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, neighbor_id, cos, rank
-    FROM ranked WHERE rank <= 5
-    ORDER BY query_id, rank
-    """,
+"""),
     tags=("llm", "similarity", "filtered", "dq", "monitor"),
 )
 def dq_ann_filtered_recall_probe(spark, sf_dir):
@@ -6723,24 +6693,7 @@ def _ivfpq_filtered_store(spark, sf_dir, corpus):
 
 @register(
     "ann_ivfpq_filtered_fullprobe",
-    oracle="""
-    WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-               WHERE vec_id < 10),
-    c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings
-          WHERE vec_id >= 10 AND label = 3),
-    scored AS (
-      SELECT query_id, neighbor_id,
-             round(list_cosine_similarity(qv::DOUBLE[], cv::DOUBLE[]), 6) AS cos
-      FROM q CROSS JOIN c
-    ), ranked AS (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, neighbor_id, cos, rank
-    FROM ranked WHERE rank <= 5
-    ORDER BY query_id, rank
-    """,
+    oracle=_cosine_top5_oracle(_CORPUS_LABEL3),
     tags=("llm", "similarity", "filtered", "ivfpq"),
 )
 def ann_ivfpq_filtered_fullprobe(spark, sf_dir):

@@ -13,34 +13,13 @@ actual point) is asserted in tests/test_plans.py.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import functions as F
 
 from crocus_spark.io import load
 from crocus_spark.queries import register
 from crocus_spark.queries._det import dsum, dsum_sql
 from crocus_spark.queries.sources_q import _scratch
-
-
-@contextmanager
-def conf_overrides(spark, overrides: dict[str, str]):
-    """Set session SQL confs, restore on exit — runtime filters are
-    gated by size thresholds calibrated for clusters (creation side
-    < 10 MiB, application side > 10 GiB scan), so exercising them on
-    test-scale data means temporarily lifting the application-side
-    gate. On a real 100 TB table the defaults fire on their own."""
-    old = {k: spark.conf.get(k, None) for k in overrides}
-    try:
-        for k, v in overrides.items():
-            spark.conf.set(k, v)
-        yield
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+from crocus_spark.session import conf_overrides
 
 
 @register(

@@ -163,7 +163,7 @@ def sql_cbo_join_reorder(spark, sf_dir):
     rows at 100 TB. Materialized eagerly under the CBO confs
     (restore-on-exit), which the oracle hash-match proves is
     semantics-neutral."""
-    from crocus_spark.queries.runtime_q import conf_overrides
+    from crocus_spark.session import conf_overrides
 
     _cbo_tables(spark, sf_dir)
     sql = _CBO_JOIN_SQL.format(

@@ -17,6 +17,7 @@ that delegation deterministic and oracle-comparable:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -155,3 +156,27 @@ def warm_python_workers(spark) -> None:
 
     n = spark.sparkContext.defaultParallelism
     spark.range(0, n, 1, n).mapInPandas(_noop_batches, "id long").count()
+
+
+@contextmanager
+def conf_overrides(spark, overrides: dict[str, str | None]):
+    """Set session SQL confs for the ``with`` body and restore the
+    previous values on exit, error or not — the one scope for a
+    temporary session setting (the session is shared by every later
+    query, so a leaked setting changes them all). A ``None`` value
+    leaves that key untouched. Used for gates calibrated for clusters
+    (runtime filters fire only above a 10 GiB application-side scan,
+    so test-scale data lifts the gate) and for widths sized to one
+    operation (a stream drain, an iterative loop)."""
+    overrides = {k: v for k, v in overrides.items() if v is not None}
+    old = {k: spark.conf.get(k, None) for k in overrides}
+    try:
+        for k, v in overrides.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -18,7 +18,9 @@ The logical result is identical to ``operators.maintenance
 .read_snapshot`` (pinned by the registry query + tests); the point of
 the second path is the SURFACE — SQL and non-Python consumers — and
 the scan-time delete application, which at 100 TB avoids materializing
-a joined view before the first filter."""
+a joined view before the first filter. Pins, the file walk, stats
+pruning and the delete-set reads all come from
+``operators/maintenance.py``, the store's one format owner."""
 
 from __future__ import annotations
 
@@ -33,11 +35,18 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from crocus_spark.sources.snapshot_stream import (
-    _committed_versions,
-    _log_times,
-    _read_manifest,
+from crocus_spark.operators.maintenance import (
+    _latest_committed_schema,
+    _manifest_dirs,
+    _pin_version,
+    _pos_deletes_by_file,
+    _prune_files,
+    commit_append_dir,
+    commit_manifest,
+    list_snapshot_versions,
+    read_manifest,
 )
+from crocus_spark.sources.snapshot_stream import _epoch_ms_or_iso
 
 
 @dataclass
@@ -56,7 +65,7 @@ class _SnapshotBatchReader(DataSourceReader):
         self.root = options.get("path")
         if not self.root:
             raise ValueError("crocus_snapshot requires option 'path'")
-        self.version = _resolve_pin(self.root, options)
+        self.version = _pin_from_options(self.root, options)
         self._schema_json = schema.json()
         self._pa_schema = None
         # Manifest-stats file pruning via the EXPLICIT `prune` option —
@@ -83,82 +92,22 @@ class _SnapshotBatchReader(DataSourceReader):
                 self._ranges[c] = [b[0], b[1]]
 
     def partitions(self):
-        import pyarrow.parquet as pq
-
-        from crocus_spark.sources.snapshot_stream import _jsonable
-
-        m = _read_manifest(self.root, self.version)
-        entries = [
-            (_os.path.join(self.root, m["data_dir"], rel),
-             _os.path.basename(rel))
-            for rel, _sz in m["files"]
-        ]
-        for a in m.get("append_dirs", []):
-            entries.extend(
-                (_os.path.join(self.root, a["data_dir"], rel),
-                 _os.path.basename(rel))
-                for rel, _sz in a["files"]
-            )
-        # stats pruning: file_stats aligns with the (primary + appends)
-        # entry order — the manifest_data_files contract
-        ranges = self._ranges
-        stats = m.get("file_stats")
-        stat_cols = set(m.get("stats_columns", []))
-        missing = [c for c in ranges if stats is None or c not in stat_cols]
-        if missing:
-            raise ValueError(
-                f"manifest v{self.version} records no stats for "
-                f"{missing}; commit with stats_columns to enable "
-                f"pruning (has: {sorted(stat_cols)})"
-            )
-        bounds = {
-            c: (
-                None if r[0] is None else _jsonable(r[0]),
-                None if r[1] is None else _jsonable(r[1]),
-            )
-            for c, r in ranges.items()
-            if r[0] is not None or r[1] is not None
-        }
-        keep_mask = [True] * len(entries)
-        if stats is not None and bounds:
-            for i in range(min(len(entries), len(stats))):
-                fstats = stats[i]
-                if fstats is None:
-                    continue
-                for c, (lo, hi) in bounds.items():
-                    mm = fstats.get(c)
-                    if mm is None:
-                        continue
-                    if (hi is not None and mm[0] > hi) or (
-                        lo is not None and mm[1] < lo
-                    ):
-                        keep_mask[i] = False
-                        break
-        entries = [e for e, k in zip(entries, keep_mask) if k]
-        # cumulative positional deletes: (file -> positions), read once
-        # at plan time (churn-sized by the store's contract — the same
-        # driver-side read the CDC planner does)
-        dead_by_file: dict[str, list[int]] = {}
-        pd_set = m.get("pos_deletes")
-        if pd_set is not None:
-            tbl = pq.read_table(
-                _os.path.join(self.root, pd_set["data_dir"])
-            )
-            for fname, pos in zip(
-                tbl["file_name"].to_pylist(), tbl["row_index"].to_pylist()
-            ):
-                dead_by_file.setdefault(fname, []).append(int(pos))
+        m = read_manifest(self.root, self.version)
+        _all, kept = _prune_files(self.root, m, self._ranges)
+        # cumulative positional deletes (file -> positions), read once at
+        # plan time (churn-sized by the store's contract)
+        dead_by_file = _pos_deletes_by_file(self.root, m)
         eq = m.get("deletes")
         eq_dir = eq["data_dir"] if eq is not None else None
         key_cols = list(eq["key_columns"]) if eq is not None else []
         return [
             _SnapFilePartition(
-                path,
-                sorted(dead_by_file.get(fname, ())),
+                _os.path.join(d, rel),
+                dead_by_file.get(_os.path.basename(rel), []),
                 eq_dir,
                 key_cols,
             )
-            for path, fname in entries
+            for d, rel, _sz in kept
         ]
 
     def _arrow_schema(self):
@@ -249,44 +198,17 @@ class _SnapshotBatchReader(DataSourceReader):
         yield from pa.table(arrays, schema=pa_schema).to_batches()
 
 
-def _resolve_pin(root: str, options) -> int:
-    """The ONE manifest this reader serves: explicit version_as_of,
-    else timestamp_as_of over the checkpoint-backed commit clocks,
-    else the latest committed version."""
-    versions = _committed_versions(root)
-    if not versions:
-        raise ValueError(f"no committed snapshot versions under {root}")
+def _pin_from_options(root: str, options) -> int:
+    """The ONE manifest this reader serves: ``version_as_of``, else
+    ``timestamp_as_of`` (all-digit strings are epoch ms), else the
+    latest committed version."""
     v = options.get("version_as_of")
-    if v is not None:
-        v = int(v)
-        if v not in versions:
-            raise ValueError(
-                f"version {v} not committed under {root} "
-                f"(have {versions[0]}..{versions[-1]})"
-            )
-        return v
     ts = options.get("timestamp_as_of")
-    if ts is not None:
-        import datetime
-
-        s = str(ts)
-        if not s.lstrip("-").isdigit():
-            dt = datetime.datetime.fromisoformat(s)
-            if dt.tzinfo is None:
-                dt = dt.replace(tzinfo=datetime.timezone.utc)
-            want = int(dt.timestamp() * 1000)
-        else:
-            want = int(s)
-        best = None
-        for vv, c in _log_times(root):
-            if c is not None and c <= want:
-                best = vv
-        if best is None:
-            raise ValueError(
-                f"no version committed at or before {ts!r} under {root}"
-            )
-        return best
-    return versions[-1]
+    return _pin_version(
+        root,
+        None if v is None else int(v),
+        None if ts is None else _epoch_ms_or_iso(ts),
+    )
 
 
 class SnapshotBatchSource(DataSource):
@@ -302,18 +224,10 @@ class SnapshotBatchSource(DataSource):
         root = self.options.get("path")
         if not root:
             raise ValueError("crocus_snapshot requires option 'path'")
-        pin = _resolve_pin(root, self.options)
-        m = _read_manifest(root, pin)
-        s = m.get("schema")
-        if s is None:
-            # walk back to the newest committed schema at or below the
-            # pin (legacy commits recorded none)
-            for v in reversed(_committed_versions(root)):
-                if v > pin:
-                    continue
-                s = _read_manifest(root, v).get("schema")
-                if s is not None:
-                    break
+        # the newest committed schema at or below the pin (manifests
+        # committed without one inherit their predecessor's)
+        pin = _pin_from_options(root, self.options)
+        s = _latest_committed_schema(root, below=pin + 1)
         if s is None:
             raise ValueError(
                 "crocus_snapshot needs manifests with committed writer "
@@ -427,6 +341,39 @@ def _write_arrow_part(
     return _SnapWriteCommit(fname, n)
 
 
+def _settle_staged(stage: str, messages, move_to: str | None = None):
+    """The staged-commit check both sinks run before linking a
+    manifest: the commit messages (one successful attempt per task)
+    define the committed files, not the staging dir's contents. Refuse
+    when a message names a file that is missing; delete every leftover
+    no message names (a failed attempt's partial temp, a speculative
+    duplicate part). ``move_to`` (created once the check passes)
+    receives the named files."""
+    _os.makedirs(stage, exist_ok=True)
+    committed = {
+        m.rel_file
+        for m in messages
+        if m is not None and m.rel_file is not None
+    }
+    lost = sorted(committed - set(_os.listdir(stage)))
+    if lost:
+        raise IOError(
+            f"commit message references missing staged file(s) "
+            f"{lost} under {stage}; refusing to commit a hole"
+        )
+    if move_to is not None:
+        _os.makedirs(move_to, exist_ok=True)
+    for f in _os.listdir(stage):
+        path = _os.path.join(stage, f)
+        if f not in committed:
+            try:
+                _os.unlink(path)
+            except OSError:
+                pass
+        elif move_to is not None:
+            _os.replace(path, _os.path.join(move_to, f))
+
+
 class _SnapshotBatchWriter(DataSourceArrowWriter):
     def __init__(self, options, schema: T.StructType, overwrite: bool):
         self.root = options.get("path")
@@ -471,31 +418,9 @@ class _SnapshotBatchWriter(DataSourceArrowWriter):
         partial ``.tmp-*.inprogress``, or a duplicate renamed part from
         a second successful attempt) are deleted here before the
         manifest is linked, so they can never be committed."""
-        from crocus_spark.operators.maintenance import (
-            commit_append_dir,
-            commit_manifest,
-        )
-
-        d = _os.path.join(self.root, self.data_dir)
-        _os.makedirs(d, exist_ok=True)  # all-empty write: empty table
-        committed = {
-            m.rel_file
-            for m in messages
-            if m is not None and m.rel_file is not None
-        }
-        lost = sorted(committed - set(_os.listdir(d)))
-        if lost:
-            raise IOError(
-                f"commit message references missing staged file(s) "
-                f"{lost} under {d}; refusing to commit a hole"
-            )
-        for f in _os.listdir(d):
-            if f not in committed:
-                try:
-                    _os.unlink(_os.path.join(d, f))
-                except OSError:
-                    pass
-        if self.overwrite or not _committed_versions(self.root):
+        # all-empty write: an empty staging dir commits an empty table
+        _settle_staged(_os.path.join(self.root, self.data_dir), messages)
+        if self.overwrite or not list_snapshot_versions(self.root):
             # full-state commit (mode('overwrite'), or the CREATE case:
             # an append onto a table that does not exist yet)
             commit_manifest(
@@ -574,38 +499,12 @@ class _SnapshotStreamSinkWriter(DataSourceStreamArrowWriter):
     def commit(self, messages, batchId):
         import uuid as _uuid
 
-        from crocus_spark.operators.maintenance import (
-            commit_append_dir,
-            commit_manifest,
-        )
-
-        stage = _os.path.join(self.root, self.data_dir)
-        _os.makedirs(stage, exist_ok=True)
-        committed = {
-            m.rel_file
-            for m in messages
-            if m is not None and m.rel_file is not None
-        }
-        lost = sorted(committed - set(_os.listdir(stage)))
-        if lost:
-            raise IOError(
-                f"commit message references missing staged file(s) "
-                f"{lost} under {stage}; refusing to commit a hole"
-            )
         batch_dir = f"a-{_uuid.uuid4().hex[:12]}"
         dst = _os.path.join(self.root, batch_dir)
-        _os.makedirs(dst, exist_ok=True)
-        for f in list(_os.listdir(stage)):
-            if f in committed:
-                _os.replace(
-                    _os.path.join(stage, f), _os.path.join(dst, f)
-                )
-            else:  # failed-attempt temp / duplicate-attempt part
-                try:
-                    _os.unlink(_os.path.join(stage, f))
-                except OSError:
-                    pass
-        if not _committed_versions(self.root):
+        _settle_staged(
+            _os.path.join(self.root, self.data_dir), messages, move_to=dst
+        )
+        if not list_snapshot_versions(self.root):
             # first batch onto a table that does not exist yet CREATES
             # it; the txn ledger rides in via extra
             commit_manifest(
@@ -623,13 +522,7 @@ class _SnapshotStreamSinkWriter(DataSourceStreamArrowWriter):
             allow_incompatible=self.allow_incompatible,
             txn=(self.txn_app, int(batchId)),
         )
-        linked = any(
-            a.get("data_dir") == batch_dir
-            for a in _read_manifest(self.root, v_after).get(
-                "append_dirs", []
-            )
-        )
-        if not linked:
+        if batch_dir not in _manifest_dirs(read_manifest(self.root, v_after)):
             # idempotent replay skipped the append: the re-written batch
             # dir is orphan debris — reclaim it now instead of waiting
             # for vacuum
@@ -793,38 +686,31 @@ def read_snapshot_sql(
     filtered read: pruning only drops files whose committed [min, max]
     cannot intersect the predicate."""
     register_snapshot_source(spark)
-    opts = {"path": root}
-    if version_as_of is not None:
-        opts["version_as_of"] = str(version_as_of)
-    if timestamp_as_of is not None:
-        opts["timestamp_as_of"] = str(timestamp_as_of)
-    pin = _resolve_pin(root, opts)
-    m = _read_manifest(root, pin)
+    # one pin for the file counts AND the load, so both see one version
+    pin = _pin_from_options(
+        root,
+        {"version_as_of": version_as_of, "timestamp_as_of": timestamp_as_of},
+    )
+    m = read_manifest(root, pin)
     stat_cols = (
-        set(m.get("stats_columns") or [])
-        if m.get("file_stats") is not None
-        else set()
+        m.get("stats_columns") or [] if m.get("file_stats") is not None else []
     )
     ranges = ranges_from_where(where, stat_cols) if where else {}
-    schema_opts = dict(opts)
+    entries, kept = _prune_files(root, m, ranges)
+    info = {
+        "files_total": len(entries),
+        "files_selected": len(kept),
+        "prune": ranges,
+    }
+    reader = (
+        spark.read.format("crocus_snapshot")
+        .option("path", root)
+        .option("version_as_of", str(pin))
+    )
     if columns:
-        schema_opts["columns"] = columns
-
-    def n_parts(extra):
-        o = dict(schema_opts)
-        o.update(extra)
-        src = SnapshotBatchSource(options=o)
-        return len(src.reader(src.schema()).partitions())
-
-    info = {"files_total": n_parts({}), "prune": ranges}
-    reader = spark.read.format("crocus_snapshot")
-    for k, v in schema_opts.items():
-        reader = reader.option(k, v)
+        reader = reader.option("columns", columns)
     if ranges:
         reader = reader.option("prune", _json.dumps(ranges))
-        info["files_selected"] = n_parts({"prune": _json.dumps(ranges)})
-    else:
-        info["files_selected"] = info["files_total"]
     df = reader.load()
     if where:
         df = df.filter(where)

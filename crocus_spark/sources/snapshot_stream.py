@@ -56,10 +56,10 @@ data-sized per-row loop the r8 audit found; measured ~2× CPU on the
 CDC queries).
 
 Scale contract: planning reads manifests (tiny JSON) plus this
-commit's DELETE DELTA (recorded per commit by the store since r9 —
-O(churn) per commit; legacy manifests without a delta fall back to
-diffing consecutive cumulative sets driver-side); row data always
-moves through executor partitions.
+commit's DELETE DELTA (recorded per commit by every delete writer —
+O(churn) per commit); row data always moves through executor
+partitions. The manifest log is read only through the accessors of
+``operators/maintenance.py``, the store's one format owner.
 
 Reference lineage: the reference re-scrapes and re-reads whole
 snapshot files per run (``base_scraper.py:72-83``); this source is the
@@ -79,6 +79,16 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from crocus_spark.operators.maintenance import (
+    _as_of_ms,
+    _log_times,
+    _pos_deletes_by_file,
+    _stats_jsonable,
+    list_snapshot_versions,
+    manifest_data_files,
+    read_manifest,
+)
+
 __all__ = ["SnapshotTailSource", "register_snapshot_tail_source"]
 
 _OP_FIELDS = [
@@ -87,81 +97,11 @@ _OP_FIELDS = [
 ]
 
 
-def _read_manifest(root: str, version: int) -> dict:
-    # same layout as operators/maintenance._manifest_file — kept inline
-    # so the pickled reader doesn't drag the operator module (and its
-    # pyspark.sql imports) into every planner worker
-    with open(
-        _os.path.join(root, "_manifests", f"m{version:08d}.json")
-    ) as f:
-        return _json.load(f)
-
-
-def _committed_versions(root: str) -> list[int]:
-    mdir = _os.path.join(root, "_manifests")
-    if not _os.path.isdir(mdir):
-        return []
-    out = []
-    for f in _os.listdir(mdir):
-        if f.startswith("m") and f.endswith(".json"):
-            try:
-                out.append(int(f[1:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
-def _log_times(root: str) -> list[tuple[int, int | None]]:
-    """(version, committed_at_ms) ascending — mirrors
-    operators/maintenance._log_times (layout parity pinned by
-    test_manifest_layout_parity): the newest folded checkpoint
-    (``c{v:08d}.json``, written by write_log_checkpoint) answers for
-    versions at or below its top, only the suffix manifests above it
-    are opened. Checkpoints are derived metadata: entries are
-    intersected with the live manifest set, and a missing/absent
-    checkpoint just degrades to the full walk."""
-    committed = _committed_versions(root)
-    mdir = _os.path.join(root, "_manifests")
-    ckpt_vs = []
-    if _os.path.isdir(mdir):
-        for f in _os.listdir(mdir):
-            if f.startswith("c") and f.endswith(".json") and f[1:-5].isdigit():
-                ckpt_vs.append(int(f[1:-5]))
-    folded: dict[int, object] = {}
-    top = -1
-    for cv in sorted(ckpt_vs, reverse=True):
-        try:
-            with open(_os.path.join(mdir, f"c{cv:08d}.json")) as f:
-                ck = _json.load(f)
-        except FileNotFoundError:
-            continue  # raced a prune
-        folded = {
-            int(k): e.get("committed_at_ms")
-            for k, e in ck["entries"].items()
-        }
-        top = ck["checkpoint_version"]
-        break
-    out: list[tuple[int, int | None]] = []
-    for v in committed:
-        if v <= top and v in folded:
-            ts = folded[v]
-        else:
-            ts = _read_manifest(root, v).get("committed_at_ms")
-        out.append((v, None if ts is None else int(ts)))
-    return out
-
-
-def _jsonable(v):
-    """Manifest (JSON) representation of a stats boundary value — must
-    mirror operators/maintenance._stats_jsonable so key values read from
-    delete-set parquet compare apples-to-apples with recorded stats."""
-    import datetime
-
-    if isinstance(v, (datetime.date, datetime.datetime)):
-        return v.isoformat()
-    if isinstance(v, bytes):
-        return v.decode("utf-8", "replace")
-    return v
+def _epoch_ms_or_iso(ts):
+    """An as-of option value: all-digit strings are epoch milliseconds,
+    anything else an ISO-8601 instant (resolved by ``_as_of_ms``)."""
+    s = str(ts)
+    return int(s) if s.lstrip("-").isdigit() else s
 
 
 @dataclass
@@ -298,23 +238,14 @@ class _SnapshotTailReader(DataSourceStreamReader):
             return self.starting_version
         if self._starting_timestamp is None:
             return 0
-        import datetime
-
-        ts = self._starting_timestamp
-        if isinstance(ts, str) and not ts.lstrip("-").isdigit():
-            dt = datetime.datetime.fromisoformat(ts)
-            if dt.tzinfo is None:
-                dt = dt.replace(tzinfo=datetime.timezone.utc)
-            want = int(dt.timestamp() * 1000)
-        else:
-            want = int(ts)
+        want = _as_of_ms(_epoch_ms_or_iso(self._starting_timestamp))
         # checkpoint + suffix, not one manifest JSON per version
-        for v, c in _log_times(self.root):
+        times = _log_times(self.root)
+        for v, c in times:
             if c is not None and c >= want:
                 return v
         # nothing committed at/after the instant yet: start at the tail
-        versions = _committed_versions(self.root)
-        return (versions[-1] + 1) if versions else 0
+        return (times[-1][0] + 1) if times else 0
 
     def initialOffset(self) -> dict:
         # "cfg" records the CONFIGURED start version in the offset
@@ -331,7 +262,7 @@ class _SnapshotTailReader(DataSourceStreamReader):
         return {"v": v, "cfg": v}
 
     def latestOffset(self) -> dict:
-        versions = _committed_versions(self.root)
+        versions = list_snapshot_versions(self.root)
         latest_end = (versions[-1] + 1) if versions else 0
         if self.versions_per_batch <= 0 or self._anchor is None:
             self._anchor = max(latest_end, self._anchor or 0)
@@ -347,73 +278,19 @@ class _SnapshotTailReader(DataSourceStreamReader):
         pass  # offsets live in the stream checkpoint; manifests are immutable
 
     # -- planning ---------------------------------------------------------
-    def _delete_key_diff(
-        self, prev: dict | None, cur: dict
-    ) -> tuple[list[tuple], list[str]]:
-        """New equality-delete keys of this commit. Fast path: the
-        commit's recorded DELTA dir (O(churn) — the store writes it
-        since r9). Legacy manifests without one fall back to
-        cumulative(cur) minus cumulative(prev), both read driver-side
-        (delete sets are delta-sized by the store's contract)."""
+    def _delete_key_diff(self, cur: dict) -> tuple[list[tuple], list[str]]:
+        """New equality-delete keys of this commit, read from the
+        commit's recorded DELTA dir — O(churn), never a diff of two
+        cumulative sets."""
         import pyarrow.parquet as pq
 
-        cur_d = cur["deletes"]
-
-        def keys_of_dir(d_rel, key_cols):
-            tbl = pq.read_table(_os.path.join(self.root, d_rel))
-            cols = [tbl[c].to_pylist() for c in key_cols]
-            return set(zip(*cols)) if cols else set()
-
-        if cur_d.get("delta_dir"):
-            new = keys_of_dir(cur_d["delta_dir"], cur_d["key_columns"])
-            return sorted(new), list(cur_d["key_columns"])
-
-        def keys_of(d):
-            if d is None:
-                return set()
-            return keys_of_dir(d["data_dir"], d["key_columns"])
-
-        new = keys_of(cur_d) - keys_of(prev.get("deletes") if prev else None)
-        return sorted(new), list(cur_d["key_columns"])
-
-    def _pos_delete_diff(
-        self, prev: dict | None, cur: dict
-    ) -> dict[str, list[int]]:
-        """Newly-deleted (file → positions) of this commit — the
-        recorded delta dir when present, else the cumulative diff."""
-        import pyarrow.parquet as pq
-
-        def pairs_of_dir(d_rel):
-            tbl = pq.read_table(_os.path.join(self.root, d_rel))
-            return set(
-                zip(tbl["file_name"].to_pylist(), tbl["row_index"].to_pylist())
-            )
-
-        cur_pd = cur["pos_deletes"]
-        if cur_pd.get("delta_dir"):
-            new = pairs_of_dir(cur_pd["delta_dir"])
-        else:
-            old = (prev or {}).get("pos_deletes")
-            new = pairs_of_dir(cur_pd["data_dir"]) - (
-                pairs_of_dir(old["data_dir"]) if old else set()
-            )
-        by_file: dict[str, list[int]] = {}
-        for fname, pos in new:
-            by_file.setdefault(fname, []).append(pos)
-        return {f: sorted(ps) for f, ps in by_file.items()}
-
-    def _find_file(self, m: dict, fname: str) -> str:
-        """Absolute path of a data file by its (job-UUID-unique) name,
-        searching the manifest's primary dir then appends."""
-        for d in [m["data_dir"]] + [
-            a["data_dir"] for a in m.get("append_dirs", [])
-        ]:
-            p = _os.path.join(self.root, d, fname)
-            if _os.path.exists(p):
-                return p
-        raise FileNotFoundError(
-            f"data file {fname!r} not in any dir of the pinned manifest"
+        d = cur["deletes"]
+        key_cols = list(d["key_columns"])
+        tbl = pq.read_table(
+            _os.path.join(self.root, d["delta_dir"]), columns=key_cols
         )
+        cols = [tbl[c].to_pylist() for c in key_cols]
+        return sorted(set(zip(*cols))), key_cols
 
     # above this many delta keys, pre-image partitions reference the
     # commit's delta parquet instead of inlining the key list into every
@@ -424,34 +301,22 @@ class _SnapshotTailReader(DataSourceStreamReader):
     def _eq_preimage_parts(
         self, prev: dict, cur: dict, keys: list[tuple],
         key_cols: list[str], version: int,
-        delta_dir: str | None = None,
     ) -> list[_EqPreImagePartition]:
         """Plan full pre-images for an equality delete: one partition
         per data file that could hold a dying row. Files are pruned by
         the manifest's recorded [min, max] stats when they cover the key
         columns (a file survives only if SOME key fits every column's
-        range); files lacking stats are conservatively kept. Positions
-        already dead via the PREVIOUS version's cumulative positional
-        deletes ride along so those rows are not re-emitted."""
-        import pyarrow.parquet as pq
-
-        entries = [
-            (_os.path.join(self.root, cur["data_dir"], rel),
-             _os.path.basename(rel))
-            for rel, _sz in cur["files"]
-        ]
-        for a in cur.get("append_dirs", []):
-            entries.extend(
-                (_os.path.join(self.root, a["data_dir"], rel),
-                 _os.path.basename(rel))
-                for rel, _sz in a["files"]
-            )
+        range — a point-set test, not range pruning); files lacking
+        stats are conservatively kept. Positions already dead via the
+        PREVIOUS version's cumulative positional deletes ride along so
+        those rows are not re-emitted."""
+        entries = manifest_data_files(self.root, cur)
         stats = cur.get("file_stats")
         stat_cols = cur.get("stats_columns", [])
         use_stats = stats is not None and all(
             c in stat_cols for c in key_cols
         )
-        jkeys = [tuple(_jsonable(v) for v in k) for k in keys]
+        jkeys = [tuple(_stats_jsonable(v) for v in k) for k in keys]
 
         def overlaps(fstats) -> bool:
             if not use_stats or fstats is None:
@@ -469,31 +334,20 @@ class _SnapshotTailReader(DataSourceStreamReader):
 
         # rows already positionally deleted as of prev died at THEIR
         # commit — exclude their positions from these pre-images
-        dead_by_file: dict[str, set[int]] = {}
-        prev_pd = prev.get("pos_deletes")
-        if prev_pd is not None:
-            tbl = pq.read_table(
-                _os.path.join(self.root, prev_pd["data_dir"])
-            )
-            for fname, pos in zip(
-                tbl["file_name"].to_pylist(), tbl["row_index"].to_pylist()
-            ):
-                dead_by_file.setdefault(fname, set()).add(pos)
-        # large delta + recorded delta dir: ship a POINTER, not the list
-        by_ref = (
-            delta_dir is not None and len(keys) > self._INLINE_KEYS_MAX
-        )
+        dead_by_file = _pos_deletes_by_file(self.root, prev)
+        # large delta: ship a POINTER to the recorded delta, not the list
+        by_ref = len(keys) > self._INLINE_KEYS_MAX
         inline_keys = [] if by_ref else keys
-        keys_dir = delta_dir if by_ref else None
+        keys_dir = cur["deletes"]["delta_dir"] if by_ref else None
         parts = []
-        for i, (path, fname) in enumerate(entries):
+        for i, (d, rel, _sz) in enumerate(entries):
             fstats = stats[i] if use_stats and i < len(stats) else None
             if not overlaps(fstats):
                 continue
             parts.append(
                 _EqPreImagePartition(
-                    path, inline_keys, key_cols, version,
-                    sorted(dead_by_file.get(fname, ())),
+                    _os.path.join(d, rel), inline_keys, key_cols, version,
+                    dead_by_file.get(_os.path.basename(rel), []),
                     keys_dir,
                 )
             )
@@ -534,14 +388,14 @@ class _SnapshotTailReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         parts: list[InputPartition] = []
-        committed = _committed_versions(self.root)  # one listing per batch
+        committed = list_snapshot_versions(self.root)  # one listing per batch
         versions = [v for v in committed if start["v"] <= v < end["v"]]
         for v in versions:
-            cur = _read_manifest(self.root, v)
+            cur = read_manifest(self.root, v)
             self._check_feed_schema(cur, v)
             prev_versions = [p for p in committed if p < v]
             prev = (
-                _read_manifest(self.root, prev_versions[-1])
+                read_manifest(self.root, prev_versions[-1])
                 if prev_versions
                 else None
             )
@@ -597,16 +451,10 @@ class _SnapshotTailReader(DataSourceStreamReader):
                         )
                 # fresh checkpoint: the first surviving snapshot is the
                 # consumer's initial load — everything is an insert
-                groups = [(cur["data_dir"], cur["files"])] + [
-                    (a["data_dir"], a["files"])
-                    for a in cur.get("append_dirs", [])
-                ]
-                for d, files in groups:
-                    base = _os.path.join(self.root, d)
-                    for rel, _sz in files:
-                        parts.append(
-                            _FilePartition(_os.path.join(base, rel), v)
-                        )
+                parts.extend(
+                    _FilePartition(_os.path.join(d, rel), v)
+                    for d, rel, _sz in manifest_data_files(self.root, cur)
+                )
                 continue
             if cur.get("restored_from") is not None:
                 # a RESTORE can un-delete rows (shrink the cumulative
@@ -638,38 +486,36 @@ class _SnapshotTailReader(DataSourceStreamReader):
                         f"version {v} dropped its cumulative {kind} set: "
                         "un-deletes cannot be represented as a delta"
                     )
-            prev_appends = {
-                a["data_dir"] for a in prev.get("append_dirs", [])
+            # appended directories are new by construction: their files
+            # are this commit's inserts
+            prev_dirs = {
+                d for d, _rel, _sz in manifest_data_files(self.root, prev)
             }
-            for a in cur.get("append_dirs", []):
-                if a["data_dir"] in prev_appends:
-                    continue
-                base = _os.path.join(self.root, a["data_dir"])
-                for rel, _sz in a["files"]:
-                    parts.append(
-                        _FilePartition(_os.path.join(base, rel), v)
-                    )
+            parts.extend(
+                _FilePartition(_os.path.join(d, rel), v)
+                for d, rel, _sz in manifest_data_files(self.root, cur)
+                if d not in prev_dirs
+            )
             if (cur.get("deletes") or {}) != (prev.get("deletes") or {}):
-                keys, key_cols = self._delete_key_diff(prev, cur)
+                keys, key_cols = self._delete_key_diff(cur)
                 if keys and self.eq_pre_images:
                     parts.extend(
-                        self._eq_preimage_parts(
-                            prev, cur, keys, key_cols, v,
-                            cur["deletes"].get("delta_dir"),
-                        )
+                        self._eq_preimage_parts(prev, cur, keys, key_cols, v)
                     )
                 elif keys:
                     parts.append(_EqDeletePartition(keys, key_cols, v))
             if (cur.get("pos_deletes") or {}) != (
                 prev.get("pos_deletes") or {}
             ):
-                for fname, positions in self._pos_delete_diff(
-                    prev, cur
+                paths = {
+                    _os.path.basename(rel): _os.path.join(d, rel)
+                    for d, rel, _sz in manifest_data_files(self.root, cur)
+                }
+                for fname, positions in _pos_deletes_by_file(
+                    self.root, cur, "delta_dir"
                 ).items():
                     parts.append(
-                        _PosDeletePartition(
-                            self._find_file(cur, fname), positions, v
-                        )
+                        _PosDeletePartition(paths[fname], positions, v)
                     )
         return parts
 
@@ -806,10 +652,10 @@ class SnapshotTailSource(DataSource):
         root = self.options.get("path")
         if not root:
             raise ValueError("crocus_snapshot_tail requires option 'path'")
-        versions = _committed_versions(root)
+        versions = list_snapshot_versions(root)
         if not versions:
             raise ValueError(f"no committed snapshot versions under {root}")
-        s = _read_manifest(root, versions[-1]).get("schema")
+        s = read_manifest(root, versions[-1]).get("schema")
         if s is None:
             raise ValueError(
                 "CDC tail needs manifests with committed writer schemas "

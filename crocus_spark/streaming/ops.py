@@ -30,6 +30,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from crocus_spark.session import conf_overrides
+
 EVENTS_STREAM_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
@@ -217,22 +219,15 @@ def drain(
 
     if not memory:
         return retry_transient_stream(attempt)
-    key = "spark.sql.shuffle.partitions"
-    pkey = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key)
-    prev_provider = spark.conf.get(pkey, None)
-    try:
-        spark.conf.set(key, "8")
-        if state_provider:
-            spark.conf.set(pkey, state_provider)
+    with conf_overrides(
+        spark,
+        {
+            "spark.sql.shuffle.partitions": "8",
+            "spark.sql.streaming.stateStore.providerClass": state_provider
+            or None,
+        },
+    ):
         return retry_transient_stream(attempt)
-    finally:
-        spark.conf.set(key, prev)
-        if state_provider:
-            if prev_provider is None:
-                spark.conf.unset(pkey)
-            else:
-                spark.conf.set(pkey, prev_provider)
 
 
 def tumbling_window_agg(events: DataFrame, window: str = "6 hours") -> DataFrame:

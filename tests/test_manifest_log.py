@@ -217,7 +217,6 @@ def test_manifest_is_the_commit_point(tmp_path):
 from crocus_spark.operators.maintenance import (  # noqa: E402
     SchemaCompatibilityError,
     expire_snapshots,
-    snapshot_data_path,
     snapshot_schema,
 )
 
@@ -341,55 +340,6 @@ def test_schema_decimal_precision_widening_allowed(tmp_path):
             root, _data_dir(root, "d-3"),
             schema_json=_schema_json(("v", "decimal(38,2)", True)),
         )
-
-
-# ---------------------------------------------------------------------------
-# Mixed legacy + manifest stores (r6 ADVICE): legacy v{n} history stays
-# listable, numbering seeds past it, expiry handles both layouts.
-# ---------------------------------------------------------------------------
-
-
-def _legacy_dir(root: str, version: int) -> str:
-    path = os.path.join(root, f"v{version}")
-    os.makedirs(path)
-    pq.write_table(
-        pa.table({"k": [version]}), os.path.join(path, "part-000.parquet")
-    )
-    return path
-
-
-def test_mixed_store_merges_legacy_history(tmp_path):
-    root = str(tmp_path / "store")
-    _legacy_dir(root, 0)
-    _legacy_dir(root, 1)
-    assert list_snapshot_versions(root) == [0, 1]
-    # first manifest commit seeds AFTER the legacy history, not at 0
-    v = commit_manifest(root, _data_dir(root, "d-a"))
-    assert v == 2
-    assert list_snapshot_versions(root) == [0, 1, 2]
-    # per-version resolution: legacy versions resolve to v{n}, manifest
-    # versions to their committed data dir
-    assert snapshot_data_path(root, 0).endswith("v0")
-    assert snapshot_data_path(root, 2).endswith("d-a")
-
-
-def test_mixed_store_expiry_handles_both_layouts(tmp_path):
-    root = str(tmp_path / "store")
-    _legacy_dir(root, 0)
-    _legacy_dir(root, 1)
-    commit_manifest(root, _data_dir(root, "d-a"))  # v2
-    commit_manifest(root, _data_dir(root, "d-b"))  # v3
-    dropped = expire_snapshots(root, keep_last=2)
-    assert dropped == [0, 1]
-    assert list_snapshot_versions(root) == [2, 3]
-    assert not os.path.exists(os.path.join(root, "v0"))
-    assert not os.path.exists(os.path.join(root, "v1"))
-    assert os.path.isdir(os.path.join(root, "d-a"))
-    # expire across the layout boundary: legacy dir AND manifest version
-    dropped = expire_snapshots(root, keep_last=1)
-    assert dropped == [2]
-    assert not os.path.isdir(os.path.join(root, "d-a"))
-    assert os.path.isdir(os.path.join(root, "d-b"))
 
 
 # ---------------------------------------------------------------------------

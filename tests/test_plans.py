@@ -240,7 +240,8 @@ def test_bloom_filter_reaches_fact_scan(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from crocus_spark.io import load
-    from crocus_spark.queries.runtime_q import BLOOM_TEST_CONFS, conf_overrides
+    from crocus_spark.queries.runtime_q import BLOOM_TEST_CONFS
+    from crocus_spark.session import conf_overrides
 
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders").filter(
@@ -262,7 +263,7 @@ def test_cbo_reorders_joins_by_cardinality(spark):
     and estimated rowCounts must ride the optimized plan."""
     import re
 
-    from crocus_spark.queries.runtime_q import conf_overrides
+    from crocus_spark.session import conf_overrides
     from crocus_spark.queries.sql_surface import (
         CBO_CONFS,
         _CBO_JOIN_SQL,

@@ -103,6 +103,53 @@ def test_prune_option_skips_files_by_manifest_stats(spark, tmp_path):
         r_bad.partitions()
 
 
+def test_open_bound_prune_selects_same_files_on_both_paths(spark, tmp_path):
+    """A None bound side is unbounded on both pruning paths: the Python
+    API (read_snapshot_pruned_where) and the SQL path
+    (read_snapshot_sql's derived `prune` option) select the same data
+    files and rows for an open-ended range."""
+    import json
+    import os
+
+    from crocus_spark.operators.maintenance import (
+        manifest_data_files,
+        read_snapshot_pruned_where,
+    )
+    from crocus_spark.sources.snapshot_batch import read_snapshot_sql
+
+    register_snapshot_source(spark)
+    root = _store(spark, tmp_path)
+    m = read_manifest(root, 2)
+    schema = T.StructType.fromJson(m["schema"])
+    data_names = {
+        os.path.basename(rel) for _d, rel, _sz in manifest_data_files(root, m)
+    }
+    for bounds, where in (
+        ({"k": (None, 90)}, "k <= 90"),
+        ({"k": (300, None)}, "k >= 300"),
+    ):
+        df, info = read_snapshot_pruned_where(spark, root, bounds)
+        sdf, sinfo = read_snapshot_sql(spark, root, where=where)
+        assert sinfo["prune"] == {"k": list(bounds["k"])}
+        assert info["files_total"] == sinfo["files_total"]
+        assert info["files_selected"] == sinfo["files_selected"]
+        assert 1 <= info["files_selected"] < info["files_total"]
+        py_files = {
+            os.path.basename(u) for u in df.inputFiles()
+        } & data_names
+        sql_files = {
+            os.path.basename(p.path)
+            for p in _SnapshotBatchReader(
+                {"path": root, "prune": json.dumps(sinfo["prune"])}, schema
+            ).partitions()
+        }
+        assert py_files == sql_files
+        assert len(py_files) == info["files_selected"]
+        assert sorted(r.k for r in df.filter(where).collect()) == sorted(
+            r.k for r in sdf.collect()
+        )
+
+
 def test_mixed_schema_history_reads_with_pinned_schema(spark, tmp_path):
     """A version pinned BEFORE an additive evolution reads with ITS
     schema; the latest pin null-fills the old files' missing column."""

@@ -1,7 +1,6 @@
 """CDC tail over the manifest log (sources/snapshot_stream.py): feed
 contents per commit kind, exactly-once resume from the checkpointed
-version offset, rewrite refusal, and layout parity with the operator
-module's manifest accessors."""
+version offset, and rewrite refusal."""
 
 from __future__ import annotations
 
@@ -22,10 +21,6 @@ from crocus_spark.operators.maintenance import (
     read_snapshot_with_positions,
 )
 from crocus_spark.sources import register_snapshot_tail_source
-from crocus_spark.sources.snapshot_stream import (
-    _committed_versions,
-    _read_manifest,
-)
 
 
 def _drain(spark, root: str, ckpt: str, **options) -> str:
@@ -65,34 +60,6 @@ def _store(spark, tmp_path):
     ).coalesce(1)
     commit_append(inc, root)  # v1
     return root
-
-
-def test_manifest_layout_parity(spark, tmp_path):
-    """The stream module reads manifests with its own inline helpers
-    (to keep the pickled reader light); they must agree byte-for-byte
-    with the operator module's accessors — this test pins the layout
-    coupling so a maintenance-side rename fails HERE, not in a stream
-    at 2 a.m."""
-    root = _store(spark, tmp_path)
-    assert _committed_versions(root) == list_snapshot_versions(root)
-    for v in list_snapshot_versions(root):
-        assert _read_manifest(root, v) == read_manifest(root, v)
-    # checkpoint layout too: the stream's inline _log_times must read
-    # the operator module's folded checkpoints identically, both before
-    # any checkpoint exists and after one is written
-    import crocus_spark.operators.maintenance as M
-    from crocus_spark.sources.snapshot_stream import _log_times
-
-    assert _log_times(root) == M._log_times(root)
-    assert M.write_log_checkpoint(root) == 1
-    assert _log_times(root) == M._log_times(root)
-    commit_append(
-        spark.range(400, 410).selectExpr(
-            "id AS k", "id % 7 AS g", "CAST(id * 0.5 AS double) AS v"
-        ).coalesce(1),
-        root,
-    )  # v2: above the fold line -> suffix manifest read on both sides
-    assert _log_times(root) == M._log_times(root)
 
 
 def test_feed_emits_each_commits_delta(spark, tmp_path):
