@@ -1,29 +1,49 @@
-"""Shared drain loop for index-maintenance CDC consumers (HNSW/IVF/PQ).
+"""Shared change-feed sync for the maintained ANN indexes (HNSW/IVF/PQ).
 
 Every maintained at-rest index follows the same shape: read the source
-table's ``crocus_snapshot_tail`` change feed, reduce each micro-batch to
-per-key net effects, apply them to the store, checkpoint beside the
-store. The one failure mode they also share is a REWRITE on the source
-table (compaction, restore): the CDC source refuses to represent it as
-a delta and the stream dies — permanently, because the checkpointed
-offset sits just below the rewrite version, so every later drain hits
-the same wall (round-9 advice). ``run_tail_sync`` owns that policy:
+table's changes since the version the store last applied, reduce them
+to per-key net effects, apply them to the store, then record the next
+version to apply. The changes are ONE bounded batch read of the
+manifest log (``sources.snapshot_stream._read_changes``), planned by
+the same planner as the ``crocus_snapshot_tail`` stream — same version
+range, same refusals, same ``_op``/``_version`` rows — but run as
+parquet scans and a local relation: a sync starts no streaming query
+and no Python source process.
 
-- ``on_rewrite='fail'`` (default): surface the source's error — the
+Applied version. The store keeps it in ``_applied.json``
+(``{"next_version": N}``), written last through
+``cell_store.save_json``. A missing record means version 0: the first
+surviving snapshot is the index's initial load. The record lives inside
+the store, so a bootstrap or rebuild overwrite deletes it with the
+store it described.
+
+Crash safety. Re-applying a range is idempotent: under a frozen model
+the merge keeps the store equal to a same-model build of the final
+corpus (the merge invariant in ``cell_store``), and a range's net
+effect on a key already at that state changes nothing. A crash between
+the store write and the record therefore only costs a replay of the
+range on the next sync.
+
+The one failure mode the families also share is a REWRITE on the
+source table (compaction, restore): the feed refuses to represent it as
+a delta, and because the record sits just below the rewrite version,
+every later sync hits the same wall (round-9 advice). ``run_tail_sync``
+owns that policy:
+
+- ``on_rewrite='fail'`` (default): surface the planner's error — the
   operator decides what to do. Recovery is wiping ``index_path`` and
-  ``index_path + '_ckpt'`` and re-draining (a full O(corpus) rebuild).
-- ``on_rewrite='skip'``: pass ``skip_rewrites=true`` to the source.
-  CORRECT for layout-only rewrites (compaction / Z-order: the logical
-  rows are unchanged, so the index needs nothing) but it also skips
-  RESTOREs, which DO change logical content — use only on tables whose
+  syncing again (a full O(corpus) rebuild).
+- ``on_rewrite='skip'``: plan with ``skip_rewrites``. CORRECT for
+  layout-only rewrites (compaction / Z-order: the logical rows are
+  unchanged, so the index needs nothing) but it also skips RESTOREs,
+  which DO change logical content — use only on tables whose
   maintenance is compaction-only, as with Delta ``skipChangeCommits``.
-- ``on_rewrite='rebuild'``: on a rewrite error, delete the store and
-  its checkpoint, bootstrap the store from a BATCH read of the current
-  snapshot (re-draining the tail from version 0 would just hit the same
-  rewrite again), then tail changes from the next version on. Always
-  correct — a restore's post-restore state is exactly the current
-  snapshot — at the cost of a full rebuild; the right policy for
-  tables that RESTORE.
+- ``on_rewrite='rebuild'``: on a rewrite error, delete the store,
+  bootstrap it from a BATCH read of the current snapshot (re-reading
+  the feed from version 0 would just hit the same rewrite again), then
+  record the next version. Always correct — a restore's post-restore
+  state is exactly the current snapshot — at the cost of a full
+  rebuild; the right policy for tables that RESTORE.
 """
 
 from __future__ import annotations
@@ -33,20 +53,21 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from crocus_spark.operators.cell_store import release
+from crocus_spark.operators import cell_store
+
+_APPLIED = "_applied.json"
 
 
 def net_effects(batch_df, id_col: str, vec_col: str):
-    """Per-key NET effect of one CDC micro-batch — the latest
-    (_op, vec) by ``_version`` per id (an insert after a tombstone
-    survives; anything before one is absorbed) — materialized ONCE via
-    an eager ``localCheckpoint``. The batch relation is backed by the
-    Python tail source, so every downstream action would otherwise
-    re-read the whole feed and re-run this aggregate: the bootstrap
-    consumes it two-to-three times (model fit(s) + store build) and the
-    upsert paths three-to-four (cell discovery, semi-join, merge write).
-    The checkpoint is batch-sized (per-key net effects), paid once, and
-    the caller releases it (``cell_store.release``) when the batch is
+    """Per-key NET effect of a change batch — the latest (_op, vec) by
+    ``_version`` per id (an insert after a tombstone survives; anything
+    before one is absorbed) — materialized ONCE via an eager
+    ``localCheckpoint``. Every downstream action would otherwise re-scan
+    the feed and re-run this aggregate: the bootstrap consumes it
+    two-to-three times (model fit(s) + store build) and the upsert paths
+    three-to-four (cell discovery, semi-join, merge write). The
+    checkpoint is batch-sized (per-key net effects), paid once, and the
+    caller releases it (``cell_store.release``) when the batch is
     applied."""
     return (
         batch_df.groupBy(id_col)
@@ -73,21 +94,23 @@ def run_tail_sync(
     id_col: str,
     vec_col: str,
 ) -> None:
-    """Drain ``table_root``'s CDC tail into the store at ``index_path``
-    with the checkpoint at ``index_path + '_ckpt'`` (NOT inside the
-    store — the bootstrap overwrite would destroy an in-store
-    checkpoint), applying the ``on_rewrite`` policy above. Each
-    micro-batch reduces to per-key net effects; until the store's
-    ``marker`` file (the last file its build writes) exists the batch's
-    inserts go to ``bootstrap(ups)``, which fits the model and builds the
-    store, and afterwards to ``upsert(ups, dels)``. The batch's
-    checkpoint is released once it is applied, so a long-running sync
-    holds no per-batch blocks."""
-    from crocus_spark.sources import register_snapshot_tail_source
-    from crocus_spark.streaming.ops import drain
+    """Apply ``table_root``'s changes since the store's applied version
+    to the store at ``index_path``, under the ``on_rewrite`` policy
+    above. The changes reduce to per-key net effects; until the store's
+    ``marker`` file (the last file its build writes) exists their
+    inserts go to ``bootstrap(ups)``, which fits the model and builds
+    the store, and afterwards to ``upsert(ups, dels)``. The net effects'
+    checkpoint is released once they are applied, so a long-running
+    sync holds no per-batch blocks."""
+    from crocus_spark.sources.snapshot_stream import _read_changes
 
-    def apply_fn(batch_df, _batch_id):
-        last = net_effects(batch_df, id_col, vec_col)
+    if on_rewrite not in ("fail", "skip", "rebuild"):
+        raise ValueError(
+            f"on_rewrite must be 'fail', 'skip' or 'rebuild', got {on_rewrite!r}"
+        )
+
+    def apply(changes) -> None:
+        last = net_effects(changes, id_col, vec_col)
         try:
             ups = last.filter(F.col("s._op") == "insert").select(
                 F.col(id_col), F.col(f"s.{vec_col}").alias(vec_col)
@@ -97,43 +120,31 @@ def run_tail_sync(
             else:
                 bootstrap(ups)
         finally:
-            release(last)
+            cell_store.release(last)
 
-    if on_rewrite not in ("fail", "skip", "rebuild"):
-        raise ValueError(
-            f"on_rewrite must be 'fail', 'skip' or 'rebuild', got {on_rewrite!r}"
-        )
-    register_snapshot_tail_source(spark)
-
-    def tail(skip: bool, starting_version: int | None = None) -> None:
-        # the rewrite/restore markers dispatched on below are no worker-
-        # spawn failure, so drain's retry lets them through on first
-        # throw; a retried spawn failure resumes from the checkpoint
-        reader = spark.readStream.format("crocus_snapshot_tail").option(
-            "path", table_root
-        )
-        if skip:
-            reader = reader.option("skip_rewrites", "true")
-        if starting_version is not None:
-            reader = reader.option("starting_version", str(starting_version))
-        drain(reader.load(), apply_fn, checkpoint=index_path + "_ckpt")
+    def record(next_version: int) -> None:
+        cell_store.save_json(index_path, _APPLIED, {"next_version": next_version})
 
     try:
-        tail(on_rewrite == "skip")
-    except Exception as e:
-        msg = str(e)
+        start = cell_store.load_json(index_path, _APPLIED)["next_version"]
+    except FileNotFoundError:
+        start = 0
+    try:
+        changes, end = _read_changes(
+            spark, table_root, start, skip_rewrites=on_rewrite == "skip"
+        )
+    except RuntimeError as e:
         if on_rewrite != "rebuild" or not any(
-            m in msg for m in _REWRITE_MARKERS
+            m in str(e) for m in _REWRITE_MARKERS
         ):
             raise
         # The table was compacted/restored under the index: the delta
-        # stream past that version is unrecoverable, and re-draining
-        # from version 0 would hit the same rewrite. Rebuild: wipe the
-        # store + checkpoint, feed the CURRENT snapshot to apply_fn as
+        # feed past that version is unrecoverable, and re-reading from
+        # version 0 would hit the same rewrite. Rebuild: wipe the store
+        # (its record with it), feed the CURRENT snapshot to apply as
         # one synthetic insert batch (its bootstrap path runs because
-        # the store is gone), then tail changes from the next version —
-        # the pinned batch read and the starting_version cut leave no
-        # gap and no overlap.
+        # the store is gone), then record the next version — the
+        # pinned batch read and that cut leave no gap and no overlap.
         from crocus_spark.operators.maintenance import (
             list_snapshot_versions,
             read_snapshot,
@@ -141,11 +152,16 @@ def run_tail_sync(
 
         latest = list_snapshot_versions(table_root)[-1]
         shutil.rmtree(index_path, ignore_errors=True)
-        shutil.rmtree(index_path + "_ckpt", ignore_errors=True)
-        snapshot = (
+        apply(
             read_snapshot(spark, table_root, latest)
             .withColumn("_op", F.lit("insert"))
             .withColumn("_version", F.lit(latest).cast("long"))
         )
-        apply_fn(snapshot, -1)
-        tail(False, starting_version=latest + 1)
+        record(latest + 1)
+        return
+    if changes is not None:
+        apply(changes)
+    # no store yet (nothing planned on a fresh index): nothing applied,
+    # so nothing to record
+    if os.path.exists(os.path.join(index_path, marker)):
+        record(end)

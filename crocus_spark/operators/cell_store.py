@@ -36,8 +36,12 @@ Emptied-cell rule. Dynamic overwrite replaces only the partitions
 present in its output, so a cell whose every row was deleted would
 survive with stale rows; :func:`upsert` removes its directory itself.
 
-The CDC drain that feeds :func:`upsert` from a snapshot table's change
-feed is :func:`crocus_spark.operators._tail_sync.run_tail_sync`.
+The sync that feeds :func:`upsert` from a snapshot table's change feed
+is :func:`crocus_spark.operators._tail_sync.run_tail_sync`: one batch
+read of the changes since the store's applied version, recorded last
+in the store's ``_applied.json`` through :func:`save_json`. Because a
+replay of an applied range leaves the store unchanged (the merge
+invariant above), a crash before that record only costs a replay.
 """
 
 from __future__ import annotations

@@ -284,32 +284,34 @@ def collect_centroid_model(centroids: DataFrame):
     return cells, mat
 
 
-def _centroid_df(spark, cells, mat) -> DataFrame:
-    """(cell, centroid) DataFrame rebuilt from the collected model —
-    plan-time literal rows, so referencing it never re-runs the fit.
-
-    Built through pandas+Arrow, NOT ``createDataFrame(list)``: the list
-    path parallelizes into ``defaultParallelism`` slices, so every
-    materialization of this 8-row relation launched 32 near-empty tasks
+def _local_relation(spark, columns: dict, schema) -> DataFrame:
+    """A small driver-side relation (``columns``: name → values) built
+    through pandas+Arrow, NOT ``createDataFrame(list)``: the list path
+    parallelizes into ``defaultParallelism`` slices, so every
+    materialization of an 8-row relation launched 32 near-empty tasks
     (measured 0.35 s vs 0.05 s for the Arrow local relation — the probe
-    path paid it once per broadcast build). Values are dense non-null
-    floats, so the pandas conversion cannot change NULL semantics; the
+    path paid it once per broadcast build). Callers pass dense non-null
+    values, so the pandas conversion cannot change NULL semantics; the
     list path remains as fallback for sessions without Arrow."""
     try:
         import pandas as pd
 
-        pdf = pd.DataFrame(
-            {
-                "cell": [int(c) for c in cells],
-                "centroid": [[float(x) for x in row] for row in mat],
-            }
-        )
-        return spark.createDataFrame(pdf, "cell int, centroid array<double>")
+        return spark.createDataFrame(pd.DataFrame(columns), schema)
     except Exception:
-        return spark.createDataFrame(
-            [(int(c), [float(x) for x in row]) for c, row in zip(cells, mat)],
-            "cell int, centroid array<double>",
-        )
+        return spark.createDataFrame(list(zip(*columns.values())), schema)
+
+
+def _centroid_df(spark, cells, mat) -> DataFrame:
+    """(cell, centroid) DataFrame rebuilt from the collected model —
+    plan-time literal rows, so referencing it never re-runs the fit."""
+    return _local_relation(
+        spark,
+        {
+            "cell": [int(c) for c in cells],
+            "centroid": [[float(x) for x in row] for row in mat],
+        },
+        "cell int, centroid array<double>",
+    )
 
 
 def _unit_rows(V):
@@ -1002,8 +1004,9 @@ def ivf_topk_at_rest(
 
     Same centroids, probes, scoring, and tie rules as ``ivf_topk``; the
     two must return identical rows (pinned in tests/test_llm.py). The
-    probed-cell list is collected — ≤ n_cells integers, model-sized —
-    because a partition-pruning predicate must be a literal at plan time.
+    probe rows are collected ONCE — ≤ |queries| × nprobe (query, vector,
+    cell) rows, query-sized — because a partition-pruning predicate must
+    be a literal at plan time; the same rows become the broadcast side.
 
     ``model`` is an optional prefitted ``(cells, mat)`` pair (the same
     shape ``ivf_topk`` takes); ``reuse_store=True`` skips the index
@@ -1020,12 +1023,27 @@ def ivf_topk_at_rest(
     if not (reuse_store and _os.path.exists(_os.path.join(path, "_SUCCESS"))):
         _ivf_build(corpus, path, model, id_col, vec_col)
 
-    probes = _probes(queries, model, id_col, vec_col, nprobe).select(
-        "query_id", "q_vec", "cell"
+    # one evaluation of the probe ranking (it runs a dot_batch Python
+    # stage) serves both the pruning literal and the broadcast side
+    plist = (
+        _probes(queries, model, id_col, vec_col, nprobe)
+        .select("query_id", "q_vec", "cell")
+        .collect()
     )
-    probe_cells = sorted(
-        r.cell for r in probes.select("cell").distinct().collect()
-    )  # ≤ n_cells ints — the partition-pruning literal
+    probe_cells = sorted({r.cell for r in plist})
+    probes = _local_relation(
+        spark,
+        {
+            "query_id": [r.query_id for r in plist],
+            "q_vec": [list(r.q_vec) for r in plist],
+            "cell": [r.cell for r in plist],
+        },
+        T.StructType([
+            T.StructField("query_id", queries.schema[id_col].dataType),
+            T.StructField("q_vec", queries.schema[vec_col].dataType),
+            T.StructField("cell", T.IntegerType()),
+        ]),
+    )
     back = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
     return _exact_topk(back.join(F.broadcast(probes), "cell"), k)
 
@@ -1125,17 +1143,16 @@ def ivf_sync_from_tail(
     seed_hash=None,
 ) -> None:
     """Keep the IVF cell store current against a snapshot table via its
-    CDC tail — the IVF sibling of ``hnsw_sync_from_tail``: the first
-    batch on a fresh index FITS the centroid model from the initial
+    change feed — the IVF sibling of ``hnsw_sync_from_tail``: the first
+    sync of a fresh index FITS the centroid model from the initial
     snapshot and builds the store (model persisted beside it); every
-    later batch reduces to per-key net effects by ``_version`` and
-    upserts under the frozen model. Checkpoint at the sibling
-    ``{index_path}_ckpt`` path (the bootstrap overwrite would eat an
-    in-store checkpoint). ``on_rewrite``: what a source-table
-    compaction/restore does to the sync — ``'fail'`` (default) raises,
-    ``'skip'`` skips layout-only rewrites (and restores — compaction-
-    only tables), ``'rebuild'`` wipes store+checkpoint and re-fits from
-    the current snapshot; see :mod:`crocus_spark.operators._tail_sync`."""
+    later sync reduces the changes since the store's applied version to
+    per-key net effects by ``_version`` and upserts under the frozen
+    model. ``on_rewrite``: what a source-table compaction/restore does
+    to the sync — ``'fail'`` (default) raises, ``'skip'`` skips
+    layout-only rewrites (and restores — compaction-only tables),
+    ``'rebuild'`` wipes the store and re-fits from the current snapshot;
+    see :mod:`crocus_spark.operators._tail_sync`."""
     from crocus_spark.operators._tail_sync import run_tail_sync
 
     def bootstrap(ups):
@@ -1340,13 +1357,12 @@ def pq_sync_from_tail(
     on_rewrite: str = "fail",
 ) -> None:
     """Keep the PQ code store current against a snapshot table via its
-    CDC tail — the PQ sibling of ``ivf_sync_from_tail``: the first
-    batch on a fresh index FITS the codebook from the initial snapshot
+    change feed — the PQ sibling of ``ivf_sync_from_tail``: the first
+    sync of a fresh index FITS the codebook from the initial snapshot
     (persisted beside the store — frozen thereafter, the FAISS
-    train-once cadence); every later batch reduces to per-key net
+    train-once cadence); every later sync reduces to per-key net
     effects and re-encodes/rewrites only churn-affected hash cells.
-    Checkpoint at the sibling ``{index_path}_ckpt`` path; ``on_rewrite``
-    as in :mod:`crocus_spark.operators._tail_sync`."""
+    ``on_rewrite`` as in :mod:`crocus_spark.operators._tail_sync`."""
     from crocus_spark.operators._tail_sync import run_tail_sync
 
     def bootstrap(ups):
@@ -1489,11 +1505,11 @@ def ivfpq_sync_from_tail(
     seed_hash=None,
 ) -> None:
     """Keep the composed IVFPQ store current against a snapshot table
-    via its CDC tail: the first batch on a fresh index fits BOTH frozen
-    models from the initial snapshot (coarse centroids + PQ codebook,
-    persisted beside the store); later batches re-encode per-key net
-    effects and rewrite only churn-affected coarse cells. Checkpoint at
-    ``{index_path}_ckpt``; ``on_rewrite`` as in operators/_tail_sync."""
+    via its change feed: the first sync of a fresh index fits BOTH
+    frozen models from the initial snapshot (coarse centroids + PQ
+    codebook, persisted beside the store); later syncs re-encode
+    per-key net effects and rewrite only churn-affected coarse cells.
+    ``on_rewrite`` as in operators/_tail_sync."""
     from crocus_spark.operators._tail_sync import run_tail_sync
 
     def bootstrap(ups):

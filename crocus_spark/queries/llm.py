@@ -5375,7 +5375,7 @@ def ann_hnsw_incremental(spark, sf_dir):
     table = _scratch("hnsw_inc_table")
     index = _scratch("hnsw_inc_index")
     rebuilt = _scratch("hnsw_inc_rebuild")
-    for p in (table, index, index + "_ckpt", rebuilt):
+    for p in (table, index, rebuilt):
         shutil.rmtree(p, ignore_errors=True)
     emb = load(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 10).select("vec_id", "embedding")
@@ -5547,7 +5547,7 @@ def ann_ivf_incremental(spark, sf_dir):
     table = _scratch("ivf_inc_table")
     index = _scratch("ivf_inc_index")
     rebuilt = _scratch("ivf_inc_rebuild")
-    for p in (table, index, index + "_ckpt", rebuilt):
+    for p in (table, index, rebuilt):
         shutil.rmtree(p, ignore_errors=True)
     emb = load(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 10).select("vec_id", "embedding")
@@ -5836,7 +5836,7 @@ def dq_ann_recall_probe(spark, sf_dir):
 
     table = _scratch("dq_recall_table")
     index = _scratch("dq_recall_index")
-    for p in (table, index, index + "_ckpt"):
+    for p in (table, index):
         shutil.rmtree(p, ignore_errors=True)
     emb = load(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 10).select("vec_id", "embedding")
@@ -5928,7 +5928,7 @@ def dq_ann_recall_probe_hnsw(spark, sf_dir):
 
     table = _scratch("dq_recall_h_table")
     index = _scratch("dq_recall_h_index")
-    for p in (table, index, index + "_ckpt"):
+    for p in (table, index):
         shutil.rmtree(p, ignore_errors=True)
     emb = load(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 10).select("vec_id", "embedding")
@@ -6025,7 +6025,7 @@ def ann_pq_incremental(spark, sf_dir):
     table = _scratch("pq_inc_table")
     index = _scratch("pq_inc_index")
     rebuilt = _scratch("pq_inc_rebuild")
-    for p in (table, index, index + "_ckpt", rebuilt):
+    for p in (table, index, rebuilt):
         shutil.rmtree(p, ignore_errors=True)
     emb = load(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 10).select("vec_id", "embedding")
@@ -6116,7 +6116,7 @@ def dq_ann_recall_probe_pq(spark, sf_dir):
 
     table = _scratch("dq_recall_pq_table")
     index = _scratch("dq_recall_pq_index")
-    for p in (table, index, index + "_ckpt"):
+    for p in (table, index):
         shutil.rmtree(p, ignore_errors=True)
     emb = load(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 10).select("vec_id", "embedding")
@@ -6263,7 +6263,7 @@ def ann_ivfpq_incremental(spark, sf_dir):
     table = _scratch("ivfpq_inc_table")
     index = _scratch("ivfpq_inc_index")
     rebuilt = _scratch("ivfpq_inc_rebuild")
-    for p in (table, index, index + "_ckpt", rebuilt):
+    for p in (table, index, rebuilt):
         shutil.rmtree(p, ignore_errors=True)
     emb = load(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 10).select("vec_id", "embedding")

@@ -7,9 +7,9 @@ Streaming over the events fixture: event-time windows, watermarked late-data
 handling, sessionization, streaming dedup, stateful per-key processing, and
 stream-static enrichment joins.
 
-Every bounded stream in the package — the registry's streaming queries,
-the foreachBatch maintainers below and the ANN indexes' CDC sync — runs
-through one :func:`drain`. It starts the query into a memory,
+Every bounded stream in the package — the registry's streaming queries
+and the foreachBatch maintainers below — runs through one
+:func:`drain`. It starts the query into a memory,
 ``foreachBatch`` or format sink, waits for it (availableNow to
 completion, or a polled row target for ``SimpleDataSourceStreamReader``
 sources), retries only the worker-spawn failure class, stops the query
@@ -154,8 +154,7 @@ def drain(
     before it returns (the frame holds the sink itself, so it still
     collects), and with no ``checkpoint`` Spark's temporary checkpoint
     is used, which the stop deletes. Drains whose restart must resume
-    (foreachBatch state roots, index checkpoints, the snapshot sink's
-    ledger) pass their own ``checkpoint``; it is kept.
+    (foreachBatch state roots, the snapshot sink's ledger) pass their own ``checkpoint``; it is kept.
 
     Waiting: availableNow to completion, or — with ``until_rows`` — a
     processingTime query polled until the memory sink holds that many

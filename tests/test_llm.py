@@ -650,15 +650,15 @@ def test_hnsw_upsert_empties_a_shard_cleanly(emb, tmp_path):
     ).count() == 0
 
 
-@pytest.mark.slow  # 3-policy rewrite/restart matrix, ~25 s of stream drains
+@pytest.mark.slow  # 3-policy rewrite/restart matrix, ~25 s of index syncs
 def test_tail_sync_on_rewrite_policies(emb, tmp_path):
-    """A compaction on the source table breaks an index-sync stream
-    PERMANENTLY under the default policy (the checkpointed offset sits
+    """A compaction on the source table breaks an index sync
+    PERMANENTLY under the default policy (the applied version sits
     below the rewrite forever — r9 advice). on_rewrite='skip' ignores
     layout-only rewrites (logical rows unchanged, so the index needs
-    nothing) and keeps the stream alive for later deltas;
-    on_rewrite='rebuild' wipes store+checkpoint, bootstraps from a
-    batch read of the CURRENT snapshot, and tails changes after it."""
+    nothing) and keeps the sync alive for later deltas;
+    on_rewrite='rebuild' wipes the store, bootstraps from a batch read
+    of the CURRENT snapshot, and applies changes after it."""
     import os
 
     from crocus_spark.operators.hnsw import hnsw_sync_from_tail
@@ -733,7 +733,7 @@ def test_ivf_tail_sync_rebuilds_across_compaction(emb, tmp_path):
     (the full three-policy matrix is the slow
     test_tail_sync_on_rewrite_policies): a compaction under a live IVF
     sync makes on_rewrite='rebuild' re-bootstrap from the current
-    snapshot, the checkpoint it leaves picks up the next delta, and the
+    snapshot, the applied version it records picks up the next delta, and the
     maintained store equals a same-model rebuild of the final table."""
     from crocus_spark.operators.maintenance import (
         commit_append,
@@ -806,6 +806,79 @@ def test_ivf_tail_sync_releases_batch_checkpoints(emb, tmp_path):
         assert jsc.getPersistentRDDs().size() == before
     ids = [n for n, _c in _ivf_store_rows(spark, idx)]
     assert sorted(ids) == sorted(set(range(50)) - {3, 41})
+
+
+def test_ivf_tail_sync_replays_a_lost_applied_record(emb, tmp_path):
+    """A crash between the store write and the applied-version record
+    costs only a replay: with the record deleted, the next sync re-reads
+    the feed from version 0 over the existing store, and the merge
+    keeps it equal to a same-model rebuild of the final table."""
+    import os
+
+    from crocus_spark.operators.maintenance import (
+        commit_append,
+        commit_equality_deletes,
+        commit_snapshot,
+        read_snapshot,
+    )
+    from crocus_spark.operators.similarity import (
+        ivf_build_store,
+        ivf_model_load,
+        ivf_sync_from_tail,
+    )
+
+    spark = emb.sparkSession
+    vecs = emb.select("vec_id", "embedding")
+    table, idx = str(tmp_path / "table"), str(tmp_path / "idx")
+    commit_snapshot(vecs.filter(F.col("vec_id") < 50).coalesce(2), table)
+    ivf_sync_from_tail(spark, table, idx, n_cells=4)
+    record = os.path.join(idx, "_applied.json")
+    assert os.path.exists(record)
+    os.remove(record)
+    commit_append(vecs.filter(F.col("vec_id").between(50, 59)).coalesce(1), table)
+    commit_equality_deletes(
+        spark.createDataFrame([(3,), (52,)], "vec_id long"), table, ["vec_id"]
+    )
+    ivf_sync_from_tail(spark, table, idx, n_cells=4)
+    got = _ivf_store_rows(spark, idx)
+    assert {n for n, _c in got} == set(range(60)) - {3, 52}
+    ref = str(tmp_path / "ref")
+    ivf_build_store(read_snapshot(spark, table), ref, ivf_model_load(idx))
+    assert got == _ivf_store_rows(spark, ref)
+
+
+def test_index_syncs_start_no_streaming_query(emb, tmp_path, monkeypatch):
+    """The IVF and HNSW syncs read the change feed as one batch: with
+    ``DataStreamWriter.start`` made to raise, a bootstrap and a delta
+    sync of each family still complete and hold the table's ids."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from crocus_spark.operators.hnsw import hnsw_sync_from_tail
+    from crocus_spark.operators.maintenance import commit_append, commit_snapshot
+    from crocus_spark.operators.similarity import ivf_sync_from_tail
+
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("an index sync started a streaming query")
+
+    monkeypatch.setattr(DataStreamWriter, "start", refuse)
+    spark = emb.sparkSession
+    vecs = emb.select("vec_id", "embedding")
+    table = str(tmp_path / "table")
+    ivf, hnsw = str(tmp_path / "ivf"), str(tmp_path / "hnsw")
+    commit_snapshot(vecs.filter(F.col("vec_id") < 40).coalesce(2), table)
+    for commit in (
+        lambda: None,
+        lambda: commit_append(
+            vecs.filter(F.col("vec_id").between(40, 49)).coalesce(1), table
+        ),
+    ):
+        commit()
+        ivf_sync_from_tail(spark, table, ivf, n_cells=4)
+        hnsw_sync_from_tail(spark, table, hnsw, n_shards=4)
+    assert [n for n, _c in _ivf_store_rows(spark, ivf)] == list(range(50))
+    assert sorted(
+        r.vec_id for r in spark.read.parquet(hnsw).select("vec_id").collect()
+    ) == list(range(50))
 
 
 def test_pq_upsert_edge_cases(emb, tmp_path):

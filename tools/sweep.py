@@ -11,7 +11,8 @@ Usage:
 defaults: /root/testdata/sf0.01, /tmp/sweep_sf001.json, all queries
 The optional third arg restricts the sweep to a comma-separated name
 list (each item may end in ``*`` for a prefix match) — targeted
-re-verification after editing a query.
+re-verification after editing a query. ``--help`` prints the usage
+and exits before any Spark session starts.
 
 Output JSON: {name: {"ok": bool|None, "secs": float, "err": str|None}},
 plus a "_summary" entry; prints the 15 slowest to stderr.
@@ -28,12 +29,14 @@ unbudgeted new queries are listed, never failed.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package, wherever the tool is run from
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BUDGETS_PATH = os.path.join(os.path.dirname(__file__), "sweep_budgets.json")
 
@@ -167,10 +170,33 @@ TABLES = (
 ).split()
 
 
-def main() -> int:
+def _parse_args(argv=None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(
+        description="Full-registry sweep: every query against its DuckDB "
+        "oracle at one fixture scale, with per-query wall and "
+        "process-tree CPU time."
+    )
+    ap.add_argument(
+        "sf_dir", nargs="?", default="/root/testdata/sf0.01",
+        help="fixture directory (default: %(default)s)",
+    )
+    ap.add_argument(
+        "out", nargs="?", default="/tmp/sweep_sf001.json",
+        help="result JSON path (default: %(default)s)",
+    )
+    ap.add_argument(
+        "patterns", nargs="?", default=None,
+        help="comma-separated query names, each may end in '*' for a "
+        "prefix match (default: all queries; sweep budgets bind only "
+        "on a full sweep)",
+    )
+    return ap.parse_args(argv)
+
+
+def main(argv=None) -> int:
+    args = _parse_args(argv)
     _become_subreaper()
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else "/tmp/sweep_sf001.json"
+    sf_dir, out_path = args.sf_dir, args.out
 
     import duckdb
 
@@ -184,8 +210,8 @@ def main() -> int:
     # to whichever Python query sorts first
     warm_python_workers(spark)
     qs, osql = e.queries(), e.oracle_sql()
-    if len(sys.argv) > 3:
-        pats = sys.argv[3].split(",")
+    if args.patterns is not None:
+        pats = args.patterns.split(",")
         qs = {
             k: v
             for k, v in qs.items()
@@ -247,7 +273,7 @@ def main() -> int:
 
     wall = round(time.monotonic() - t_all, 1)
     fails = {k: v for k, v in results.items() if v["ok"] is False}
-    full_sweep = len(sys.argv) <= 3  # budgets bind only on full sweeps
+    full_sweep = args.patterns is None  # budgets bind only on full sweeps
     violations, unbudgeted = (
         check_sweep_budgets(
             {k: v for k, v in results.items() if k != "_summary"}, sf_dir
