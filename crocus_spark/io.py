@@ -405,25 +405,26 @@ def spread(
     return df.repartition(target)
 
 
-def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
-    """Small literal relation via pandas+Arrow — a LocalRelation (zero
-    tasks), where ``createDataFrame(list)`` parallelizes into
-    ``defaultParallelism`` near-empty slices and costs ~1.1 s per
-    materialization on 32 cores vs ~65 ms for the Arrow path (measured,
-    warm session — the same pathology similarity._centroid_df fixed for
-    the IVF model relation). For dense non-null literal rows the pandas
-    conversion cannot change NULL semantics; the list path remains the
-    no-pandas fallback."""
-    rows = list(rows)
-    try:
-        import pandas as pd
-        from pyspark.sql.types import _parse_datatype_string
+def local_df(spark: SparkSession, rows, schema=None) -> DataFrame:
+    """Small literal relation from a typed Arrow table: a LocalRelation
+    (zero tasks), where ``createDataFrame(list)`` launches
+    ``defaultParallelism`` near-empty tasks (~1.1 s vs ~65 ms on 32
+    cores, measured warm). ``rows`` is an Arrow table (a vector column
+    built by ``vectors.column``) or tuples in the order of ``schema``,
+    a DDL string or StructType."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
 
-        names = [f.name for f in _parse_datatype_string(schema).fields]
-        pdf = pd.DataFrame(rows, columns=names)
-        return spark.createDataFrame(pdf, schema)
-    except Exception:
-        return spark.createDataFrame(rows, schema)
+    if not isinstance(rows, pa.Table):
+        if isinstance(schema, str):
+            schema = _parse_datatype_string(schema)
+        rows, target = list(rows), to_arrow_schema(schema)
+        rows = pa.Table.from_arrays(
+            [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(target)],
+            schema=target,
+        )
+    return spark.createDataFrame(rows, schema)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -115,7 +115,9 @@ def upsert(
     up = encoded.localCheckpoint(eager=True)
     try:
         dels = delete_ids.select(F.col(id_col).alias(key)).distinct()
-        back = spark.read.parquet(path)
+        # the store holds what this encode writes under the same frozen
+        # model: read it with that schema, not with an inference job
+        back = spark.read.schema(up.schema).parquet(path)
         touched = dels.unionByName(up.select(key)).distinct()
         if locate is None:
             current = back.join(touched, key, "left_semi").select(part)

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from crocus_spark.io import local_df
 from crocus_spark.operators.similarity import (
     _cosine_ranked,
     _ivf_build,
@@ -52,28 +53,6 @@ __all__ = [
     "ivf_filtered_topk",
     "ivfpq_filtered_topk",
 ]
-
-
-def _pairs_df(spark, pairs) -> DataFrame:
-    """(query_id, cell) probe relation from a Python list — through
-    pandas+Arrow (LocalRelation, zero tasks), NOT ``createDataFrame(
-    list)``, whose parallelize path launches ``defaultParallelism``
-    near-empty tasks per widening round (~0.3 s each on 32 cores —
-    same pathology as similarity._centroid_df). Values are dense
-    non-null ints, so the pandas conversion cannot change NULL
-    semantics; the list path remains the no-pandas fallback."""
-    try:
-        import pandas as pd
-
-        pdf = pd.DataFrame(
-            {
-                "query_id": [int(q) for q, _c in pairs],
-                "cell": [int(c) for _q, c in pairs],
-            }
-        )
-        return spark.createDataFrame(pdf, "query_id long, cell int")
-    except Exception:
-        return spark.createDataFrame(pairs, "query_id long, cell int")
 
 
 def _probe_order(queries, model, id_col, vec_col) -> dict[int, list[int]]:
@@ -191,7 +170,7 @@ def ivf_filtered_topk(
     while pending:
         lvl = min(level, n_cells)
         pairs = [(int(q), int(c)) for q in pending for c in order[q][:lvl]]
-        probes = _pairs_df(spark, pairs)
+        probes = local_df(spark, pairs, "query_id long, cell int")
         probe_cells = sorted({c for _q, c in pairs})  # pruning literal
         back = (
             spark.read.parquet(path)

@@ -13,7 +13,8 @@ single-machine structure; the distributed idiom — used by every
 production vector store — is SHARDED HNSW: partition the corpus, build
 one small graph per shard executor-side, search all shards in parallel,
 merge local top-k into global top-k. Build is embarrassingly parallel
-(one Arrow task per shard, no shuffle between inserts), and serving
+(one ``mapInArrow``/``applyInArrow`` task per shard, no shuffle between
+inserts), and serving
 wall-clock is the SLOWEST SHARD, not the corpus.
 
 Determinism (what makes results reproducible run-to-run and therefore
@@ -41,6 +42,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from crocus_spark.operators import cell_store
+from crocus_spark.operators.vectors import matrix
 
 __all__ = [
     "build_hnsw",
@@ -260,24 +262,29 @@ def _unit(mat):
 def _probe_matrix(queries, id_col: str, vec_col: str):
     """(ids, unit rows) of the bounded probe set, collected once so the
     matrix rides in the shard tasks' closure."""
-    probes = queries.select(id_col, vec_col).collect()  # bounded probe set
-    q_ids = [int(r[0]) for r in probes]
-    return q_ids, _unit(np.asarray([list(r[1]) for r in probes], dtype=np.float64))
+    probes = queries.select(id_col, vec_col).toArrow()  # bounded probe set
+    return probes[id_col].to_pylist(), _unit(matrix(probes[vec_col], vec_col))
 
 
 def _search_shard(graph, mat, q_ids, q_mat, k: int, ef: int, allowed=None):
-    """One shard's local top-k for every probe, as a HNSW_SCHEMA frame;
-    with an ``allowed`` mask the filtered beam runs."""
-    import pandas as pd
+    """One shard's local top-k for every probe, as a HNSW_SCHEMA Arrow
+    table; with an ``allowed`` mask the filtered beam runs."""
+    import pyarrow as pa
 
-    rows = []
-    for qi, qv in zip(q_ids, q_mat):
-        if allowed is None:
-            found = search_hnsw(graph, mat, qv, k, ef=ef)
-        else:
-            found = search_hnsw_filtered(graph, mat, qv, k, allowed, ef=ef)
-        rows.extend((qi, nid, float(cos)) for cos, nid in found)
-    return pd.DataFrame(rows, columns=["query_id", "neighbor_id", "cos"])
+    rows = [
+        (qi, nid, float(cos))
+        for qi, qv in zip(q_ids, q_mat)
+        for cos, nid in (
+            search_hnsw(graph, mat, qv, k, ef=ef) if allowed is None
+            else search_hnsw_filtered(graph, mat, qv, k, allowed, ef=ef)
+        )
+    ]
+    cols = list(zip(*rows)) or [(), (), ()]
+    types = (pa.int64(), pa.int64(), pa.float64())
+    return pa.table(
+        [pa.array(c, t) for c, t in zip(cols, types)],
+        names=["query_id", "neighbor_id", "cos"],
+    )
 
 
 def _merge_topk(local, k: int):
@@ -327,18 +334,18 @@ def hnsw_topk(
     sharded = corpus.select(id_col, vec_col).repartition(n_shards, id_col)
 
     def per_shard(batches):
-        ids: list[int] = []
-        vecs: list[list[float]] = []
-        for b in batches:
-            ids.extend(int(x) for x in b[id_col])
-            vecs.extend(list(v) for v in b[vec_col])
-        if not ids:
-            return
-        mat = _unit(np.asarray(vecs, dtype=np.float64))
-        graph = build_hnsw(ids, mat, M=M, ef_construction=max(ef, 2 * M))
-        yield _search_shard(graph, mat, q_ids, q_mat, k, ef)
+        import pyarrow as pa
 
-    return _merge_topk(sharded.mapInPandas(per_shard, HNSW_SCHEMA), k)
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        shard = pa.Table.from_batches(batches)
+        ids = shard[id_col].to_pylist()
+        mat = _unit(matrix(shard[vec_col], vec_col))
+        graph = build_hnsw(ids, mat, M=M, ef_construction=max(ef, 2 * M))
+        yield from _search_shard(graph, mat, q_ids, q_mat, k, ef).to_batches()
+
+    return _merge_topk(sharded.mapInArrow(per_shard, HNSW_SCHEMA), k)
 
 
 # ---------------------------------------------------------------------------
@@ -418,22 +425,22 @@ def _build_shard_graphs(
     content. Shards absent from the input keep their existing files
     byte-for-byte (the property incremental maintenance relies on).
     Returns the bounded per-shard build stats."""
-    import pandas as pd
-
     os.makedirs(gdir, exist_ok=True)
 
-    def build(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(id_col)
-        ids = [int(x) for x in pdf[id_col]]
-        mat = _unit(np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64))
+    def build(t):
+        import pyarrow as pa
+
+        t = t.sort_by(id_col)
+        ids = t[id_col].to_pylist()
+        mat = _unit(matrix(t[vec_col], vec_col))
         graph = build_hnsw(ids, mat, M=M, ef_construction=ef_construction)
-        shard = int(pdf["shard"].iloc[0])
+        shard = t["shard"][0].as_py()
         cell_store.save_json(gdir, f"shard-{shard:05d}.json", _graph_to_json(graph))
-        return pd.DataFrame({"shard": [shard], "n": [len(ids)]})
+        return pa.table({"shard": pa.array([shard], pa.int32()), "n": [len(ids)]})
 
     return (
         sharded.groupBy("shard")
-        .applyInPandas(build, "shard int, n long")
+        .applyInArrow(build, "shard int, n long")
         .collect()  # ≤ n_shards rows — bounded
     )
 
@@ -444,33 +451,31 @@ def _serve_shards(spark, queries, path: str, k: int, ef: int,
     ``hnsw_filtered_topk_at_rest``) over the committed store at
     ``path``: one grouped-map task per shard loads its graph, checks it
     against the store rows and searches; one window merges."""
-    import pandas as pd
-
     gdir = os.path.join(path, cell_store.GRAPHS)
     q_ids, q_mat = _probe_matrix(queries, id_col, vec_col)
     back = spark.read.parquet(path)
     if predicate is not None:
         back = back.withColumn("_match", F.expr(predicate))
 
-    def serve(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(id_col)
-        shard = int(pdf["shard"].iloc[0])
+    def serve(t):
+        t = t.sort_by(id_col)
+        shard = t["shard"][0].as_py()
         graph = _graph_from_json(
             cell_store.load_json(gdir, f"shard-{shard:05d}.json")
         )
-        ids = [int(x) for x in pdf[id_col]]
+        ids = t[id_col].to_pylist()
         if graph["ids"] != ids:
             raise ValueError(
                 f"graph/store drift in shard {shard}: "
                 f"{len(graph['ids'])} graph ids vs {len(ids)} store rows"
             )
-        mat = _unit(np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64))
+        mat = _unit(matrix(t[vec_col], vec_col))
         allowed = None
         if predicate is not None:
-            allowed = pdf["_match"].fillna(False).to_numpy(dtype=bool)
+            allowed = t["_match"].fill_null(False).to_numpy()
         return _search_shard(graph, mat, q_ids, q_mat, k, ef, allowed)
 
-    return _merge_topk(back.groupBy("shard").applyInPandas(serve, HNSW_SCHEMA), k)
+    return _merge_topk(back.groupBy("shard").applyInArrow(serve, HNSW_SCHEMA), k)
 
 
 def hnsw_topk_at_rest(
@@ -535,6 +540,9 @@ def hnsw_upsert_store(
     the exact-twin property the query asserts. Returns the rebuilt
     shard ids."""
     gdir = os.path.join(path, cell_store.GRAPHS)
+    encoded = upserts.select(
+        F.col(id_col), F.col(vec_col), _shard_col(id_col, n_shards)
+    )
 
     def rewritten(survivors, emptied):
         # a shard deleted down to ZERO rows loses its graph with its
@@ -544,7 +552,8 @@ def hnsw_upsert_store(
             if os.path.exists(g):
                 os.unlink(g)
         if survivors:
-            fresh = spark.read.parquet(path).filter(
+            # the store's schema is the encode's: no inference job
+            fresh = spark.read.schema(encoded.schema).parquet(path).filter(
                 F.col("shard").isin(survivors)
             )
             _build_shard_graphs(
@@ -553,7 +562,7 @@ def hnsw_upsert_store(
 
     return cell_store.upsert(
         spark,
-        upserts.select(F.col(id_col), F.col(vec_col), _shard_col(id_col, n_shards)),
+        encoded,
         delete_ids,
         path,
         id_col,

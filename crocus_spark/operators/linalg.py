@@ -2,7 +2,8 @@
 second-moment matrix, the building block of PCA, whitening, and linear
 probing over a corpus of vectors.
 
-Scale shape: the corpus is touched ONCE by an Arrow batch pass that
+Scale shape: the corpus is touched ONCE by a ``mapInArrow`` pass that
+reads each batch's vectors as one matrix (``operators/vectors.py``) and
 accumulates a d×d partial X^T X per batch (numpy matmul — the only
 O(n·d²) arithmetic, fully vectorized); each partial then explodes into
 (i, j, value) cells and a groupBy(i, j) sums partials across batches.
@@ -24,6 +25,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from crocus_spark.operators.vectors import matrix
+
 PARTIAL_SCHEMA = "i INT, j INT, sxx DOUBLE, n BIGINT"
 
 
@@ -31,29 +34,20 @@ def gram_cells(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """(i, j, sxx, n) partial cells of X^T X per Arrow batch (i ≤ j —
     the matrix is symmetric, so only the upper triangle materializes)."""
     import numpy as np
-    import pandas as pd
     import pyarrow as pa
 
     def partials(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for batch in batches:
-            col = batch.column(0)
-            V = np.vstack(
-                [np.asarray(x, dtype=np.float64) for x in col.to_pylist()]
-            )
-            if V.size == 0:
-                continue
+            V = matrix(batch.column(0), vec_col)
             G = V.T @ V  # (d, d)
-            d = G.shape[0]
-            iu, ju = np.triu_indices(d)
-            yield pa.RecordBatch.from_pandas(
-                pd.DataFrame(
-                    {
-                        "i": iu.astype("int32"),
-                        "j": ju.astype("int32"),
-                        "sxx": G[iu, ju],
-                        "n": np.full(len(iu), V.shape[0], dtype="int64"),
-                    }
-                )
+            iu, ju = np.triu_indices(G.shape[0])
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "i": iu.astype(np.int32),
+                    "j": ju.astype(np.int32),
+                    "sxx": G[iu, ju],
+                    "n": np.full(len(iu), V.shape[0], dtype=np.int64),
+                }
             )
 
     return df.select(vec_col).mapInArrow(partials, PARTIAL_SCHEMA)

@@ -4,8 +4,10 @@ random-hyperplane LSH bucketed variant as the scale path, and embedding
 cosine near-dup pairs.
 
 Vector math stays in built-in higher-order functions (zip_with/aggregate) —
-JVM-side, no UDF serde. The LSH plane matrix is a seeded literal: tiny,
-deterministic, broadcast by construction.
+JVM-side, no UDF serde — except on the hot paths, which run as Arrow
+stages (``arrow_udf``, ``mapInArrow``) and move every vector column
+through the one codec in ``operators/vectors.py``. The LSH plane matrix
+is a seeded literal: tiny, deterministic, broadcast by construction.
 
 Published foundations (public literature): random-hyperplane LSH is
 Charikar (STOC'02); multiprobe is Lv et al., "Multi-Probe LSH" (VLDB'07);
@@ -21,7 +23,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from crocus_spark.io import local_df
 from crocus_spark.operators import cell_store
+from crocus_spark.operators.vectors import codes_column, codes_matrix, column, matrix
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -50,7 +54,7 @@ def cosine(a: Column, b: Column) -> Column:
     return prod / (na * nb)
 
 
-@F.pandas_udf(T.DoubleType())
+@F.arrow_udf(T.DoubleType())
 def cosine_batch(a, b):
     """Arrow-batched cosine, BIT-IDENTICAL to the ``cosine`` fold: the
     accumulation loops over *dimensions* with numpy elementwise float64
@@ -61,12 +65,9 @@ def cosine_batch(a, b):
     (measured 60s for 2M pairs at sf0.1; this UDF: ~1s). Fixed-dim
     vectors assumed (the embeddings contract)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    if len(a) == 0:
-        return pd.Series([], dtype="float64")
-    A = np.vstack(a.to_numpy()).astype(np.float64)
-    B = np.vstack(b.to_numpy()).astype(np.float64)
+    A, B = matrix(a, "a"), matrix(b, "b")
     dot = np.zeros(A.shape[0])
     na = np.zeros(A.shape[0])
     nb = np.zeros(A.shape[0])
@@ -75,7 +76,7 @@ def cosine_batch(a, b):
         dot = dot + x * y
         na = na + x * x
         nb = nb + y * y
-    return pd.Series(dot / (np.sqrt(na) * np.sqrt(nb)))
+    return pa.array(dot / (np.sqrt(na) * np.sqrt(nb)))
 
 
 def brute_force_topk(
@@ -178,7 +179,6 @@ def lsh_bucketed_topk(
     ~3 s at sf0.01 for the same buckets).
     """
     import numpy as np
-    import pandas as pd
 
     planes = np.array(
         [_hyperplanes(dim, n_planes, t, seed) for t in range(n_tables)],
@@ -186,12 +186,11 @@ def lsh_bucketed_topk(
     ).reshape(n_tables * n_planes, dim)
     weights = 1 << np.arange(n_planes, dtype=np.int64)
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
+    @F.arrow_udf(T.ArrayType(T.LongType()))
     def all_sigs(v):
-        V = np.vstack(v.to_numpy()).astype(np.float64)  # (B, dim)
+        V = matrix(v, vec_col)  # (B, dim)
         bits = (V @ planes.T > 0).reshape(len(V), n_tables, n_planes)
-        sigs = (bits * weights).sum(-1).astype(np.int64)  # (B, n_tables)
-        return pd.Series(list(sigs))
+        return column((bits * weights).sum(-1).astype(np.int64))  # (B, n_tables)
 
     def with_buckets(df, prefix, probe):
         base = df.select(
@@ -252,23 +251,20 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-@F.pandas_udf(T.DoubleType())
+@F.arrow_udf(T.DoubleType())
 def dot_batch(a, b):
     """Arrow-batched dot product, bit-identical to the ``_dot`` fold: the
     dimension loop keeps each row's left-to-right IEEE accumulation order
     while numpy vectorizes across rows (same rationale as cosine_batch —
     the fold is interpreted per element)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    if len(a) == 0:
-        return pd.Series([], dtype="float64")
-    A = np.vstack(a.to_numpy()).astype(np.float64)
-    B = np.vstack(b.to_numpy()).astype(np.float64)
+    A, B = matrix(a, "a"), matrix(b, "b")
     dot = np.zeros(A.shape[0])
     for i in range(A.shape[1]):
         dot = dot + A[:, i] * B[:, i]
-    return pd.Series(dot)
+    return pa.array(dot)
 
 
 def collect_centroid_model(centroids: DataFrame):
@@ -278,40 +274,18 @@ def collect_centroid_model(centroids: DataFrame):
     MLlib KMeans use; it is never on a data-sized path."""
     import numpy as np
 
-    rows = sorted(centroids.collect(), key=lambda r: r["cell"])
-    cells = np.array([int(r["cell"]) for r in rows], dtype=np.int32)
-    mat = np.array([list(r["centroid"]) for r in rows], dtype=np.float64)
-    return cells, mat
-
-
-def _local_relation(spark, columns: dict, schema) -> DataFrame:
-    """A small driver-side relation (``columns``: name → values) built
-    through pandas+Arrow, NOT ``createDataFrame(list)``: the list path
-    parallelizes into ``defaultParallelism`` slices, so every
-    materialization of an 8-row relation launched 32 near-empty tasks
-    (measured 0.35 s vs 0.05 s for the Arrow local relation — the probe
-    path paid it once per broadcast build). Callers pass dense non-null
-    values, so the pandas conversion cannot change NULL semantics; the
-    list path remains as fallback for sessions without Arrow."""
-    try:
-        import pandas as pd
-
-        return spark.createDataFrame(pd.DataFrame(columns), schema)
-    except Exception:
-        return spark.createDataFrame(list(zip(*columns.values())), schema)
+    t = centroids.toArrow().sort_by("cell")
+    cells = t["cell"].to_numpy().astype(np.int32)
+    return cells, matrix(t["centroid"], "centroid")
 
 
 def _centroid_df(spark, cells, mat) -> DataFrame:
     """(cell, centroid) DataFrame rebuilt from the collected model —
     plan-time literal rows, so referencing it never re-runs the fit."""
-    return _local_relation(
-        spark,
-        {
-            "cell": [int(c) for c in cells],
-            "centroid": [[float(x) for x in row] for row in mat],
-        },
-        "cell int, centroid array<double>",
-    )
+    import pyarrow as pa
+
+    cells = pa.array(cells, pa.int32())
+    return local_df(spark, pa.table({"cell": cells, "centroid": column(mat)}))
 
 
 def _unit_rows(V):
@@ -361,16 +335,14 @@ def assign_cells_projection(
     ``np.argmax``'s first-max rule over ascending cell ids gives the
     max-dot / lowest-cell tie rule."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    @F.pandas_udf(T.IntegerType())
+    @F.arrow_udf(T.IntegerType())
     def best_cell(v):
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        V = np.vstack(v.to_numpy()).astype(np.float64)
+        V = matrix(v, "v")
         if normalize:
             V = _unit_rows(V)
-        return pd.Series(_nearest_cells(V, cells, mat), dtype="int32")
+        return pa.array(_nearest_cells(V, cells, mat).astype(np.int32))
 
     # asNondeterministic (guide §4.4 pattern): downstream equi-joins on
     # "cell" push an IsNotNull(cell) filter below the projection, and the
@@ -397,21 +369,15 @@ def assign_and_normalize(vectors: DataFrame, cells, mat) -> DataFrame:
     order, so every emitted double is bit-identical to the interpreted
     lambda + projection pair it replaces."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     def fn(batches):
         for b in batches:
-            if len(b) == 0:
-                continue
-            V = _unit_rows(np.vstack(b["v"].to_numpy()).astype(np.float64))
-            yield pd.DataFrame(
-                {
-                    "cell": _nearest_cells(V, cells, mat).astype("int32"),
-                    "v": list(V),
-                }
-            )
+            V = _unit_rows(matrix(b.column("v"), "v"))
+            cell = _nearest_cells(V, cells, mat).astype(np.int32)
+            yield pa.RecordBatch.from_pydict({"cell": cell, "v": column(V)})
 
-    return vectors.mapInPandas(fn, "cell int, v array<double>")
+    return vectors.mapInArrow(fn, "cell int, v array<double>")
 
 
 def ivf_fit_centroids(
@@ -719,35 +685,28 @@ def cosine_neardup_pairs(
         )
 
     import numpy as np
+    import pyarrow as pa
 
-    probe_rows = probe.select(
+    probe_t = probe.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-    ).collect()  # bounded probe contract: m×d — model-sized
-    if not probe_rows:
-        # empty probe set: P would be shape (0,) and P.shape[1] inside
-        # the executor-side scorer raises — return the empty result the
-        # old join-based path produced.
-        spark = df.sparkSession
-        return spark.createDataFrame(
-            [], "id_a long, id_b long, cos double"
-        )
-    p_ids = np.array([r["id"] for r in probe_rows], dtype=np.int64)
-    P = np.array([list(r["v"]) for r in probe_rows], dtype=np.float64)
+    ).toArrow()  # bounded probe contract: m×d — model-sized
+    if not probe_t.num_rows:
+        # empty probe set: the scorer would see a (0, 0) probe matrix —
+        # return the empty result the old join-based path produced.
+        return local_df(df.sparkSession, [], "id_a long, id_b long, cos double")
+    p_ids = probe_t["id"].to_numpy().astype(np.int64)
+    P = matrix(probe_t["v"], vec_col)
 
     def score(batches):
-        import pandas as pd
-
         # probe norms in the same dim order as the pair fold
         nb = np.zeros(P.shape[0])
         for i in range(P.shape[1]):
             y = P[:, i]
             nb = nb + y * y
         sq_nb = np.sqrt(nb)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c_ids = pdf["id_b"].to_numpy(dtype=np.int64)
-            C = np.vstack(pdf["vb"].to_numpy()).astype(np.float64)
+        for b in batches:
+            c_ids = b.column("id_b").to_numpy().astype(np.int64)
+            C = matrix(b.column("vb"), vec_col)
             dot = np.zeros((C.shape[0], P.shape[0]))
             na = np.zeros(C.shape[0])
             for i in range(C.shape[1]):
@@ -757,18 +716,14 @@ def cosine_neardup_pairs(
             cos = dot / (np.sqrt(na)[:, None] * sq_nb[None, :])
             keep = p_ids[None, :] < c_ids[:, None]
             ci, pi = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "id_a": p_ids[pi],
-                    "id_b": c_ids[ci],
-                    "cos_raw": cos[ci, pi],
-                }
+            yield pa.RecordBatch.from_pydict(
+                {"id_a": p_ids[pi], "id_b": c_ids[ci], "cos_raw": cos[ci, pi]}
             )
 
     corpus = df.select(
         F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")
     ).repartition(par)
-    scored = corpus.mapInPandas(
+    scored = corpus.mapInArrow(
         score, "id_a long, id_b long, cos_raw double"
     )
     return (
@@ -811,7 +766,7 @@ def pq_fit_codebook(
         .orderBy(F.xxhash64(F.col("id")), F.col("id"))
         .limit(sample_n)
     )
-    X = np.array([r.v for r in sample.collect()], dtype=np.float64)
+    X = matrix(sample.toArrow()["v"], "v")
     d = X.shape[1]
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -879,19 +834,14 @@ def pq_topk(
 def _normed_queries(queries: DataFrame, id_col: str, vec_col: str):
     """(query ids, unit-vector matrix) of the bounded query set, in id
     order — collected for LUT construction (queries ≪ corpus)."""
-    import numpy as np
-
-    q_rows = (
+    q = (
         queries.select(
             F.col(id_col).alias("query_id"), _norm_vec(F.col(vec_col)).alias("qn")
         )
         .orderBy("query_id")
-        .collect()
+        .toArrow()
     )
-    return (
-        [r.query_id for r in q_rows],
-        np.array([r.qn for r in q_rows], dtype=np.float64),
-    )
+    return q["query_id"].to_pylist(), matrix(q["qn"], "qn")
 
 
 def _adc_candidates(spark, scan: DataFrame, q_ids, Q, codebook, refine: int,
@@ -907,7 +857,7 @@ def _adc_candidates(spark, scan: DataFrame, q_ids, Q, codebook, refine: int,
     its probed cells) it also carries ``cell`` and each query scores
     only its own probed cells (a vectorized ``np.isin`` mask)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     m, _ksub, ds = codebook.shape
     lut = np.einsum("qsd,skd->qsk", Q.reshape(len(q_ids), m, ds), codebook)
@@ -918,24 +868,18 @@ def _adc_candidates(spark, scan: DataFrame, q_ids, Q, codebook, refine: int,
     def adc_scan(batches):
         ids, lut_v, cb, cq = bc.value
         rng = np.arange(m)
-        for pdf in batches:
-            B = len(pdf)
-            if not B:
-                continue
+        for b in batches:
             if cb is not None:
-                V = np.array(list(pdf["v"]), dtype=np.float64)
-                codes = pq_encode_batch(V, cb)
+                codes = pq_encode_batch(matrix(b.column("v"), "v"), cb)
             else:
-                codes = np.frombuffer(
-                    b"".join(pdf["code"]), dtype=np.uint8
-                ).reshape(B, m)
-            nid = pdf["neighbor_id"].to_numpy()
+                codes = codes_matrix(b.column("code"), m)
+            nid = b.column("neighbor_id").to_numpy().astype(np.int64)
             out_id, out_q, out_adc = [], [], []
             for qi, qid in enumerate(ids):
                 if cq is None:
                     sel = slice(None)
                 else:
-                    sel = np.isin(pdf["cell"].to_numpy(), cq.get(qid, []))
+                    sel = np.isin(b.column("cell").to_numpy(), cq.get(qid, []))
                     if not sel.any():
                         continue
                 sub = codes[sel]
@@ -944,15 +888,13 @@ def _adc_candidates(spark, scan: DataFrame, q_ids, Q, codebook, refine: int,
                 out_adc.append(lut_v[qi][rng, sub].sum(1))
             if not out_id:
                 continue
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": np.concatenate(out_id),
-                    "query_id": np.concatenate(out_q),
-                    "adc": np.concatenate(out_adc),
-                }
-            )
+            yield pa.RecordBatch.from_pydict({
+                "neighbor_id": np.concatenate(out_id),
+                "query_id": np.concatenate(out_q),
+                "adc": np.concatenate(out_adc),
+            })
 
-    scanned = scan.mapInPandas(
+    scanned = scan.mapInArrow(
         adc_scan, schema="neighbor_id long, query_id long, adc double"
     )
     w_c = Window.partitionBy("query_id").orderBy(
@@ -1028,22 +970,10 @@ def ivf_topk_at_rest(
     plist = (
         _probes(queries, model, id_col, vec_col, nprobe)
         .select("query_id", "q_vec", "cell")
-        .collect()
+        .toArrow()
     )
-    probe_cells = sorted({r.cell for r in plist})
-    probes = _local_relation(
-        spark,
-        {
-            "query_id": [r.query_id for r in plist],
-            "q_vec": [list(r.q_vec) for r in plist],
-            "cell": [r.cell for r in plist],
-        },
-        T.StructType([
-            T.StructField("query_id", queries.schema[id_col].dataType),
-            T.StructField("q_vec", queries.schema[vec_col].dataType),
-            T.StructField("cell", T.IntegerType()),
-        ]),
-    )
+    probe_cells = sorted(set(plist["cell"].to_pylist()))
+    probes = local_df(spark, plist)  # the collected types, as they came
     back = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
     return _exact_topk(back.join(F.broadcast(probes), "cell"), k)
 
@@ -1225,8 +1155,6 @@ def _pq_encoded(
     centroid geometry to partition by, the cells exist so UPKEEP
     rewrites only churn-affected directories. ``attr_cols`` ride
     through untouched — the filtered-serve store shape."""
-    import pandas as pd  # noqa: PLC0415
-
     spark = corpus.sparkSession
     attrs = list(attr_cols)
     attr_schema = ""
@@ -1239,28 +1167,29 @@ def _pq_encoded(
 
     def fn(batches):
         import numpy as np
+        import pyarrow as pa
 
         model_, cb = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = _unit_rows(np.vstack(pdf["_v"].to_numpy()).astype(np.float64))
+        for b in batches:
+            V = _unit_rows(matrix(b.column("_v"), vec_col))
             out = {
-                "neighbor_id": pdf["neighbor_id"],
-                "c_vec": pdf["c_vec"],
-                "code": [c.tobytes() for c in pq_encode_batch(V, cb)],
+                "neighbor_id": b.column("neighbor_id"),
+                "c_vec": b.column("c_vec"),
+                "code": codes_column(pq_encode_batch(V, cb)),
             }
             for a in attrs:
-                out[a] = pdf[a]
+                out[a] = b.column(a)
             if model_ is None:
-                out["cell"] = pdf["cell"]
+                out["cell"] = b.column("cell")
             else:
-                out["cell"] = _nearest_cells(V, *model_).astype("int32")
-            yield pd.DataFrame(out)
+                out["cell"] = _nearest_cells(V, *model_).astype(np.int32)
+            yield pa.RecordBatch.from_pydict(out)
 
+    # the pass-through columns reach the output batch as they arrive, so
+    # the input projection carries the output schema's types
     cols = [
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
+        F.col(id_col).cast("long").alias("neighbor_id"),
+        F.col(vec_col).cast("array<float>").alias("c_vec"),
         *[F.col(c) for c in attrs],
         F.col(vec_col).alias("_v"),
     ]
@@ -1270,7 +1199,7 @@ def _pq_encoded(
             .cast("int")
             .alias("cell")
         )
-    return corpus.select(*cols).mapInPandas(
+    return corpus.select(*cols).mapInArrow(
         fn,
         "neighbor_id long, c_vec array<float>, code binary"
         + attr_schema + ", cell int",
@@ -1443,18 +1372,21 @@ def ivfpq_topk_at_rest(
     plist = (
         _probes(queries, model, id_col, vec_col, nprobe)
         .select("query_id", "qn", "cell")
-        .collect()
+        .toArrow()
     )
-    probe_cells = sorted({r.cell for r in plist})  # pruning literal
-    q_rows = sorted({(r.query_id, tuple(r.qn)) for r in plist})
-    q_ids = [q for q, _ in q_rows]
-    Q = np.array([list(v) for _, v in q_rows], dtype=np.float64)
+    qid = plist["query_id"].to_numpy()
+    cell = plist["cell"].to_pylist()
+    probe_cells = sorted(set(cell))  # pruning literal
+    # one unit row per query (a query's nprobe rows share it), id order
+    q_ids, first = np.unique(qid, return_index=True)
+    q_ids = q_ids.tolist()
+    Q = matrix(plist["qn"], "qn")[first]
     # query → probed cells (bounded: ≤ nprobe ints per query), so the
     # scan masks with a vectorized np.isin instead of a per-row Python
     # membership test
     cells_of_q: dict = {}
-    for r in plist:
-        cells_of_q.setdefault(r.query_id, []).append(int(r.cell))
+    for q, c in zip(qid.tolist(), cell):
+        cells_of_q.setdefault(q, []).append(c)
 
     store = spark.read.parquet(path).filter(
         F.col("cell").isin(probe_cells)

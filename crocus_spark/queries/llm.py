@@ -25,6 +25,7 @@ from crocus_spark.operators import dedup as D
 from crocus_spark.operators import multimodal as M
 from crocus_spark.operators import similarity as S
 from crocus_spark.operators import text as X
+from crocus_spark.operators.vectors import matrix
 from crocus_spark.queries import _det as DET
 
 
@@ -1655,7 +1656,7 @@ def ml_kmeans_iterations(spark, sf_dir):
     hash gate (verified MATCH at sf0.001 / sf0.01 / sf0.1)."""
     from decimal import ROUND_HALF_UP, Decimal
 
-    # Per-round plan: ONE mapInPandas job, ZERO shuffles. Each Arrow
+    # Per-round plan: ONE mapInArrow job, ZERO shuffles. Each Arrow
     # partition computes, for the round's centroid matrix shipped in
     # the task closure (k×64 doubles — model-sized): the assignment
     # (left-assoc float64 fold, identical IEEE sequence to the oracle's
@@ -1686,24 +1687,29 @@ def ml_kmeans_iterations(spark, sf_dir):
     )
     k = 8
     emb = emb.persist()
-    seed_rows = sorted(
-        (r["vec_id"], list(r["v"]))
-        for r in emb.orderBy("vec_id").limit(k).collect()
-    )
-    centroid_map = {i: v for i, (_, v) in enumerate(seed_rows)}
+    seeds = emb.orderBy("vec_id").limit(k).toArrow()
+    centroid_map = dict(enumerate(matrix(seeds["v"], "v")))
     history = []
     Q9 = Decimal("1.000000000")
 
     def _round_stats(cmat_prev, cmat_cur):
-        """Build the round's partial-stats mapInPandas fn. cmat_* are
+        """Build the round's partial-stats mapInArrow fn. cmat_* are
         k×64 numpy float64 matrices (prev is None in round 0)."""
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
-        def assign_cells(V):
+        partial_schema = pa.schema([
+            ("cell", pa.int32()),
+            ("n", pa.int64()),
+            ("mv", pa.int64()),
+            ("sd2q", pa.decimal128(38, 0)),
+            ("svq", pa.list_(pa.decimal128(38, 0))),
+        ])
+
+        def assign(V, cmat):
             best_d2, best_cell = None, None
-            for cell in range(cmat_cur.shape[0]):
-                c = cmat_cur[cell]
+            for cell in range(cmat.shape[0]):
+                c = cmat[cell]
                 acc = np.zeros(V.shape[0])
                 for i in range(V.shape[1]):  # left-assoc, dim order
                     d = V[:, i] - c[i]
@@ -1716,34 +1722,12 @@ def ml_kmeans_iterations(spark, sf_dir):
                     best_cell = np.where(better, cell, best_cell)
             return best_cell, best_d2
 
-        def assign_only(V, cmat):
-            best_d2, best_cell = None, None
-            for cell in range(cmat.shape[0]):
-                c = cmat[cell]
-                acc = np.zeros(V.shape[0])
-                for i in range(V.shape[1]):
-                    d = V[:, i] - c[i]
-                    acc = acc + d * d
-                if best_d2 is None:
-                    best_d2, best_cell = acc, np.zeros(len(acc), dtype=np.int64)
-                else:
-                    better = acc < best_d2
-                    best_d2 = np.where(better, acc, best_d2)
-                    best_cell = np.where(better, cell, best_cell)
-            return best_cell
-
         def fn(batches):
             for b in batches:
-                if len(b) == 0:
-                    continue
-                V = np.vstack(b["v"].to_numpy()).astype(np.float64)
-                VQ = np.vstack(b["vq"].to_numpy()).astype(np.int64)
-                cell, d2 = assign_cells(V)
-                prev = (
-                    assign_only(V, cmat_prev)
-                    if cmat_prev is not None
-                    else None
-                )
+                V = matrix(b.column("v"), "v")
+                VQ = matrix(b.column("vq"), "vq", dtype="int64")
+                cell, d2 = assign(V, cmat_cur)
+                prev = assign(V, cmat_prev)[0] if cmat_prev is not None else None
                 rows = []
                 for c in np.unique(cell):
                     m = cell == c
@@ -1789,7 +1773,7 @@ def ml_kmeans_iterations(spark, sf_dir):
                             "svq": svq,
                         }
                     )
-                yield pd.DataFrame(rows)
+                yield pa.RecordBatch.from_pylist(rows, schema=partial_schema)
 
         return fn
 
@@ -1801,7 +1785,7 @@ def ml_kmeans_iterations(spark, sf_dir):
             [centroid_map[c] for c in sorted(centroid_map)],
             dtype=np.float64,
         )
-        partials = emb.mapInPandas(
+        partials = emb.mapInArrow(
             _round_stats(cmat_prev, cmat_cur),
             "cell int, n long, mv long, sd2q decimal(38,0), svq array<decimal(38,0)>",
         ).collect()

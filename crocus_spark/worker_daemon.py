@@ -45,6 +45,7 @@ for _mod in (
     "crocus_spark.operators.jpegcodec",
     "crocus_spark.operators.gifcodec",
     "crocus_spark.operators.multimodal",
+    "crocus_spark.operators.vectors",
     "crocus_spark.operators.similarity",
     "crocus_spark.operators.hnsw",
     "crocus_spark.normalize",

@@ -808,6 +808,43 @@ def test_ivf_tail_sync_releases_batch_checkpoints(emb, tmp_path):
     assert sorted(ids) == sorted(set(range(50)) - {3, 41})
 
 
+def test_ivf_delta_sync_runs_no_schema_inference_job(emb, tmp_path):
+    """A delta sync reads the cell store with the schema its own encode
+    writes, so none of its jobs (counted through a job group) infers
+    the store's parquet schema — a job whose stages are all named
+    ``parquet at …``; the store write runs under the adaptive executor
+    and carries no such name. Reading without a schema cost one such
+    job on every sync of every family."""
+    from crocus_spark.operators.maintenance import commit_append, commit_snapshot
+    from crocus_spark.operators.similarity import ivf_sync_from_tail
+
+    spark = emb.sparkSession
+    sc = spark.sparkContext
+    vecs = emb.select("vec_id", "embedding")
+    table, idx = str(tmp_path / "table"), str(tmp_path / "idx")
+    commit_snapshot(vecs.filter(F.col("vec_id") < 40).coalesce(2), table)
+    ivf_sync_from_tail(spark, table, idx, n_cells=4)
+    commit_append(vecs.filter(F.col("vec_id").between(40, 49)).coalesce(1), table)
+    group = f"ivf-delta-sync-{tmp_path.name}"
+    sc.setJobGroup(group, "one IVF delta sync", False)
+    try:
+        ivf_sync_from_tail(spark, table, idx, n_cells=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    jobs = sorted(st.getJobIdsForGroup(group))
+    stages = {
+        j: [st.getStageInfo(s).name for s in st.getJobInfo(j).stageIds]
+        for j in jobs
+    }
+    inference = [
+        j for j, names in stages.items()
+        if names and all(n.startswith("parquet at ") for n in names)
+    ]
+    assert jobs and not inference, (len(jobs), stages)
+    assert sorted(n for n, _c in _ivf_store_rows(spark, idx)) == list(range(50))
+
+
 def test_ivf_tail_sync_replays_a_lost_applied_record(emb, tmp_path):
     """A crash between the store write and the applied-version record
     costs only a replay: with the record deleted, the next sync re-reads
@@ -1086,7 +1123,6 @@ def test_filtered_widening_levels_match_cell_counts(emb, tmp_path):
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
-    from crocus_spark.operators.filtered_ann import _pairs_df  # noqa: F401
     from crocus_spark.operators.similarity import (
         _centroid_df,
         _norm_vec,

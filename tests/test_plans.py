@@ -372,7 +372,7 @@ def test_neardup_cosine_broadcasts_bounded_probe(spark, registry):
     against."""
     plan = _plan(registry["neardup_embedding_cosine"].fn(spark, SF_SMOKE))
     # one Arrow scorer pass over the corpus, no pair-row join before it
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan
     # the corpus scan reads only (id, vector): column pruning intact
@@ -1025,6 +1025,40 @@ def _doubled_python_udfs(plan: str) -> dict[str, int]:
             if sig:
                 calls[sig] = calls.get(sig, 0) + 1
     return {sig: n for sig, n in calls.items() if n > 1}
+
+
+def test_vector_queries_cross_the_python_boundary_as_arrow(
+    registry, registry_plans
+):
+    """The queries that run the vector operators (similarity, hnsw,
+    linalg, the k-means round) hand vector columns to Python as Arrow
+    batches decoded by operators/vectors.py: their plans hold no
+    pandas stage — no MapInPandas, no FlatMapGroupsInPandas and no
+    scalar pandas UDF (ArrowEvalPython with eval type 200; an
+    ``arrow_udf`` prints 250)."""
+    names = [
+        n for n in registry_plans
+        if n.startswith(("ann_", "dq_ann_"))
+        or n in (
+            "neardup_embedding_cosine",
+            "ml_kmeans_iterations",
+            "embedding_second_moment",
+        )
+    ]
+    assert len(names) > 20, names
+    pandas_node = _re.compile(
+        r"MapInPandas|FlatMapGroupsInPandas|ArrowEvalPython .*, 200\s*$"
+    )
+    offenders = {
+        n: hits
+        for n in names
+        if (hits := [
+            line.strip()[:120]
+            for line in registry_plans[n].splitlines()
+            if pandas_node.search(line)
+        ])
+    }
+    assert not offenders, offenders
 
 
 def test_registry_wide_no_doubled_python_udf(registry, registry_plans):
