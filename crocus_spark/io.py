@@ -427,10 +427,6 @@ def local_df(spark: SparkSession, rows, schema=None) -> DataFrame:
     return spark.createDataFrame(rows, schema)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view for the SQL surface."""
     for t in TABLES:
@@ -440,27 +436,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 # ---------------------------------------------------------------------------
 # Crocus-compatible products/holdings IO (reference data model, SURVEY.md §1)
 # ---------------------------------------------------------------------------
-
-# Superset (reconciled) products schema: union of the two providers' divergent
-# record shapes (`output_examples/ishares.json` vs `vanguard.json`), every
-# provider-specific field nullable — unionByName(allowMissingColumns) target.
-PRODUCTS_SCHEMA = T.StructType(
-    [
-        T.StructField("isin", T.StringType(), False),
-        T.StructField("name", T.StringType()),
-        T.StructField("ticker", T.StringType()),        # Vanguard only
-        T.StructField("fund_type", T.StringType()),     # Vanguard only (ishares.py:151 TODO)
-        T.StructField("currency", T.StringType()),
-        T.StructField("ter", T.StringType()),           # raw locale string, e.g. "0,22%"
-        T.StructField("price", T.StringType()),         # raw, e.g. "USD 632,42" / "144,12 USD"
-        T.StructField("date", T.StringType()),          # raw, "28 feb 2025" / "21/02/25"
-        T.StructField("factsheet", T.StringType()),
-        T.StructField("kid", T.StringType()),
-        T.StructField("product_page", T.StringType()),
-        T.StructField("holdings_file", T.StringType()),  # iShares only
-        T.StructField("provider", T.StringType()),
-    ]
-)
 
 # Holdings fact table (the files the reference downloads but never parses —
 # `ishares.py:175-187`; shape per FIXTURES.md §B3).
@@ -477,25 +452,6 @@ HOLDINGS_SCHEMA = T.StructType(
         T.StructField("shares", T.DoubleType()),
     ]
 )
-
-
-def read_products_json(spark: SparkSession, path: str) -> DataFrame:
-    """products.json source (reference `_read_products_json`, base_scraper.py:172-178).
-
-    The reference stores a dict keyed by ISIN; the engine's JSON layout is one
-    record per line with an explicit `isin` field (JSONL — splittable, unlike
-    a single pretty-printed object, which cannot be parallel-read at scale).
-    """
-    return spark.read.schema(PRODUCTS_SCHEMA).json(path)
-
-
-def write_products_json(df: DataFrame, path: str) -> None:
-    """products.json sink (reference `_write_products_json`, base_scraper.py:165-170).
-
-    coalesce(1) mirrors the reference's single-file output for small catalogs;
-    large tables should use `write_snapshot` instead.
-    """
-    df.coalesce(1).write.mode("overwrite").json(path)
 
 
 def read_holdings_csv(spark: SparkSession, path: str) -> DataFrame:
@@ -527,11 +483,3 @@ def write_snapshot(df: DataFrame, base: str, fmt: str = "parquet") -> None:
 
 def read_snapshot(spark: SparkSession, base: str, fmt: str = "parquet") -> DataFrame:
     return spark.read.format(fmt).load(base)
-
-
-def read_binary_docs(spark: SparkSession, path: str, glob: str = "*.pdf") -> DataFrame:
-    """Multimodal/binary source for factsheet/kid-style documents
-    (`ishares.json:9-10`): path, modificationTime, length, content(binary)."""
-    return (
-        spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
-    )

@@ -54,26 +54,9 @@ import shutil
 from pyspark.sql import functions as F
 
 from crocus_spark.operators import cell_store
+from crocus_spark.session import intermediates
 
 _APPLIED = "_applied.json"
-
-
-def net_effects(batch_df, id_col: str, vec_col: str):
-    """Per-key NET effect of a change batch — the latest (_op, vec) by
-    ``_version`` per id (an insert after a tombstone survives; anything
-    before one is absorbed) — materialized ONCE via an eager
-    ``localCheckpoint``. Every downstream action would otherwise re-scan
-    the feed and re-run this aggregate: the bootstrap consumes it
-    two-to-three times (model fit(s) + store build) and the upsert paths
-    three-to-four (cell discovery, semi-join, merge write). The
-    checkpoint is batch-sized (per-key net effects), paid once, and the
-    caller releases it (``cell_store.release``) when the batch is
-    applied."""
-    return (
-        batch_df.groupBy(id_col)
-        .agg(F.max_by(F.struct("_op", vec_col), "_version").alias("s"))
-        .localCheckpoint(eager=True)
-    )
 
 
 _REWRITE_MARKERS = (
@@ -110,8 +93,16 @@ def run_tail_sync(
         )
 
     def apply(changes) -> None:
-        last = net_effects(changes, id_col, vec_col)
-        try:
+        # per-key NET effect: the latest (_op, vec) by _version per id (an
+        # insert after a tombstone survives; anything before one is
+        # absorbed), materialized ONCE — the bootstrap reads it two to
+        # three times (model fit(s) + store build), the upsert three to
+        # four (cell discovery, semi-join, merge write). Batch-sized, and
+        # freed once the batch is applied.
+        with intermediates() as own:
+            last = own.checkpoint(changes.groupBy(id_col).agg(
+                F.max_by(F.struct("_op", vec_col), "_version").alias("s")
+            ))
             ups = last.filter(F.col("s._op") == "insert").select(
                 F.col(id_col), F.col(f"s.{vec_col}").alias(vec_col)
             )
@@ -119,8 +110,6 @@ def run_tail_sync(
                 upsert(ups, last.filter(F.col("s._op") != "insert").select(id_col))
             else:
                 bootstrap(ups)
-        finally:
-            cell_store.release(last)
 
     def record(next_version: int) -> None:
         cell_store.save_json(index_path, _APPLIED, {"next_version": next_version})

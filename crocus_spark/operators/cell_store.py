@@ -54,6 +54,8 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from crocus_spark.session import intermediates
+
 MODEL = "_model.json"
 PQ_MODEL = "_pq_model.json"
 GRAPHS = "_graphs"
@@ -72,14 +74,6 @@ def save_json(dirpath: str, name: str, body) -> None:
 def load_json(dirpath: str, name: str):
     with open(os.path.join(dirpath, name)) as f:
         return json.load(f)
-
-
-def release(checkpointed: DataFrame) -> None:
-    """Drop the blocks behind an eager ``localCheckpoint`` now rather
-    than whenever the JVM collects the RDD: the checkpointed relation's
-    plan is a LogicalRDD over the persisted RDD. Call it on the frame
-    ``localCheckpoint`` returned, once nothing reads it any more."""
-    checkpointed._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def build(encoded: DataFrame, path: str, models=(), part: str = "cell") -> None:
@@ -112,8 +106,8 @@ def upsert(
     # churn-sized; materialized once — it feeds cell discovery, the
     # merge anti-join probe and the union, and the encode would
     # otherwise re-run per action
-    up = encoded.localCheckpoint(eager=True)
-    try:
+    with intermediates() as own:
+        up = own.checkpoint(encoded)
         dels = delete_ids.select(F.col(id_col).alias(key)).distinct()
         # the store holds what this encode writes under the same frozen
         # model: read it with that schema, not with an inference job
@@ -156,5 +150,3 @@ def upsert(
         if rewritten is not None:
             rewritten([c for c in affected if c not in emptied], emptied)
         return affected
-    finally:
-        release(up)

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from crocus_spark.session import intermediates, materialize
+
 
 def normalize_text(c):
     """Canonical text form for hashing: lowercase, collapse whitespace."""
@@ -186,64 +188,62 @@ def ngram_jaccard_pairs(
     keeps the lineage, so AQE still sees runtime sizes and auto-broadcasts
     the verify joins when the corpus is small. The returned pair relation
     is eagerly checkpointed: it is dup-pairs-sized (tiny next to the
-    corpus at any scale), and materializing it is what makes the
-    unpersist() safe before returning."""
+    corpus at any scale), and materializing it is what lets the token
+    sets go when the call returns."""
     from crocus_spark.io import _planned_scan_partitions
 
-    sets = _token_sets(df, text_col, id_col, block_col).persist()
-    plen = (
-        F.size("toks_h") - F.ceil(F.lit(threshold) * F.size("toks_h")) + F.lit(1)
-    ).cast("int")
-    prefix = sets.select(
-        "id",
-        "blk",
-        F.size("toks_h").alias("sz"),
-        F.posexplode(F.slice("toks_h", 1, plen)).alias("pos", "tok"),
-    )
-    a, b = prefix.alias("a"), prefix.alias("b")
-    min_overlap = F.ceil(
-        F.lit(threshold / (1.0 + threshold)) * (F.col("a.sz") + F.col("b.sz"))
-    )
-    overlap_ubound = F.least(
-        F.col("a.sz") - F.col("a.pos"), F.col("b.sz") - F.col("b.pos")
-    )
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.tok") == F.col("b.tok"))
-            & (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.id") < F.col("b.id"))
-            & (F.col("b.sz") >= F.ceil(F.lit(threshold) * F.col("a.sz")))
-            & (F.col("a.sz") >= F.ceil(F.lit(threshold) * F.col("b.sz")))
-            & (overlap_ubound >= min_overlap),
+    with intermediates() as own:
+        sets = own.persist(_token_sets(df, text_col, id_col, block_col))
+        plen = (
+            F.size("toks_h") - F.ceil(F.lit(threshold) * F.size("toks_h")) + F.lit(1)
+        ).cast("int")
+        prefix = sets.select(
+            "id",
+            "blk",
+            F.size("toks_h").alias("sz"),
+            F.posexplode(F.slice("toks_h", 1, plen)).alias("pos", "tok"),
         )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    # Explicit-width exchange between candidate generation and the verify
-    # joins: AQE sizes post-shuffle partitions by BYTES, and the distinct
-    # candidate relation is 16 bytes/row — it coalesces to one partition
-    # long before the per-pair array_intersect cost is paid, so the whole
-    # verify stage ran as a single 1.5 s task at sf0.1 (the r4 "expansion
-    # invisible to the size estimate" class). An explicit-N keyed
-    # repartition is exempt from coalescing; width tracks the input scan
-    # (spread's metadata rule) so a production-sized candidate set still
-    # fans out past the core count, and the verify's trailing
-    # (id_a, id_b) aggregate reuses this partitioning — no extra
-    # exchange downstream.
-    nw = max(
-        sets.sparkSession.sparkContext.defaultParallelism,
-        _planned_scan_partitions(df, df.sparkSession) or 0,
-    )
-    candidates = candidates.repartition(nw, "id_a", "id_b")
-    out = (
-        _verify_jaccard(candidates, sets)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "n_inter", "sz_a", "sz_b", "jaccard")
-        .localCheckpoint(eager=True)
-    )
-    sets.unpersist()
-    return out
+        a, b = prefix.alias("a"), prefix.alias("b")
+        min_overlap = F.ceil(
+            F.lit(threshold / (1.0 + threshold)) * (F.col("a.sz") + F.col("b.sz"))
+        )
+        overlap_ubound = F.least(
+            F.col("a.sz") - F.col("a.pos"), F.col("b.sz") - F.col("b.pos")
+        )
+        candidates = (
+            a.join(
+                b,
+                (F.col("a.tok") == F.col("b.tok"))
+                & (F.col("a.blk") == F.col("b.blk"))
+                & (F.col("a.id") < F.col("b.id"))
+                & (F.col("b.sz") >= F.ceil(F.lit(threshold) * F.col("a.sz")))
+                & (F.col("a.sz") >= F.ceil(F.lit(threshold) * F.col("b.sz")))
+                & (overlap_ubound >= min_overlap),
+            )
+            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+            .distinct()
+        )
+        # Explicit-width exchange between candidate generation and the verify
+        # joins: AQE sizes post-shuffle partitions by BYTES, and the distinct
+        # candidate relation is 16 bytes/row — it coalesces to one partition
+        # long before the per-pair array_intersect cost is paid, so the whole
+        # verify stage ran as a single 1.5 s task at sf0.1 (the r4 "expansion
+        # invisible to the size estimate" class). An explicit-N keyed
+        # repartition is exempt from coalescing; width tracks the input scan
+        # (spread's metadata rule) so a production-sized candidate set still
+        # fans out past the core count, and the verify's trailing
+        # (id_a, id_b) aggregate reuses this partitioning — no extra
+        # exchange downstream.
+        nw = max(
+            sets.sparkSession.sparkContext.defaultParallelism,
+            _planned_scan_partitions(df, df.sparkSession) or 0,
+        )
+        candidates = candidates.repartition(nw, "id_a", "id_b")
+        return materialize(
+            _verify_jaccard(candidates, sets)
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", "n_inter", "sz_a", "sz_b", "jaccard")
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -349,25 +349,27 @@ def minhash_dedup_survivors(
     Trade-off: checkpoint blocks are unrecoverable on executor loss
     (persist kept lineage for recompute) — acceptable for a bounded
     iterative loop, the same call the repo's other iterative operators
-    make; blocks are freed by the ContextCleaner when the result is
-    garbage collected. The final labels are eagerly local-checkpointed
-    as before, truncating the iteration lineage for consumers.
+    make; the bucket blocks are freed when the call returns. The final
+    labels are eagerly local-checkpointed as before, truncating the
+    iteration lineage for consumers; the returned relation owns them.
     """
-    buckets = minhash_band_buckets(df, text_col, id_col, n_perm, bands, seed)
-    buckets = buckets.localCheckpoint(eager=True)
-    labels = buckets.groupBy("id").agg(F.min("id").alias("lbl"))  # lbl = id
-    for _ in range(iterations):
-        bucket_min = (
-            buckets.join(labels, "id")
-            .groupBy("band", "sig")
-            .agg(F.min("lbl").alias("bucket_lbl"))
+    with intermediates() as own:
+        buckets = own.checkpoint(
+            minhash_band_buckets(df, text_col, id_col, n_perm, bands, seed)
         )
-        labels = (
-            buckets.join(bucket_min, ["band", "sig"])
-            .groupBy("id")
-            .agg(F.min("bucket_lbl").alias("lbl"))
-        )
-    labels = labels.localCheckpoint(eager=True)
+        labels = buckets.groupBy("id").agg(F.min("id").alias("lbl"))  # lbl = id
+        for _ in range(iterations):
+            bucket_min = (
+                buckets.join(labels, "id")
+                .groupBy("band", "sig")
+                .agg(F.min("lbl").alias("bucket_lbl"))
+            )
+            labels = (
+                buckets.join(bucket_min, ["band", "sig"])
+                .groupBy("id")
+                .agg(F.min("bucket_lbl").alias("lbl"))
+            )
+        labels = materialize(labels)
     return labels.select(
         F.col("id"),
         F.col("lbl").alias("cluster_id"),
@@ -413,50 +415,46 @@ def minhash_lsh_pairs(
     # distinct and the exact intersections (8.8M -> 3.5M candidates at
     # sf0.1/0.9 — 61% of the verify work gone). The 1e-6 slack covers
     # the verifier's round(j, 6), which can round a just-below-t pair up.
-    nt = df.select(
-        F.col(id_col).alias("id"),
-        F.size(
-            F.array_distinct(F.split(normalize_text(F.col(text_col)), " "))
-        ).alias("n"),
-    )
-    buckets = (
-        minhash_band_buckets(df, text_col, id_col, n_perm, bands, seed)
-        .join(nt, "id")
-        .persist()
-    )
-    tl = F.lit(float(verify_threshold) - 1e-6)
-    a, b_ = buckets.alias("a"), buckets.alias("b")
-    candidates = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.id") < F.col("b.id"))
-            & (F.col("a.n") * tl <= F.col("b.n") + F.lit(1e-6))
-            & (F.col("b.n") * tl <= F.col("a.n") + F.lit(1e-6)),
+    with intermediates() as own:
+        nt = df.select(
+            F.col(id_col).alias("id"),
+            F.size(
+                F.array_distinct(F.split(normalize_text(F.col(text_col)), " "))
+            ).alias("n"),
         )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    # explicit-width exchange before the verify joins — same AQE
-    # bytes-vs-compute rationale as ngram_jaccard_pairs above
-    from crocus_spark.io import _planned_scan_partitions
+        buckets = own.persist(
+            minhash_band_buckets(df, text_col, id_col, n_perm, bands, seed)
+            .join(nt, "id")
+        )
+        tl = F.lit(float(verify_threshold) - 1e-6)
+        a, b_ = buckets.alias("a"), buckets.alias("b")
+        candidates = (
+            a.join(
+                b_,
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.sig") == F.col("b.sig"))
+                & (F.col("a.id") < F.col("b.id"))
+                & (F.col("a.n") * tl <= F.col("b.n") + F.lit(1e-6))
+                & (F.col("b.n") * tl <= F.col("a.n") + F.lit(1e-6)),
+            )
+            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+            .distinct()
+        )
+        # explicit-width exchange before the verify joins — same AQE
+        # bytes-vs-compute rationale as ngram_jaccard_pairs above
+        from crocus_spark.io import _planned_scan_partitions
 
-    nw = max(
-        df.sparkSession.sparkContext.defaultParallelism,
-        _planned_scan_partitions(df, df.sparkSession) or 0,
-    )
-    candidates = candidates.repartition(nw, "id_a", "id_b")
-    sets = _token_sets(df, text_col, id_col, block_col=None).persist()
-    out = (
-        _verify_jaccard(candidates, sets)
-        .filter(F.col("jaccard") >= verify_threshold)
-        .select("id_a", "id_b", "jaccard")
-        .localCheckpoint(eager=True)
-    )
-    buckets.unpersist()
-    sets.unpersist()
-    return out
+        nw = max(
+            df.sparkSession.sparkContext.defaultParallelism,
+            _planned_scan_partitions(df, df.sparkSession) or 0,
+        )
+        candidates = candidates.repartition(nw, "id_a", "id_b")
+        sets = own.persist(_token_sets(df, text_col, id_col, block_col=None))
+        return materialize(
+            _verify_jaccard(candidates, sets)
+            .filter(F.col("jaccard") >= verify_threshold)
+            .select("id_a", "id_b", "jaccard")
+        )
 
 
 def portable_hash60(c: Column) -> Column:

@@ -47,6 +47,7 @@ from crocus_spark.operators.similarity import (
     ivfpq_model_load,
     ivfpq_topk_at_rest,
 )
+from crocus_spark.session import materialize
 
 __all__ = [
     "ivf_filtered_build",
@@ -149,7 +150,7 @@ def ivf_filtered_topk(
     The probe order is collected once (n_queries × n_cells ints —
     probe batches are bounded in serving, same justification as
     ``ivf_topk_at_rest``'s cell-literal collect); each round's top-k is
-    ``localCheckpoint``ed so the union never replays earlier scans.
+    materialized so the union never replays earlier scans.
     ``with_level=True`` appends the probe count each query was
     satisfied at — the monitor's widening diagnostic."""
     model = model if model is not None else ivf_model_load(path)
@@ -203,7 +204,7 @@ def ivf_filtered_topk(
             # checkpoint erases it (tests assert PartitionFilters +
             # PushedFilters on the store scan)
             _plan_hook(topk)
-        topk = topk.localCheckpoint()  # bounded: ≤ k rows per query
+        topk = materialize(topk, eager=False)  # ≤ k rows per query
         if lvl >= n_cells:
             parts.append(topk.drop("_n_cand"))
             break
@@ -301,5 +302,5 @@ def ivfpq_filtered_topk(
         )
         if with_level:
             res = res.withColumn("probe_level", F.lit(lvl))
-        parts.append(res.localCheckpoint())
+        parts.append(materialize(res, eager=False))
     return _union_or_empty(spark, parts, with_level)

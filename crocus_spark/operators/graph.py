@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
 
-from crocus_spark.session import conf_overrides
+from crocus_spark.session import conf_overrides, intermediates, materialize
 
 
 def connected_components(
@@ -50,21 +50,26 @@ def connected_components(
     distinct shuffle; propagation is min-idempotent, so a violated
     promise costs only wasted work, never a wrong label.
     """
+    with intermediates() as own:
+        return _components(own, edges, src, dst, max_iter, edges_distinct)
+
+
+def _components(own, edges, src, dst, max_iter, edges_distinct):
+    """``connected_components``' body; ``own`` holds every round."""
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     und = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).filter(F.col("u") != F.col("v"))
     if not edges_distinct:
         und = und.distinct()
-    und = und.persist()
+    und = own.persist(und)
     # round 0 for free: initialize every node at its closed-neighborhood
     # minimum (min of itself and its neighbors) — one propagation round
     # folded into the init aggregate, so star/clique-ish graphs start
     # one hop closer to the fixpoint
-    labels = (
+    labels = own.checkpoint(
         und.groupBy(F.col("u").alias("node"))
         .agg(F.least(F.first("u"), F.min("v")).alias("comp"))
-        .localCheckpoint(eager=True)
     )
     # Integral ids only: the loop's convergence checksum sums labels
     # cast to decimal(38,0), which is exact for byte/short/int/long but
@@ -93,13 +98,12 @@ def connected_components(
         # broadcasts) + one distinct, all linear in E.
         lu = labels.select(F.col("node").alias("u"), F.col("comp").alias("cu"))
         lv = labels.select(F.col("node").alias("v"), F.col("comp").alias("cv"))
-        contracted = (
+        contracted = own.persist(
             und.join(lu, "u")
             .join(lv, "v")
             .filter(F.col("cu") != F.col("cv"))
             .select(F.col("cu").alias("u"), F.col("cv").alias("v"))
             .distinct()
-            .persist()
         )
         # Phase 2 — min-label loop over the CONTRACTED graph only. Fold
         # each node's OWN label into the neighborhood min by appending a
@@ -128,21 +132,21 @@ def connected_components(
         with conf_overrides(
             sess, {"spark.sql.shuffle.partitions": str(loop_width)}
         ):
-            clabels = (
+            clabels = own.checkpoint(
                 contracted.groupBy(F.col("u").alias("node"))
                 .agg(F.least(F.first("u"), F.min("v")).alias("comp"))
-                .localCheckpoint(eager=True)
             )
-            selfed = contracted.unionByName(
+            seed = clabels
+            selfed = own.persist(contracted.unionByName(
                 clabels.select(
                     F.col("node").alias("u"), F.col("node").alias("v")
                 )
-            ).persist()
+            ))
             prev_sum = clabels.agg(
                 F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
             ).first()["s"]
             for _ in range(max_iter):
-                stepped = (
+                stepped = own.persist(
                     selfed.join(
                         clabels.select(
                             F.col("node").alias("v"),
@@ -152,7 +156,6 @@ def connected_components(
                     )
                     .groupBy(F.col("u").alias("node"))
                     .agg(F.min("vcomp").alias("comp"))
-                    .persist()
                 )
                 # single pointer jump: comp → comp(comp). Measured on both
                 # fixture graphs (sf0.01/sf0.1): one jump cuts rounds ~2×
@@ -161,7 +164,7 @@ def connected_components(
                 # inside the checkpoint costs far more than it saves (3
                 # hops regressed the sf0.1 graph 5 s → 60 s).
                 a, b = stepped.alias("a"), stepped.alias("b")
-                jumped = (
+                jumped = own.checkpoint(
                     a.join(b, F.col("a.comp") == F.col("b.node"), "left")
                     .select(
                         F.col("a.node").alias("node"),
@@ -170,12 +173,13 @@ def connected_components(
                             F.coalesce(F.col("b.comp"), F.col("a.comp")),
                         ).alias("comp"),
                     )
-                    .localCheckpoint(eager=True)
                 )
                 cur_sum = jumped.agg(
                     F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
                 ).first()["s"]
-                stepped.unpersist()
+                own.release(stepped)
+                if clabels is not seed:  # selfed's lineage reads the seed
+                    own.release(clabels)
                 clabels = jumped
                 if cur_sum == prev_sum:
                     # Map every original node through its contracted rep:
@@ -183,7 +187,7 @@ def connected_components(
                     # nodes whose rep had no external edge (star collapsed
                     # whole). The rep relation is component-count-sized —
                     # AQE broadcasts it.
-                    out = (
+                    return materialize(
                         labels.join(
                             clabels.select(
                                 F.col("node").alias("comp"),
@@ -198,22 +202,15 @@ def connected_components(
                                 "comp"
                             ),
                         )
-                        .localCheckpoint(eager=True)
                     )
-                    selfed.unpersist()
-                    contracted.unpersist()
-                    und.unpersist()
-                    return out
                 prev_sum = cur_sum
-            selfed.unpersist()
-            contracted.unpersist()
-            und.unpersist()
             raise RuntimeError(
                 f"connected_components did not converge in {max_iter} iterations"
             )
     # Generic path (orderable but non-summable ids, e.g. strings): carry
     # the pre-round label as `old` through the round so convergence is a
     # changed-rows check on the checkpointed output.
+    held = labels
     for _ in range(max_iter):
         # closed-neighborhood min: comp'(u) = min(comp(u), min_{v∈N(u)} comp(v))
         nbr = (
@@ -226,7 +223,7 @@ def connected_components(
             .groupBy("u")
             .agg(F.min("vcomp").alias("nbr_comp"))
         )
-        stepped = (
+        stepped = own.persist(
             labels.join(nbr, labels["node"] == nbr["u"], "left")
             .select(
                 labels["node"],
@@ -235,7 +232,7 @@ def connected_components(
                     labels["comp"], F.coalesce(nbr["nbr_comp"], labels["comp"])
                 ).alias("comp"),
             )
-        ).persist()
+        )
         a, b = stepped.alias("a"), stepped.alias("b")
         hop1 = a.join(
             b, F.col("a.comp") == F.col("b.node"), "left"
@@ -247,18 +244,17 @@ def connected_components(
                 F.coalesce(F.col("b.comp"), F.col("a.comp")),
             ).alias("comp"),
         )
-        jumped = hop1.select(
+        jumped = own.checkpoint(hop1.select(
             "node",
             "comp",
             (F.col("comp") != F.col("old")).alias("_chg"),
-        ).localCheckpoint(eager=True)
+        ))
         changed = jumped.filter(F.col("_chg")).limit(1).count()
-        stepped.unpersist()
-        labels = jumped.drop("_chg")
+        own.release(stepped)
+        own.release(held)
+        held, labels = jumped, jumped.drop("_chg")
         if changed == 0:
-            und.unpersist()
-            return labels
-    und.unpersist()
+            return own.keep(jumped).drop("_chg")
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} iterations"
     )
@@ -284,33 +280,31 @@ def k_core(
     oracle sound (equality needs convergence ≤ the unroll depth, and
     non-convergence is an ERROR, not a wrong answer)."""
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    und = (
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .persist()
-    )
-    alive = und.select("u").distinct().localCheckpoint(eager=True)
-    n_alive = alive.count()
-    for _ in range(max_iter):
-        deg = (
-            und.join(alive, "u")
-            .join(alive.select(F.col("u").alias("v")), "v")
-            .groupBy("u")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        nxt = (
-            deg.filter(F.col("deg") >= k)
-            .select("u", "deg")
-            .localCheckpoint(eager=True)
-        )
-        n_next = nxt.count()
-        if n_next == n_alive:
-            und.unpersist()
-            return nxt.select(
-                F.col("u").alias("node"), F.col("deg").alias("core_degree")
+    with intermediates() as own:
+        und = own.persist(
+            e.unionByName(
+                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
             )
-        alive = nxt.select("u").localCheckpoint(eager=True)
-        n_alive = n_next
-    und.unpersist()
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+        )
+        alive = own.checkpoint(und.select("u").distinct())
+        n_alive = alive.count()
+        for _ in range(max_iter):
+            deg = (
+                und.join(alive, "u")
+                .join(alive.select(F.col("u").alias("v")), "v")
+                .groupBy("u")
+                .agg(F.count(F.lit(1)).alias("deg"))
+            )
+            nxt = own.checkpoint(deg.filter(F.col("deg") >= k).select("u", "deg"))
+            n_next = nxt.count()
+            if n_next == n_alive:
+                return own.keep(nxt).select(
+                    F.col("u").alias("node"), F.col("deg").alias("core_degree")
+                )
+            own.release(alive)
+            alive = own.checkpoint(nxt.select("u"))
+            own.release(nxt)
+            n_alive = n_next
     raise RuntimeError(f"k_core did not converge in {max_iter} iterations")

@@ -408,7 +408,7 @@ def hnsw_build_store(
     cell_store.build(sharded, path, part="shard")
     gdir = os.path.join(path, cell_store.GRAPHS)
     stats = _build_shard_graphs(
-        sharded, gdir, id_col, vec_col, M, ef_construction
+        sharded, gdir, id_col, vec_col, M, ef_construction, n_shards
     )
     assert len(stats) <= n_shards
     with open(os.path.join(gdir, "_SUCCESS"), "w") as f:
@@ -417,14 +417,16 @@ def hnsw_build_store(
 
 def _build_shard_graphs(
     sharded, gdir: str, id_col: str, vec_col: str,
-    M: int, ef_construction: int,
+    M: int, ef_construction: int, n_shards: int,
 ):
     """Build + atomically persist one graph JSON per shard present in
     ``sharded`` (columns id, vec, shard) — ONE grouped-map task per
     shard, sorted-id row order so the graph is a pure function of shard
     content. Shards absent from the input keep their existing files
-    byte-for-byte (the property incremental maintenance relies on).
-    Returns the bounded per-shard build stats."""
+    byte-for-byte (the property incremental maintenance relies on). The
+    explicit-width exchange keeps AQE from coalescing the shards into
+    one serial task; shards whose ids hash to the same partition still
+    share one. Returns the bounded per-shard build stats."""
     os.makedirs(gdir, exist_ok=True)
 
     def build(t):
@@ -439,7 +441,8 @@ def _build_shard_graphs(
         return pa.table({"shard": pa.array([shard], pa.int32()), "n": [len(ids)]})
 
     return (
-        sharded.groupBy("shard")
+        sharded.repartition(n_shards, "shard")
+        .groupBy("shard")
         .applyInArrow(build, "shard int, n long")
         .collect()  # ≤ n_shards rows — bounded
     )
@@ -475,7 +478,10 @@ def _serve_shards(spark, queries, path: str, k: int, ef: int,
             allowed = t["_match"].fill_null(False).to_numpy()
         return _search_shard(graph, mat, q_ids, q_mat, k, ef, allowed)
 
-    return _merge_topk(back.groupBy("shard").applyInArrow(serve, HNSW_SCHEMA), k)
+    # explicit width (one per graph), as in _build_shard_graphs
+    n_shards = max(1, sum(f.startswith("shard-") for f in os.listdir(gdir)))
+    served = back.repartition(n_shards, "shard").groupBy("shard")
+    return _merge_topk(served.applyInArrow(serve, HNSW_SCHEMA), k)
 
 
 def hnsw_topk_at_rest(
@@ -557,7 +563,7 @@ def hnsw_upsert_store(
                 F.col("shard").isin(survivors)
             )
             _build_shard_graphs(
-                fresh, gdir, id_col, vec_col, M, ef_construction
+                fresh, gdir, id_col, vec_col, M, ef_construction, n_shards
             )
 
     return cell_store.upsert(

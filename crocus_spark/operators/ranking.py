@@ -33,6 +33,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from crocus_spark.session import materialize
+
 
 def with_range_shard(
     df: DataFrame, key: str, n_shards: int
@@ -48,17 +50,16 @@ def with_range_shard(
     Boundary placement only load-balances — it can never change a
     consumer's result, which is what makes the sampled boundaries safe.
 
-    The sharded relation is eagerly localCheckpoint()ed: every consumer
+    The sharded relation is eagerly materialized: every consumer
     reads ``_shard`` at least twice (shard totals + per-shard ranks), and
     the range partitioner draws a fresh boundary sample per evaluation —
     two lazy evaluations could disagree on shard membership, making
     offsets and ranks inconsistent (observed as off-by-thousands global
     ranks). One materialization freezes the boundaries AND pays the
     upstream computation once."""
-    return (
+    return materialize(
         df.repartitionByRange(n_shards, F.col(key))
         .withColumn("_shard", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
 
 

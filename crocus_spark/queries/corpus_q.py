@@ -16,6 +16,7 @@ from crocus_spark.io import load, spread
 from crocus_spark.operators import corpus as C
 from crocus_spark.operators import text as X
 from crocus_spark.queries import register
+from crocus_spark.session import materialize
 
 _EN_MARKER_SQL = r"\b(" + "|".join(X.LANG_MARKERS["en"]) + r")\b"
 
@@ -768,11 +769,10 @@ def corpus_bpe_merge_training(spark, sf_dir):
             .groupBy("a", "b")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        top1 = (
+        top1 = materialize(  # 1 row — the round's artifact
             pairs.orderBy(F.col("cnt").desc(), "a", "b")
             .limit(1)
             .select(F.lit(r).alias("merge_round"), "a", "b", "cnt")
-            .localCheckpoint(eager=True)  # 1 row — the round's artifact
         )
         history = top1 if history is None else history.unionAll(top1)
         docs = docs.crossJoin(F.broadcast(top1)).select(
@@ -838,10 +838,8 @@ def corpus_bpe_tokenize_apply(spark, sf_dir):
             .groupBy("a", "b")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        top1 = (
-            pairs.orderBy(F.col("cnt").desc(), "a", "b")
-            .limit(1)
-            .localCheckpoint(eager=True)
+        top1 = materialize(
+            pairs.orderBy(F.col("cnt").desc(), "a", "b").limit(1)
         )
         docs = docs.crossJoin(F.broadcast(top1)).select(
             "doc_id",

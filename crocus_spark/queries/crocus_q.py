@@ -23,6 +23,7 @@ from crocus_spark import normalize as N
 from crocus_spark.io import load, spread
 from crocus_spark.queries import register
 from crocus_spark.queries._det import dsum, dsum_sql
+from crocus_spark.session import materialize
 
 
 @register(
@@ -525,7 +526,7 @@ def holdings_overlap_confront(spark, sf_dir):
     # but not reliably (r11 driver: 0.718x + budget violation). `w` is
     # dimension-sized (nation x brand, ~625 rows), so the checkpoint is
     # cheap and the self-join plan has zero fact-side exchanges.
-    w = w.localCheckpoint(eager=True)
+    w = materialize(w)
     a = w.alias("a")
     b = w.alias("b")
     pairs = a.join(

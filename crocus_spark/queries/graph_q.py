@@ -19,6 +19,7 @@ from crocus_spark.operators import graph as G
 from crocus_spark.operators.graph import connected_components
 from crocus_spark.queries import _det as DET
 from crocus_spark.queries import register
+from crocus_spark.session import intermediates, materialize
 
 
 def _order_part_pairs(spark, sf_dir):
@@ -229,34 +230,30 @@ def graph_triangle_count(spark, sf_dir):
     endpoint so AQE can split skewed hub vertices. The edge list is
     reused three times from one cached build (single-fact-shuffle pair
     generation, _order_part_pairs), not recomputed."""
-    edges = (
-        _order_part_pairs(spark, sf_dir)
-        .groupBy(
-            F.col("src").alias("p1"),
-            F.col("dst").alias("p2"),
+    with intermediates() as own:
+        edges = own.persist(
+            _order_part_pairs(spark, sf_dir)
+            .groupBy(
+                F.col("src").alias("p1"),
+                F.col("dst").alias("p2"),
+            )
+            .agg(F.count(F.lit(1)).alias("m"))
+            .filter(F.col("m") >= 2)
+            .select("p1", "p2")
         )
-        .agg(F.count(F.lit(1)).alias("m"))
-        .filter(F.col("m") >= 2)
-        .select("p1", "p2")
-        .cache()
-    )
-    e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e2.p1") == F.col("e1.p2"))
-        .join(
-            e3,
-            (F.col("e3.p1") == F.col("e1.p1"))
-            & (F.col("e3.p2") == F.col("e2.p2")),
+        e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
+        tri = (
+            e1.join(e2, F.col("e2.p1") == F.col("e1.p2"))
+            .join(
+                e3,
+                (F.col("e3.p1") == F.col("e1.p1"))
+                & (F.col("e3.p2") == F.col("e2.p2")),
+            )
+            .agg(F.count(F.lit(1)).alias("n_triangles"))
         )
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-    )
-    n_edges = edges.agg(F.count(F.lit(1)).alias("n_edges"))
-    # materialize the 1-row result, then drop the edge cache — without
-    # this the cached blocks leak for the life of the session (a
-    # full-registry run accumulates them across every graph query).
-    out = tri.crossJoin(n_edges).localCheckpoint(eager=True)
-    edges.unpersist()
-    return out
+        n_edges = edges.agg(F.count(F.lit(1)).alias("n_edges"))
+        # the 1-row result, materialized so the scope can drop the edges
+        return materialize(tri.crossJoin(n_edges))
 
 
 def _pagerank_oracle(rounds: int) -> str:
@@ -319,7 +316,7 @@ def graph_pagerank(spark, sf_dir):
     the connected-components fixpoint. Spark shape: out-degrees computed
     once and joined per round; each round is ONE shuffle (groupBy dst)
     because contributions re-use the edge partitioning; ranks are
-    localCheckpoint()ed every round so the lineage (and its replay cost)
+    checkpointed every other round so the lineage (and its replay cost)
     stays O(1) instead of O(rounds) — the difference between 5 rounds and
     5! plan nodes at 100 TB. No dangling mass: every vertex of an
     undirected edge list has degree ≥ 1.
@@ -332,84 +329,80 @@ def graph_pagerank(spark, sf_dir):
     # Clique pairs via ONE fact shuffle (_order_part_pairs); the
     # trailing distinct dedups across orders — same relation as the
     # oracle's DISTINCT self-join.
-    half = _order_part_pairs(spark, sf_dir).distinct().persist()
-    edges = half.unionAll(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
-    n_v = deg.count()
-    # size the loop's partitioning to the MEASURED edge volume (half is
-    # already cached by the deg count, so this count is metadata-cheap):
-    # a 5-round loop at the session's full width is task-launch-bound
-    # when each task holds a few thousand edges (measured 6.4 s → 4.1 s
-    # at sf0.01); the session cap still applies as data grows, and on a
-    # real cluster the conf itself carries the scale.
-    n_shuffle = max(
-        8,
-        min(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            (2 * half.count()) // 60000 + 1,
-        ),
-    )
-    # deg is loop-INVARIANT: weight the edge list once (src, dst, deg)
-    # instead of re-joining deg inside every round — one join per round
-    # saved, and the persisted weighted edges are the only edge-sized
-    # state the loop touches. Pinning the persisted copy to hash(src)
-    # with the SAME partition count the round agg emits makes every
-    # round's rank join exchange-free on BOTH sides: the groupBy("dst")
-    # output renamed dst→src keeps its hash(dst)=hash(src) partitioning
-    # through the alias, so the only per-round shuffle left is the
-    # contribution agg itself.
-    wedges = (
-        edges.join(deg, "src")
-        .select("src", "dst", "deg")
-        .repartition(n_shuffle, "src")
-        .persist()
-    )
-    ranks = deg.select("src", F.lit(1.0 / n_v).alias("rank"))
-    for rnd in range(5):
-        contribs = (
-            wedges.join(ranks, "src")
-            .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("dst")
-            # decimal quantize-then-sum (_det.py): received mass is exact
-            # and order-independent, which is what lets an 8-round double
-            # fixpoint carry a bit-exact oracle
-            .agg(F.sum(F.col("c").cast("decimal(25,12)")).cast("double").alias("recv"))
+    with intermediates() as own:
+        half = own.persist(_order_part_pairs(spark, sf_dir).distinct())
+        edges = half.unionAll(
+            half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        # no node-relation join per round: the edge list is symmetrized
-        # and every vertex has degree ≥ 1, so every node appears as a
-        # dst and `contribs` already covers the FULL node set — renaming
-        # dst→src IS next round's rank vector (one whole node-sized
-        # shuffle join per round saved; at 100 TB that join was the
-        # second-largest per-round exchange after the contribution agg).
-        ranks = contribs.select(
-            F.col("dst").alias("src"),
-            (F.lit(0.15 / n_v) + 0.85 * F.col("recv")).alias("rank"),
+        deg = own.persist(
+            edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         )
-        # truncate lineage every OTHER round: a depth-2 plan replays one
-        # extra join on recompute (cheap) while halving the checkpoint
-        # materializations — rounds stay O(1) lineage either way.
-        if rnd % 2 == 1:
-            ranks = ranks.localCheckpoint(eager=False)
-    out = (
-        ranks.join(deg, "src")
-        .select(
-            F.col("src").alias("part"),
-            F.round("rank", 9).alias("rank"),
-            "deg",
+        n_v = deg.count()
+        # size the loop's partitioning to the MEASURED edge volume (half is
+        # already cached by the deg count, so this count is metadata-cheap):
+        # a 5-round loop at the session's full width is task-launch-bound
+        # when each task holds a few thousand edges (measured 6.4 s → 4.1 s
+        # at sf0.01); the session cap still applies as data grows, and on a
+        # real cluster the conf itself carries the scale.
+        n_shuffle = max(
+            8,
+            min(
+                int(spark.conf.get("spark.sql.shuffle.partitions")),
+                (2 * half.count()) // 60000 + 1,
+            ),
         )
-        .orderBy(F.col("rank").desc(), "part")
-        .limit(20)
-        # materialize the top-20 (model-sized), then release the edge
-        # cache — the returned frame must not keep lineage pinned to
-        # cached blocks that would otherwise leak for the session.
-        .localCheckpoint(eager=True)
-    )
-    wedges.unpersist()
-    deg.unpersist()
-    half.unpersist()
-    return out
+        # deg is loop-INVARIANT: weight the edge list once (src, dst, deg)
+        # instead of re-joining deg inside every round — one join per round
+        # saved, and the persisted weighted edges are the only edge-sized
+        # state the loop touches. Pinning the persisted copy to hash(src)
+        # with the SAME partition count the round agg emits makes every
+        # round's rank join exchange-free on BOTH sides: the groupBy("dst")
+        # output renamed dst→src keeps its hash(dst)=hash(src) partitioning
+        # through the alias, so the only per-round shuffle left is the
+        # contribution agg itself.
+        wedges = own.persist(
+            edges.join(deg, "src")
+            .select("src", "dst", "deg")
+            .repartition(n_shuffle, "src")
+        )
+        ranks = deg.select("src", F.lit(1.0 / n_v).alias("rank"))
+        for rnd in range(5):
+            contribs = (
+                wedges.join(ranks, "src")
+                .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
+                .groupBy("dst")
+                # decimal quantize-then-sum (_det.py): received mass is exact
+                # and order-independent, which is what lets an 8-round double
+                # fixpoint carry a bit-exact oracle
+                .agg(F.sum(F.col("c").cast("decimal(25,12)")).cast("double").alias("recv"))
+            )
+            # no node-relation join per round: the edge list is symmetrized
+            # and every vertex has degree ≥ 1, so every node appears as a
+            # dst and `contribs` already covers the FULL node set — renaming
+            # dst→src IS next round's rank vector (one whole node-sized
+            # shuffle join per round saved; at 100 TB that join was the
+            # second-largest per-round exchange after the contribution agg).
+            ranks = contribs.select(
+                F.col("dst").alias("src"),
+                (F.lit(0.15 / n_v) + 0.85 * F.col("recv")).alias("rank"),
+            )
+            # truncate lineage every OTHER round: a depth-2 plan replays one
+            # extra join on recompute (cheap) while halving the checkpoint
+            # materializations — rounds stay O(1) lineage either way.
+            if rnd % 2 == 1:
+                ranks = own.checkpoint(ranks, eager=False)
+        # materialize the top-20 (model-sized): the scope then drops the
+        # edge caches and the rank rounds, which nothing returned reads
+        return materialize(
+            ranks.join(deg, "src")
+            .select(
+                F.col("src").alias("part"),
+                F.round("rank", 9).alias("rank"),
+                "deg",
+            )
+            .orderBy(F.col("rank").desc(), "part")
+            .limit(20)
+        )
 
 
 _BFS_SQL = """
@@ -535,43 +528,41 @@ def graph_weighted_shortest_path(spark, sf_dir):
         .filter(F.col("m") >= 2)
         .select("src", "dst", (F.lit(1.0) / F.col("m")).alias("w"))
     )
-    wedges = half.unionAll(
-        half.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
-        )
-    ).persist()
-    verts = wedges.select(F.col("src").alias("v")).distinct()
-    s = verts.agg(F.min("v")).first()[0]  # one scalar: the source vertex
-    d = verts.select(
-        "v",
-        F.when(F.col("v") == s, F.lit(0.0)).otherwise(
-            F.lit(None).cast("double")
-        ).alias("dist"),
-    )
-    for _ in range(4):
-        relaxed = (
-            d.filter(F.col("dist").isNotNull())
-            .join(wedges, d.v == wedges.src)
-            .select(
-                F.col("dst").alias("v"), (F.col("dist") + F.col("w")).alias("dist")
+    with intermediates() as own:
+        wedges = own.persist(half.unionAll(
+            half.select(
+                F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
             )
+        ))
+        verts = wedges.select(F.col("src").alias("v")).distinct()
+        s = verts.agg(F.min("v")).first()[0]  # one scalar: the source vertex
+        d = verts.select(
+            "v",
+            F.when(F.col("v") == s, F.lit(0.0)).otherwise(
+                F.lit(None).cast("double")
+            ).alias("dist"),
         )
-        d = (
-            d.select("v", "dist")
-            .unionAll(relaxed)
-            .groupBy("v")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
+        for _ in range(4):
+            relaxed = (
+                d.filter(F.col("dist").isNotNull())
+                .join(wedges, d.v == wedges.src)
+                .select(
+                    F.col("dst").alias("v"), (F.col("dist") + F.col("w")).alias("dist")
+                )
+            )
+            d = own.checkpoint(
+                d.select("v", "dist")
+                .unionAll(relaxed)
+                .groupBy("v")
+                .agg(F.min("dist").alias("dist")),
+                eager=False,
+            )
+        return materialize(
+            d.filter(F.col("dist").isNotNull())
+            .orderBy("dist", "v")
+            .limit(100)
+            .select(F.col("v").alias("part"), "dist")
         )
-    out = (
-        d.filter(F.col("dist").isNotNull())
-        .orderBy("dist", "v")
-        .limit(100)
-        .select(F.col("v").alias("part"), "dist")
-        .localCheckpoint(eager=True)
-    )
-    wedges.unpersist()
-    return out
 
 
 @register(

@@ -19,7 +19,7 @@ from crocus_spark.io import load
 from crocus_spark.queries import register
 from crocus_spark.queries._det import dsum, dsum_sql
 from crocus_spark.queries.sources_q import _scratch
-from crocus_spark.session import conf_overrides
+from crocus_spark.session import conf_overrides, materialize
 
 
 @register(
@@ -115,5 +115,5 @@ def join_runtime_bloom_filter(spark, sf_dir):
         )
     )
     with conf_overrides(spark, BLOOM_TEST_CONFS):
-        result = joined.localCheckpoint(eager=True)
+        result = materialize(joined)
     return result.orderBy("l_returnflag")

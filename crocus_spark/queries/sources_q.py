@@ -11,6 +11,7 @@ queries are idempotent.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 
@@ -20,12 +21,24 @@ from pyspark.sql import types as T
 from crocus_spark.io import FIXTURE_SCHEMAS, load, spread
 from crocus_spark.queries import register
 from crocus_spark.queries._det import dsum
+from crocus_spark.session import intermediates, materialize
 
-SCRATCH = os.environ.get("CROCUS_SCRATCH_DIR", "/tmp/crocus_spark_io")
+# one directory per driver process (two processes running the same query
+# would rewrite each other's stores), removed at its exit; only driver-side
+# query code calls _scratch, so no worker creates or removes one
+_OWNER = os.getpid()
+SCRATCH = os.path.join(
+    os.environ.get("CROCUS_SCRATCH_DIR", "/tmp/crocus_spark_io"), f"driver-{_OWNER}"
+)
 
 
 def _scratch(name: str) -> str:
-    os.makedirs(SCRATCH, exist_ok=True)
+    if not os.path.isdir(SCRATCH):
+        os.makedirs(SCRATCH, exist_ok=True)
+        atexit.register(
+            lambda: os.getpid() == _OWNER  # not in a forked child
+            and shutil.rmtree(SCRATCH, ignore_errors=True)
+        )
     return os.path.join(SCRATCH, name)
 
 
@@ -655,24 +668,23 @@ def io_csv_permissive_quarantine(spark, sf_dir):
         "o_orderkey long, o_totalprice double, o_orderstatus string, "
         "_corrupt_record string"
     )
-    parsed = (
-        spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .csv(path)
-        .cache()
-    )
-    good = parsed.filter(F.col("_corrupt_record").isNull())
-    n_corrupt = parsed.filter(F.col("_corrupt_record").isNotNull()).count()
-    out = good.agg(
-        F.count(F.lit(1)).alias("n_good"),
-        F.lit(int(n_corrupt)).cast("int").alias("n_corrupt"),
-        F.sum(F.col("o_totalprice").cast("decimal(25,6)"))
-        .cast("double")
-        .alias("sum_price"),
-    ).localCheckpoint(eager=True)  # 1 row; lets the parse cache release
-    parsed.unpersist()
-    return out
+    with intermediates() as own:
+        parsed = own.persist(
+            spark.read.schema(schema)
+            .option("mode", "PERMISSIVE")
+            .option("columnNameOfCorruptRecord", "_corrupt_record")
+            .csv(path)
+        )
+        good = parsed.filter(F.col("_corrupt_record").isNull())
+        n_corrupt = parsed.filter(F.col("_corrupt_record").isNotNull()).count()
+        # 1 row; lets the scope drop the parse cache
+        return materialize(good.agg(
+            F.count(F.lit(1)).alias("n_good"),
+            F.lit(int(n_corrupt)).cast("int").alias("n_corrupt"),
+            F.sum(F.col("o_totalprice").cast("decimal(25,6)"))
+            .cast("double")
+            .alias("sum_price"),
+        ))
 
 
 @register(

@@ -163,14 +163,14 @@ def sql_cbo_join_reorder(spark, sf_dir):
     rows at 100 TB. Materialized eagerly under the CBO confs
     (restore-on-exit), which the oracle hash-match proves is
     semantics-neutral."""
-    from crocus_spark.session import conf_overrides
+    from crocus_spark.session import conf_overrides, materialize
 
     _cbo_tables(spark, sf_dir)
     sql = _CBO_JOIN_SQL.format(
         li="cbo_lineitem", o="cbo_orders", c="cbo_customer", n="cbo_nation"
     )
     with conf_overrides(spark, CBO_CONFS):
-        result = spark.sql(sql).localCheckpoint(eager=True)
+        result = materialize(spark.sql(sql))
     return result.orderBy("n_name")
 
 

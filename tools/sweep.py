@@ -14,8 +14,12 @@ list (each item may end in ``*`` for a prefix match) — targeted
 re-verification after editing a query. ``--help`` prints the usage
 and exits before any Spark session starts.
 
-Output JSON: {name: {"ok": bool|None, "secs": float, "err": str|None}},
-plus a "_summary" entry; prints the 15 slowest to stderr.
+Output JSON: {name: {"ok": bool|None, "secs": float, "cpu_s": float,
+"held_rdds": int|None, "err": str|None}}, plus a "_summary" entry;
+prints the 15 slowest to stderr. ``held_rdds`` counts the persistent
+RDDs the query added that are still held after its action, read while
+its result is still referenced (the rule tests/test_oracle.py checks
+at sf0.001).
 
 Per-query TIME budgets (r4 verdict task #5): tools/sweep_budgets.json
 pins 2.5x the per-query MEDIAN of several fresh uncontended full
@@ -227,19 +231,28 @@ def main(argv=None) -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
+    jsc = spark.sparkContext._jsc
+
+    def persistent_rdds() -> set[int]:
+        return set(jsc.getPersistentRDDs().keySet())
+
     results: dict[str, dict] = {}
     t_all = time.monotonic()
     for name in sorted(qs):
         t0 = time.monotonic()
         _reap_orphans()
         c0 = tree_cpu_seconds()
+        rdds0, held = persistent_rdds(), None
         try:
+            df = qs[name](spark, sf_dir)
             if name in osql:
-                ok, rep = compare_frames(qs[name](spark, sf_dir), con, osql[name])
+                ok, rep = compare_frames(df, con, osql[name])
                 err = None if ok else "; ".join(rep)
             else:
-                n = qs[name](spark, sf_dir).count()  # rows-only path
+                n = df.count()  # rows-only path
                 ok, err = None, None if n >= 0 else "negative count"
+            held = len(persistent_rdds() - rdds0)  # df still referenced
+            del df
         except Exception as ex:  # noqa: BLE001 — record and keep sweeping
             ok, err = False, f"{type(ex).__name__}: {ex}"[:500]
         secs = round(time.monotonic() - t0, 3)
@@ -257,16 +270,17 @@ def main(argv=None) -> int:
             # unaffected.
             results[name] = {
                 "ok": ok, "secs": secs, "cpu_s": None,
-                "cpu_invalid": True, "err": err,
+                "cpu_invalid": True, "held_rdds": held, "err": err,
             }
         else:
             results[name] = {
-                "ok": ok, "secs": secs, "cpu_s": cpu_s, "err": err,
+                "ok": ok, "secs": secs, "cpu_s": cpu_s,
+                "held_rdds": held, "err": err,
             }
         status = "PASS" if ok else ("rows" if ok is None and not err else "FAIL")
         cpu_str = f"{cpu_s:7.2f}s" if cpu_s >= 0 else "  n/a (pool churn)"
         print(
-            f"{status:4s} {secs:7.2f}s cpu={cpu_str} {name}"
+            f"{status:4s} {secs:7.2f}s cpu={cpu_str} held={held} {name}"
             + (f"  {err}" if err else ""),
             flush=True,
         )
@@ -292,6 +306,7 @@ def main(argv=None) -> int:
         "cpu_invalid": sorted(
             k for k, v in results.items() if v.get("cpu_invalid")
         ),
+        "held_rdds": sum(v["held_rdds"] or 0 for v in results.values()),
     }
     with open(out_path, "w") as f:
         json.dump(results, f, indent=1, sort_keys=True)
