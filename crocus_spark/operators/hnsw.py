@@ -308,6 +308,42 @@ def _shard_col(id_col: str, n_shards: int):
     )
 
 
+def _murmur3_int(v: int, seed: int = 42) -> int:
+    """Spark's ``Murmur3_x86_32.hashInt`` — the hash ``repartition(n,
+    col)`` takes of an int column, before ``pmod`` by the width."""
+    m = 0xFFFFFFFF
+
+    def rotl(x, r):
+        return ((x << r) | (x >> (32 - r))) & m
+
+    k = rotl((v * 0xCC9E2D51) & m, 15) * 0x1B873593 & m
+    h = (rotl(seed ^ k, 13) * 5 + 0xE6546B64) & m
+    h ^= 4
+    h = ((h ^ (h >> 16)) * 0x85EBCA6B) & m
+    h = ((h ^ (h >> 13)) * 0xC2B2AE35) & m
+    h ^= h >> 16
+    return h - (1 << 32) if h & 0x80000000 else h
+
+
+def _by_shard(df, width: int):
+    """``df`` (with an int ``shard`` < ``width``) grouped so that each
+    shard gets a task of its own. ``repartition(width, "shard")`` hashes
+    the shard id, and ids collide (at width 4, shards 0, 1 and 3 share
+    partition 3); so each shard is keyed instead by the smallest int
+    whose Spark hash lands in partition ``shard``, found driver-side with
+    no job. The explicit width keeps AQE from coalescing the shards, and
+    grouping by that same key adds no second exchange."""
+    slots: list[int | None] = [None] * width
+    v = 0
+    while None in slots:
+        p = _murmur3_int(v) % width
+        if slots[p] is None:
+            slots[p] = v
+        v += 1
+    key = F.element_at(F.array(*map(F.lit, slots)), F.col("shard") + 1)
+    return df.withColumn("_slot", key).repartition(width, "_slot").groupBy("_slot")
+
+
 def hnsw_topk(
     queries,
     corpus,
@@ -423,10 +459,8 @@ def _build_shard_graphs(
     ``sharded`` (columns id, vec, shard) — ONE grouped-map task per
     shard, sorted-id row order so the graph is a pure function of shard
     content. Shards absent from the input keep their existing files
-    byte-for-byte (the property incremental maintenance relies on). The
-    explicit-width exchange keeps AQE from coalescing the shards into
-    one serial task; shards whose ids hash to the same partition still
-    share one. Returns the bounded per-shard build stats."""
+    byte-for-byte (the property incremental maintenance relies on).
+    Returns the bounded per-shard build stats."""
     os.makedirs(gdir, exist_ok=True)
 
     def build(t):
@@ -441,8 +475,7 @@ def _build_shard_graphs(
         return pa.table({"shard": pa.array([shard], pa.int32()), "n": [len(ids)]})
 
     return (
-        sharded.repartition(n_shards, "shard")
-        .groupBy("shard")
+        _by_shard(sharded, n_shards)
         .applyInArrow(build, "shard int, n long")
         .collect()  # ≤ n_shards rows — bounded
     )
@@ -478,10 +511,14 @@ def _serve_shards(spark, queries, path: str, k: int, ef: int,
             allowed = t["_match"].fill_null(False).to_numpy()
         return _search_shard(graph, mat, q_ids, q_mat, k, ef, allowed)
 
-    # explicit width (one per graph), as in _build_shard_graphs
-    n_shards = max(1, sum(f.startswith("shard-") for f in os.listdir(gdir)))
-    served = back.repartition(n_shards, "shard").groupBy("shard")
-    return _merge_topk(served.applyInArrow(serve, HNSW_SCHEMA), k)
+    # width from the highest shard id, not the graph count: a shard
+    # deleted down to zero rows leaves a gap in the ids
+    width = 1 + max(
+        (int(f[6:-5]) for f in os.listdir(gdir) if f.startswith("shard-")),
+        default=0,
+    )
+    served = _by_shard(back, width).applyInArrow(serve, HNSW_SCHEMA)
+    return _merge_topk(served, k)
 
 
 def hnsw_topk_at_rest(

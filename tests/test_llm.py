@@ -650,6 +650,28 @@ def test_hnsw_upsert_empties_a_shard_cleanly(emb, tmp_path):
     ).count() == 0
 
 
+@pytest.mark.parametrize("n_shards", [2, 4, 8])
+def test_hnsw_each_shard_gets_its_own_task(spark, n_shards):
+    """The HNSW build and serve group by shard through ``_by_shard``:
+    every shard must land in a partition of its own (hashing the shard
+    id itself put shards 0, 1 and 3 in one task at width 4), with one
+    exchange and no sampling job."""
+    from crocus_spark.operators.hnsw import _by_shard
+
+    frame = spark.range(10 * n_shards).select(
+        (F.col("id") % n_shards).cast("int").alias("shard")
+    )
+    grouped = _by_shard(frame, n_shards)
+    placed = grouped.applyInArrow(
+        lambda t: t.select(["shard"]).slice(0, 1),
+        "shard int",
+    ).select("shard", F.spark_partition_id().alias("part"))
+    plan = placed._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    got = {(r.shard, r.part) for r in placed.collect()}
+    assert sorted(got) == [(s, s) for s in range(n_shards)], got
+
+
 @pytest.mark.slow  # 3-policy rewrite/restart matrix, ~25 s of index syncs
 def test_tail_sync_on_rewrite_policies(emb, tmp_path):
     """A compaction on the source table breaks an index sync
